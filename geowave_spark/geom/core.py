@@ -95,51 +95,6 @@ def point_in_polygon(px: np.ndarray, py: np.ndarray, poly) -> np.ndarray:
     return inside
 
 
-def bboxes_within_polygon(lon0, lat0, lon1, lat1, poly,
-                          margin: float = 1e-9) -> np.ndarray:
-    """Which of N bboxes (cells) lie FULLY inside one polygon.
-
-    Used to classify cover cells: points in a fully-interior cell need no
-    exact refine (GeoWave's XZ-order makes the same interior/boundary
-    distinction for extended objects).  Conservative by ``margin``: the
-    bbox is inflated before the edge tests, so any polygon edge passing
-    within ``margin`` of the cell demotes it to "partial" — float rounding
-    in the exact ray-cast (~1e-14 abs) can then never disagree with the
-    classification.
-    """
-    lon0 = np.asarray(lon0, dtype=np.float64) - margin
-    lat0 = np.asarray(lat0, dtype=np.float64) - margin
-    lon1 = np.asarray(lon1, dtype=np.float64) + margin
-    lat1 = np.asarray(lat1, dtype=np.float64) + margin
-    eax, eay, ebx, eby = rings_edges(poly)
-
-    # all 4 inflated corners strictly inside (even-odd across rings)
-    full = np.ones(lon0.shape, dtype=bool)
-    for cx, cy in ((lon0, lat0), (lon0, lat1), (lon1, lat0), (lon1, lat1)):
-        full &= point_in_rings(cx, cy, poly)
-    # no ring vertex inside the inflated bbox
-    for k in range(len(eax)):
-        full &= ~((eax[k] >= lon0) & (eax[k] <= lon1)
-                  & (eay[k] >= lat0) & (eay[k] <= lat1))
-    # no ring edge crossing any inflated bbox edge
-    for k in range(len(eax)):
-        ex0, ey0, ex1, ey1 = ebx[k], eby[k], eax[k], eay[k]
-        if not full.any():
-            break
-        for bx0, by0, bx1, by1 in (
-            (lon0, lat0, lon1, lat0),
-            (lon1, lat0, lon1, lat1),
-            (lon1, lat1, lon0, lat1),
-            (lon0, lat1, lon0, lat0),
-        ):
-            full &= ~_segments_intersect(
-                np.full(lon0.shape, ex0), np.full(lon0.shape, ey0),
-                np.full(lon0.shape, ex1), np.full(lon0.shape, ey1),
-                bx0, by0, bx1, by1,
-            )
-    return full
-
-
 def pack_polygons(polys: dict[int, np.ndarray]):
     """Pack a geometry dict into padded EDGE matrices for the batch kernel.
 
@@ -173,22 +128,22 @@ def point_in_polygons(px, py, poly_rows, ax_pad, ay_pad, bx_pad, by_pad) -> np.n
 
     Bit-identical to `point_in_rings` (same per-edge formula; XOR is
     order-independent) but vectorized across a batch of MIXED geometries —
-    no per-geometry sub-slicing, which costs ~100us/group in pandas and
-    dominates when Arrow batches contain many small groups (the
-    spatial-join refine).  Degenerate padding edges contribute false.
+    no per-geometry sub-slicing.  Degenerate padding edges contribute
+    false.  The crossing abscissa is computed only for the points whose
+    horizontal line the edge straddles, so it never divides by zero.
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
+    poly_rows = np.asarray(poly_rows)
     inside = np.zeros(px.shape, dtype=bool)
     for k in range(ax_pad.shape[1]):
-        xi = ax_pad[poly_rows, k]
-        yi = ay_pad[poly_rows, k]
-        xj = bx_pad[poly_rows, k]
-        yj = by_pad[poly_rows, k]
-        cond = (yi > py) != (yj > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (xj - xi) * (py - yi) / (yj - yi) + xi
-        inside ^= cond & (px < xint)
+        yi = ay_pad[:, k].take(poly_rows)
+        yj = by_pad[:, k].take(poly_rows)
+        c = np.flatnonzero((yi > py) != (yj > py))
+        r, y, yi, yj = poly_rows[c], py[c], yi[c], yj[c]
+        xi = ax_pad[:, k].take(r)
+        xint = (bx_pad[:, k].take(r) - xi) * (y - yi) / (yj - yi) + xi
+        inside[c] ^= px[c] < xint
     return inside
 
 
@@ -221,42 +176,93 @@ def _segments_intersect(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1) -> np.ndarray:
     return general | col
 
 
-def bboxes_intersect_polygon(lon0, lat0, lon1, lat1, poly) -> np.ndarray:
-    """Which of N bboxes (cells) intersect one polygon — the cover-trim step
-    (reference: `RDDUtils.java:158-183` trims insertion ids to cells actually
-    intersecting the geometry).
+# The (box x edge) overlap matrix is built at most this many elements at a
+# time, so one polygon with thousands of edges cannot blow up memory.
+_PAIR_CHUNK = 1 << 20
+# `within` inflates each box by this much (degrees) before testing it
+_WITHIN_MARGIN = 1e-9
 
-    True iff: any bbox corner inside poly, OR any poly vertex inside bbox,
-    OR any poly edge crosses any bbox edge.
+
+def _box_edge_hits(x0, y0, x1, y1, rows, ax, ay, bx, by) -> np.ndarray:
+    """Which boxes hold a vertex of, or are crossed by an edge of, geometry
+    ``rows[i]`` (padded edge matrices, `pack_polygons` layout).
+
+    Only (box, edge) pairs whose bounding boxes overlap are tested: a vertex
+    inside the closed box, or any point common to an edge and a box side,
+    lies in both bounding boxes.  Padding edges are single points at a real
+    vertex, so they add nothing the vertex test does not already find.
     """
-    lon0 = np.asarray(lon0, dtype=np.float64)
-    lat0 = np.asarray(lat0, dtype=np.float64)
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    eax, eay, ebx, eby = rings_edges(poly)
-
-    hit = np.zeros(lon0.shape, dtype=bool)
-    # ring vertex inside bbox... only counts when that vertex region is
-    # interior-adjacent; for even-odd geometries a vertex on ANY ring is a
-    # boundary point, and boundary intersects the closed cell
-    for k in range(len(eax)):
-        hit |= (eax[k] >= lon0) & (eax[k] <= lon1) & (eay[k] >= lat0) & (eay[k] <= lat1)
-    # bbox corner inside the geometry (even-odd across rings)
-    for cx, cy in ((lon0, lat0), (lon0, lat1), (lon1, lat0), (lon1, lat1)):
-        hit |= point_in_rings(cx, cy, poly)
-    # edge crossings: each ring edge vs each of the 4 bbox edges
-    for k in range(len(eax)):
-        ex0, ey0, ex1, ey1 = ebx[k], eby[k], eax[k], eay[k]
-        if hit.all():
-            break
-        for bx0, by0, bx1, by1 in (
-            (lon0, lat0, lon1, lat0),
-            (lon1, lat0, lon1, lat1),
-            (lon1, lat1, lon0, lat1),
-            (lon0, lat1, lon0, lat0),
-        ):
-            hit |= _segments_intersect(ex0, ey0, ex1, ey1, bx0, by0, bx1, by1)
+    hit = np.zeros(len(x0), dtype=bool)
+    exlo, exhi = np.minimum(ax, bx), np.maximum(ax, bx)
+    eylo, eyhi = np.minimum(ay, by), np.maximum(ay, by)
+    step = max(1, _PAIR_CHUNK // ax.shape[1])
+    for s in range(0, len(x0), step):
+        r = rows[s:s + step]
+        c0, d0 = x0[s:s + step, None], y0[s:s + step, None]
+        c1, d1 = x1[s:s + step, None], y1[s:s + step, None]
+        i, k = np.nonzero((exlo[r] <= c1) & (exhi[r] >= c0)
+                          & (eylo[r] <= d1) & (eyhi[r] >= d0))
+        pr = r[i]
+        hx, hy, tx, ty = ax[pr, k], ay[pr, k], bx[pr, k], by[pr, k]
+        c0, d0, c1, d1 = c0[i, 0], d0[i, 0], c1[i, 0], d1[i, 0]
+        h = (hx >= c0) & (hx <= c1) & (hy >= d0) & (hy <= d1)
+        for sx0, sy0, sx1, sy1 in ((c0, d0, c1, d0), (c1, d0, c1, d1),
+                                   (c1, d1, c0, d1), (c0, d1, c0, d0)):
+            h |= _segments_intersect(tx, ty, hx, hy, sx0, sy0, sx1, sy1)
+        hit[s + i[h]] = True
     return hit
+
+
+def classify_bboxes(lon0, lat0, lon1, lat1, rows, ax_pad, ay_pad, bx_pad,
+                    by_pad, within: bool = False) -> np.ndarray:
+    """Box i against geometry ``rows[i]`` (`pack_polygons` matrices), for
+    boxes of MIXED geometries in one batch — the polygon-cover classifier.
+
+    ``within=False``: does the box intersect the geometry — any box corner
+    inside (even-odd), any vertex inside the box, or any edge crossing a
+    box side (reference: `RDDUtils.java:158-183` trims insertion ids to
+    cells actually intersecting the geometry).
+
+    ``within=True``: does the box lie FULLY inside — all corners inside, no
+    vertex inside and no edge crossing, all on the box inflated by
+    ``_WITHIN_MARGIN``, so any edge passing that close demotes the box to
+    "partial" and float rounding in the exact ray cast (~1e-14 abs) can
+    never disagree with it.  Points in a fully-interior cell need no exact
+    refine (GeoWave's XZ-order makes the same interior/boundary split).
+
+    The corners decide most boxes; the vertex and crossing tests run only
+    on the boxes they leave open.
+    """
+    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64)
+                      for v in (lon0, lat0, lon1, lat1))
+    if within:
+        m = _WITHIN_MARGIN
+        x0, y0, x1, y1 = x0 - m, y0 - m, x1 + m, y1 + m
+    rows = np.asarray(rows, dtype=np.int64)
+    n = len(x0)
+    corners = point_in_polygons(
+        np.concatenate((x0, x0, x1, x1)), np.concatenate((y0, y1, y0, y1)),
+        np.tile(rows, 4), ax_pad, ay_pad, bx_pad, by_pad).reshape(4, n)
+    out = corners.all(axis=0) if within else corners.any(axis=0)
+    open_ = np.flatnonzero(out if within else ~out)
+    hits = _box_edge_hits(x0[open_], y0[open_], x1[open_], y1[open_],
+                          rows[open_], ax_pad, ay_pad, bx_pad, by_pad)
+    out[open_] = ~hits if within else hits
+    return out
+
+
+def bboxes_intersect_polygon(lon0, lat0, lon1, lat1, poly) -> np.ndarray:
+    """Which of N bboxes (cells) intersect one geometry
+    (`classify_bboxes` for a single geometry)."""
+    return classify_bboxes(lon0, lat0, lon1, lat1, np.zeros(len(lon0), np.int64),
+                           *pack_polygons({0: poly})[1:])
+
+
+def bboxes_within_polygon(lon0, lat0, lon1, lat1, poly) -> np.ndarray:
+    """Which of N bboxes (cells) lie FULLY inside one geometry
+    (`classify_bboxes` for a single geometry)."""
+    return classify_bboxes(lon0, lat0, lon1, lat1, np.zeros(len(lon0), np.int64),
+                           *pack_polygons({0: poly})[1:], within=True)
 
 
 def planar_distance(ax, ay, bx, by) -> np.ndarray:

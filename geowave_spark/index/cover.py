@@ -181,24 +181,34 @@ def polygon_cover(polys: dict[int, np.ndarray], res: int | None = None,
     exact refine (interior/boundary split, the XZ-order idea) — at scale
     this keeps the interior fraction of the join entirely JVM-side.
     """
-    ids, ress, cells_out, fulls = [], [], [], []
-    for pid, poly in polys.items():
-        bb = geom.poly_bbox(poly)
-        r = int(grid.adaptive_res([bb[0]], [bb[1]], [bb[2]], [bb[3]], max_cells)[0]) if res is None else res
-        _, cells = grid.cover_bbox([bb[0]], [bb[1]], [bb[2]], [bb[3]], r, curve)
-        lo0, la0, lo1, la1 = grid.cell_bounds(cells, r, curve)
-        keep = geom.bboxes_intersect_polygon(lo0, la0, lo1, la1, poly)
-        kept = cells[keep].astype(np.int64)
-        ids.extend([pid] * len(kept))
-        ress.extend([r] * len(kept))
-        cells_out.extend(kept.tolist())
-        fulls.extend(
-            geom.bboxes_within_polygon(
-                lo0[keep], la0[keep], lo1[keep], la1[keep], poly
-            ).tolist()
-        )
+    pids = np.array(list(polys), dtype=np.int64)
+    if not len(pids):
+        return pd.DataFrame({"poly_id": pids, "res": pids, "cell": pids,
+                             "full": np.zeros(0, dtype=bool)})
+    bx0, by0, bx1, by1 = np.array([geom.poly_bbox(p) for p in polys.values()]).T
+    tier = (grid.adaptive_res(bx0, by0, bx1, by1, max_cells) if res is None
+            else np.full(len(pids), res, dtype=np.int64))
+    # bbox cells of every polygon, one cover_bbox call per tier
+    parts = []
+    for r in np.unique(tier):
+        sel = np.flatnonzero(tier == r)
+        row, cells = grid.cover_bbox(bx0[sel], by0[sel], bx1[sel], by1[sel],
+                                     int(r), curve)
+        parts.append((sel[row], np.full(len(row), r), cells,
+                      *grid.cell_bounds(cells, int(r), curve)))
+    pos, ress, cells, lo0, la0, lo1, la1 = (np.concatenate(c) for c in zip(*parts))
+    # polygons in dict order, each polygon's cells in cover_bbox order
+    order = np.argsort(pos, kind="stable")
+    pos, ress, cells, lo0, la0, lo1, la1 = (
+        a[order] for a in (pos, ress, cells, lo0, la0, lo1, la1))
+    ids_sorted, *edges = geom.pack_polygons(polys)
+    rows = np.searchsorted(ids_sorted, pids[pos])
+    keep = geom.classify_bboxes(lo0, la0, lo1, la1, rows, *edges)
+    full = geom.classify_bboxes(lo0[keep], la0[keep], lo1[keep], la1[keep],
+                                rows[keep], *edges, within=True)
     return pd.DataFrame({
-        "poly_id": ids, "res": ress, "cell": cells_out, "full": fulls
+        "poly_id": pids[pos[keep]], "res": ress[keep],
+        "cell": cells[keep].astype(np.int64), "full": full,
     })
 
 

@@ -109,7 +109,6 @@ def point_in_polygon_join(
     data_res: int = 12,
     max_cells: int = 256,
     negative: bool = False,
-    refine: str = "jvm",
     single_tier_cells: int = 262_144,
 ) -> DataFrame:
     """Join point rows against a broadcastable polygon set.
@@ -122,18 +121,11 @@ def point_in_polygon_join(
     the exact geometry); points are encoded once at ``data_res`` and
     re-projected to each coarser active tier by a parent-cell UDF.
 
-    ``refine`` picks the exact-PIP engine for boundary-cell candidates:
-    "jvm" (default) evaluates the ray-cast as a flat whole-stage-codegen
-    XOR chain (`raycast_flat_sql`) inside the second broadcast join's
-    condition — single pass over the point side, ZERO Python stages;
-    "arrow" uses the vectorized pandas-UDF batch kernel, which cannot be
-    lazily branch-skipped, so interior and boundary candidates split into
-    two union branches that each re-scan the point side.  Both are
-    bit-identical to `geom.point_in_polygon` (same per-edge formula and
-    evaluation order, IEEE doubles) — parity is asserted in tests.
-    Measured on the 960M-pt single-tier workload (pinned cores, 130M
-    output pairs): jvm 6.0s@8c / 20.3s@2c (N->4N efficiency 0.84), arrow
-    7.5s@8c / 25.8s@2c (0.86).
+    Boundary-cell candidates are refined by the exact ray cast, evaluated
+    as a flat whole-stage-codegen XOR chain (`raycast_edges_sql`) inside
+    the second broadcast join's condition — single pass over the point
+    side, ZERO Python stages, bit-identical to `geom.point_in_rings` (same
+    per-edge formula, IEEE doubles).
 
     ``single_tier_cells``: when re-covering EVERY polygon at the finest
     active tier keeps the total broadcast cover under this budget, the
@@ -173,41 +165,15 @@ def point_in_polygon_join(
             cover_pdf = cov.polygon_cover(polys, res=r_join, curve="rowmajor")
 
     # closed-form row-major encode: the big point side never enters Python
-    # (Arrow UDFs remain only where geometry genuinely needs them — the
-    # exact PIP refine below)
     pts_c = cov.add_point_cells_jvm(pts, lon, lat, data_res)
 
-    if refine == "arrow":
-        # scalar pandas UDF refine over the padded-EDGE-matrix batch
-        # kernel: only (lon, lat, poly_id) cross the Arrow boundary and a
-        # single boolean comes back — the pid column never leaves the JVM.
-        # (A mapInPandas refine ships the full row both ways; measured
-        # 11.8s vs 9.8s on the 240M-point workload at 8 cores, and the
-        # serde is the stage's bottleneck, not the kernel.)
-        packed = spark.sparkContext.broadcast(geom.pack_polygons(polys))
-
-        @F.pandas_udf("boolean")
-        def pip_ok(plon: pd.Series, plat: pd.Series, ppoly: pd.Series) -> pd.Series:
-            ids_sorted, eax, eay, ebx, eby = packed.value
-            rows = np.searchsorted(ids_sorted, ppoly.to_numpy())
-            return pd.Series(geom.point_in_polygons(
-                plon.to_numpy(), plat.to_numpy(), rows, eax, eay, ebx, eby))
-
-        refine_pred = pip_ok(F.col(lon), F.col(lat), F.col("poly_id"))
-        edge_cols: list[str] = []
-        max_ne = 0
-    else:
-        # JVM ray-cast: per-geometry EDGE arrays ride the broadcast cover;
-        # the exact even-odd PIP is a flat codegen'd XOR chain over all
-        # ring edges (holes/MultiPolygon included) — no Python process
-        # anywhere in the join, and `full OR raycast` short-circuits per
-        # row, so the whole match is ONE filter in ONE pass (the arrow
-        # path must union a full branch and a refine branch, re-scanning
-        # the point side twice)
-        max_ne = max(len(geom.rings_edges(v)[0]) for v in polys.values())
-        refine_pred = F.expr(raycast_edges_sql(lon, lat, max_ne))
-        edge_cols = [f"e{a}{i}" for i in range(max_ne)
-                     for a in ("ax", "ay", "bx", "by")]
+    # JVM ray-cast: per-geometry EDGE arrays ride the broadcast cover;
+    # the exact even-odd PIP is a flat codegen'd XOR chain over all ring
+    # edges (holes/MultiPolygon included) — no Python process anywhere in
+    # the join, and `full OR raycast` short-circuits per row, so the whole
+    # match is ONE filter in ONE pass
+    max_ne = max(len(geom.rings_edges(v)[0]) for v in polys.values())
+    refine_pred = F.expr(raycast_edges_sql(lon, lat, max_ne))
 
     # per-poly bbox + edges live on a ONE-ROW-PER-POLYGON relation, not
     # on the (much larger) per-cell cover: the cover broadcast stays tiny
@@ -220,15 +186,14 @@ def point_in_polygon_join(
     poly_pdf[["bx0", "by0", "bx1", "by1"]] = pd.DataFrame(
         [bbox[p] for p in poly_ids]
     )
-    if edge_cols:
-        # primitive edge columns, padded with zero-length edges
-        # (see raycast_edges_sql); pack_polygons sorts ids identically
-        _ids, eax, eay, ebx, eby = geom.pack_polygons(polys)
-        for i in range(max_ne):
-            poly_pdf[f"eax{i}"] = eax[:, i]
-            poly_pdf[f"eay{i}"] = eay[:, i]
-            poly_pdf[f"ebx{i}"] = ebx[:, i]
-            poly_pdf[f"eby{i}"] = eby[:, i]
+    # primitive edge columns, padded with zero-length edges
+    # (see raycast_edges_sql); pack_polygons sorts ids identically
+    _ids, eax, eay, ebx, eby = geom.pack_polygons(polys)
+    for i in range(max_ne):
+        poly_pdf[f"eax{i}"] = eax[:, i]
+        poly_pdf[f"eay{i}"] = eay[:, i]
+        poly_pdf[f"ebx{i}"] = ebx[:, i]
+        poly_pdf[f"eby{i}"] = eby[:, i]
     poly_df = spark.createDataFrame(poly_pdf)
 
     matched_parts = []
@@ -256,31 +221,17 @@ def point_in_polygon_join(
             & (cand[lon] >= poly_df["bx0"]) & (cand[lon] <= poly_df["bx1"])
             & (cand[lat] >= poly_df["by0"]) & (cand[lat] <= poly_df["by1"])
         )
-        if refine == "arrow":
-            # Python can't be evaluated lazily inside an OR, so the arrow
-            # path splits candidates into two branches (each re-scans the
-            # point side — the price of keeping the interior Python-free)
-            screened = cand.join(F.broadcast(poly_df), on=base_cond).select(
-                pid_col, lon, lat, "poly_id", "full"
-            )
-            full_hits = screened.filter(F.col("full")).select(pid_col, "poly_id")
-            partial = screened.filter(~F.col("full")).filter(
-                refine_pred
+        # single pass, both joins fused in one codegen stage: the refine
+        # sits LAST in join2's condition, inside a CASE WHEN whose
+        # branches codegen lazily — interior candidates never evaluate
+        # the raycast, and no vertex column materializes into output rows
+        matched_parts.append(
+            cand.join(
+                F.broadcast(poly_df),
+                on=base_cond
+                & F.when(cand["full"], F.lit(True)).otherwise(refine_pred),
             ).select(pid_col, "poly_id")
-            matched_parts.extend([full_hits, partial])
-        else:
-            # single pass, both joins fused in one codegen stage: the refine
-            # sits LAST in join2's condition, inside a CASE WHEN whose
-            # branches codegen lazily — interior candidates never evaluate
-            # the raycast, and no vertex column materializes into output
-            # rows
-            matched_parts.append(
-                cand.join(
-                    F.broadcast(poly_df),
-                    on=base_cond
-                    & F.when(cand["full"], F.lit(True)).otherwise(refine_pred),
-                ).select(pid_col, "poly_id")
-            )
+        )
 
     matched = matched_parts[0]
     for part in matched_parts[1:]:

@@ -3155,7 +3155,10 @@ def _q164_sql() -> str:
     1500 users meant ~94 users/cell and 314M candidate rows (145 s,
     the single heaviest registry query), and sf1's 15000 users would
     have been ~31B rows — quadratic in users.  At <= 128 users (the
-    sf0.001 gate) n = 4, byte-identical blocking to the original."""
+    sf0.001 gate) n = 4, the original grid size; blocks match the
+    original ones except for coordinates exactly on a cell boundary or
+    at lat = 90, because this formula is an unclamped floor(c*n) and
+    the original was the clamped ceil(c*n)-1."""
     lon = f"cast(floor(({geo.lon_sql('event_id')}) * 1000000) as bigint)"
     lat = f"cast(floor(({geo.lat_sql('event_id')}) * 1000000) as bigint)"
     n = "(SELECT n FROM params)"

@@ -1242,8 +1242,10 @@ FROM agg ORDER BY event_type
 # division scale/rounding rules differ — at rho == 1 exactly (s2 = 0)
 # Spark printed 1000000 and DuckDB 999999.  Double ops on identical
 # text round identically everywhere.  The n(n^2-1) core stays exact
-# int64, which holds to ~2.09e6 rows per event_type (the sf10 fixture's
-# 2.0e6/type just fits); past that the whole statistic needs the double
+# int64 to ~2.09e6 rows per event_type, but 6*s2 = n(n^2-1)(1 - rho)
+# reaches 2n(n^2-1) at rho = -1 (fully anti-correlated ranks), which
+# overflows from ~1.66e6 rows.  The sf10 fixture's 2.0e6/type fits only
+# while rho > ~-0.15; past that the whole statistic needs the double
 # form — documented ceiling, not a silent wrap (ANSI raises).
 
 

@@ -3015,10 +3015,12 @@ def q308_modis_tile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"cast(floor({_dlit(r)} * radians(lat)) as bigint)").alias("ym"),
         "user_id", "val_milli")
     tiles_df = m.select(
-        F.expr(f"least(cast(floor((cast(xm as double) - {_dlit(x0)}) "
-               f"/ {_dlit(t)}) as bigint), cast(35 as bigint))").alias("h"),
-        F.expr(f"least(cast(floor(({_dlit(y1)} - cast(ym as double)) "
-               f"/ {_dlit(t)}) as bigint), cast(17 as bigint))").alias("v"),
+        F.expr(f"greatest(least(cast(floor((cast(xm as double) - {_dlit(x0)}) "
+               f"/ {_dlit(t)}) as bigint), cast(35 as bigint)), "
+               "cast(0 as bigint))").alias("h"),
+        F.expr(f"greatest(least(cast(floor(({_dlit(y1)} - cast(ym as double)) "
+               f"/ {_dlit(t)}) as bigint), cast(17 as bigint)), "
+               "cast(0 as bigint))").alias("v"),
         "user_id", "val_milli")
     return (
         tiles_df.groupBy("h", "v")
@@ -3041,8 +3043,8 @@ m AS (SELECT user_id, val_milli,
   cast(floor({_dlit(r)} * radians(lon) * cos(radians(lat))) as bigint) AS xm,
   cast(floor({_dlit(r)} * radians(lat)) as bigint) AS ym FROM p0),
 t AS (SELECT user_id, val_milli,
-  least(cast(floor((xm - {_dlit(x0)}) / {_dlit(t)}) as bigint), 35) AS h,
-  least(cast(floor(({_dlit(y1)} - ym) / {_dlit(t)}) as bigint), 17) AS v
+  greatest(least(cast(floor((xm - {_dlit(x0)}) / {_dlit(t)}) as bigint), 35), 0) AS h,
+  greatest(least(cast(floor(({_dlit(y1)} - ym) / {_dlit(t)}) as bigint), 17), 0) AS v
   FROM m)
 SELECT h, v, cast(count(*) as bigint) AS n_events,
        cast(count(DISTINCT user_id) as bigint) AS n_users,

@@ -2,6 +2,8 @@
 `core/geotime/src/test/.../store/query/SpatialQueryTest.java:27-80`)."""
 
 import numpy as np
+import pandas as pd
+import pytest
 
 from geowave_spark.geom import core as g
 
@@ -166,3 +168,123 @@ class TestMultiRingGeometries:
             rows = np.zeros(len(px), dtype=np.int64)
             batch = g.point_in_polygons(px, py, rows, eax, eay, ebx, eby)
             assert (batch == g.point_in_rings(px, py, gm)).all()
+
+
+def _brute_cover(polys, res, max_cells, curve):
+    """Reference cover: per polygon, every bbox cell against every edge
+    in a dense (cell x edge) matrix, with no pruning."""
+    from geowave_spark.sfc import grid
+
+    def classify(x0, y0, x1, y1, poly):
+        corners = [g.point_in_rings(cx, cy, poly)
+                   for cx, cy in ((x0, y0), (x0, y1), (x1, y0), (x1, y1))]
+        ax, ay, bx, by = (e[None, :] for e in g.rings_edges(poly))
+        x0, y0, x1, y1 = (v[:, None] for v in (x0, y0, x1, y1))
+        touch = (ax >= x0) & (ax <= x1) & (ay >= y0) & (ay <= y1)
+        for side in ((x0, y0, x1, y0), (x1, y0, x1, y1),
+                     (x1, y1, x0, y1), (x0, y1, x0, y0)):
+            touch |= g._segments_intersect(bx, by, ax, ay, *side)
+        return (np.any(corners, axis=0), np.all(corners, axis=0),
+                touch.any(axis=1))
+
+    cols = {"poly_id": [], "res": [], "cell": [], "full": []}
+    for pid, poly in polys.items():
+        bb = [[v] for v in g.poly_bbox(poly)]
+        r = int(grid.adaptive_res(*bb, max_cells)[0]) if res is None else res
+        _, cells = grid.cover_bbox(*bb, r, curve)
+        x0, y0, x1, y1 = grid.cell_bounds(cells, r, curve)
+        some, _, touch = classify(x0, y0, x1, y1, poly)
+        keep = some | touch
+        m = 1e-9
+        _, every, touch = classify(x0[keep] - m, y0[keep] - m,
+                                   x1[keep] + m, y1[keep] + m, poly)
+        cols["poly_id"].append(np.full(keep.sum(), pid, dtype=np.int64))
+        cols["res"].append(np.full(keep.sum(), r, dtype=np.int64))
+        cols["cell"].append(cells[keep].astype(np.int64))
+        cols["full"].append(every & ~touch)
+    return pd.DataFrame({k: np.concatenate(v) for k, v in cols.items()})
+
+
+def _flagship_subset(n=8):
+    rng = np.random.default_rng(1)
+    lon, lat = rng.uniform(-175.0, 175.0, 100), rng.uniform(-70.0, 70.0, 100)
+    rad = rng.permutation(np.linspace(0.75, 4.0, 100))
+    return {i: g.regular_polygon(lon[i], lat[i], rad[i], 12) for i in range(n)}
+
+
+def _grid_aligned(r=8):
+    """Squares and triangles whose vertices sit exactly on res-``r`` cell
+    corners (the `grid.cell_bounds` formula)."""
+    w, h = 360.0 / (1 << r), 180.0 / (1 << r)
+
+    def corner(i, j):
+        return -180.0 + i * w, -90.0 + j * h
+
+    out = {}
+    for k, (i, j, a, b) in enumerate([(3, 200, 4, 3), (130, 100, 1, 1),
+                                      (255, 10, 1, 4), (40, 128, 5, 2)]):
+        (x0, y0), (x1, y1) = corner(i - 1, j - 1), corner(i - 1 + a, j - 1 + b)
+        out[2 * k] = np.array([x0, y0, x1, y0, x1, y1, x0, y1])
+        out[2 * k + 1] = np.array([x0, y0, x1, y0, x0, y1])
+    return out
+
+
+def _cell_edge_cases(r=8):
+    """Shapes only one test of the classifier decides, at res ``r``: a
+    diamond whose left and bottom vertices sit on cell lines (the
+    closed-box vertex test), a triangle inside one cell and a hole inside
+    one cell (the vertex test alone), and a square whose sides lie 5e-10
+    outside cell lines (the ``full`` margin)."""
+    w, h = 360.0 / (1 << r), 180.0 / (1 << r)
+
+    def x(i):
+        return -180.0 + i * w
+
+    def y(j):
+        return -90.0 + j * h
+
+    tri = np.array([0.3, 0.3, 0.6, 0.4, 0.4, 0.7])
+    eps = 5e-10
+    return {
+        0: np.array([x(100), y(100) + h / 2, x(102) + w / 2, y(97),
+                     x(104), y(100) + h / 2, x(102) + w / 2, y(104)]),
+        1: tri * np.tile([w, h], 3) + np.tile([x(50), y(50)], 3),
+        2: [np.array([x(20), y(20), x(26), y(20), x(26), y(26), x(20), y(26)]),
+            tri * np.tile([w, h], 3) + np.tile([x(22), y(22)], 3)],
+        3: np.array([x(10) - eps, y(10) - eps, x(14) + eps, y(10) - eps,
+                     x(14) + eps, y(14) + eps, x(10) - eps, y(14) + eps]),
+    }
+
+
+_COVER_CASES = {
+    "cell-edge-cases-res8": (_cell_edge_cases(), 8, 256),
+    "flagship-res10": (_flagship_subset(), 10, 1024),
+    "flagship-adaptive": (_flagship_subset(), None, 1024),
+    "holed-multi": ({5: TestMultiRingGeometries.HOLED,
+                     9: TestMultiRingGeometries.MULTI}, None, 256),
+    "grid-aligned-res8": (_grid_aligned(), 8, 256),
+    "grid-aligned-adaptive": (_grid_aligned(), None, 64),
+    "mixed-400-vertex": ({1: g.regular_polygon(30.0, 10.0, 2.0, 400),
+                          2: g.regular_polygon(31.0, 11.0, 1.0, 12),
+                          3: np.array([25.0, 5.0, 35.0, 5.0, 30.0, 14.0]),
+                          4: TestMultiRingGeometries.HOLED}, None, 256),
+}
+
+
+@pytest.mark.parametrize("curve", ["rowmajor", "hilbert"])
+@pytest.mark.parametrize("case", sorted(_COVER_CASES))
+def test_polygon_cover_matches_brute_force(case, curve, monkeypatch):
+    """The batched cover (all polygons of a tier at once, vertex and
+    crossing tests only on overlapping (cell, edge) pairs) returns exactly
+    the rows of the unpruned per-polygon, per-edge classification."""
+    from geowave_spark.index import cover as cov
+
+    polys, res, max_cells = _COVER_CASES[case]
+    if case.startswith("mixed"):
+        # a chunk of a few cells: the 400-edge rows pad every 12-gon row
+        # and the overlap matrix is built in many chunks
+        monkeypatch.setattr(g, "_PAIR_CHUNK", 2048)
+    got = cov.polygon_cover(polys, res=res, max_cells=max_cells, curve=curve)
+    want = _brute_cover(polys, res, max_cells, curve)
+    assert len(want) and want["full"].any() and not want["full"].all()
+    pd.testing.assert_frame_equal(got, want)

@@ -58,8 +58,8 @@ def test_polygon_join_has_no_shuffle(spark, sf_dir):
 
 
 def test_polygon_join_jvm_refine_has_no_python(spark, sf_dir):
-    """refine='jvm' must keep the ENTIRE join JVM-side: no ArrowEvalPython /
-    BatchEvalPython nodes anywhere in the physical plan."""
+    """The codegen raycast refine keeps the ENTIRE join JVM-side: no
+    ArrowEvalPython / BatchEvalPython nodes anywhere in the physical plan."""
     from pyspark.sql import functions as F
 
     from geowave_spark.geom import core as geom
@@ -72,8 +72,7 @@ def test_polygon_join_jvm_refine_has_no_python(spark, sf_dir):
     )
     polys = {i: geom.regular_polygon(i * 10.0 - 120, i * 5.0 - 30, 3.0, 8)
              for i in range(5)}
-    df = spatial.point_in_polygon_join(spark, pts, polys, data_res=7,
-                                       refine="jvm")
+    df = spatial.point_in_polygon_join(spark, pts, polys, data_res=7)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan

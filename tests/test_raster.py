@@ -925,8 +925,8 @@ def test_q308_modis_tiles_match_scalar_python(spark):
         lon, lat = _scalar_lonlat(eid)
         xm = math.floor(r * math.radians(lon) * math.cos(math.radians(lat)))
         ym = math.floor(r * math.radians(lat))
-        h = min(math.floor((xm - x0) / t), 35)
-        v = min(math.floor((y1 - ym) / t), 17)
+        h = max(min(math.floor((xm - x0) / t), 35), 0)
+        v = max(min(math.floor((y1 - ym) / t), 17), 0)
         a = cells.setdefault((h, v), [0, set(), 0])
         a[0] += 1
         a[1].add(uid)

@@ -46,15 +46,12 @@ def brute_pairs(spark, pts, polys):
     return sorted(out)
 
 
-@pytest.mark.parametrize("refine", ["arrow", "jvm"])
 @pytest.mark.parametrize("single_tier", [262_144, 0])
-def test_polygon_join_matches_brute_force(spark, pts, polys, refine, single_tier):
-    """Both refine engines (pandas batch kernel / JVM higher-order raycast)
-    and both cover shapes (single-tier normalized / tiered fallback) must
+def test_polygon_join_matches_brute_force(spark, pts, polys, single_tier):
+    """Both cover shapes (single-tier normalized / tiered fallback) must
     reproduce the brute-force pairs exactly."""
     got = spatial.point_in_polygon_join(
-        spark, pts, polys, data_res=12, refine=refine,
-        single_tier_cells=single_tier,
+        spark, pts, polys, data_res=12, single_tier_cells=single_tier,
     ).toPandas()
     got_pairs = sorted(map(tuple, got[["pid", "poly_id"]].to_numpy().tolist()))
     exp_pairs = brute_pairs(spark, pts, polys)

@@ -311,7 +311,7 @@ def main() -> None:
         plan, flags=re.S,
     )
     out.write(
-        "\n## point_in_polygon_join (engine API, refine='jvm')\n\n"
+        "\n## point_in_polygon_join (engine API)\n\n"
         "Single pass, fully JVM: two chained BroadcastHashJoins fused in "
         "one codegen stage — cell -> (poly_id, full), then poly_id -> "
         "(bbox, padded vertex columns) with the bbox reject and the lazy "
