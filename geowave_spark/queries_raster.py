@@ -2794,6 +2794,13 @@ def q306_polar_crs_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cell, x0, x1, nx = _Q306_CELL, _Q306_X0, _Q306_X1, _Q306_NX
     pts = spark.sql(_q306_points_sql())
+    # Known oracle risk: xm/ym floor the projected metres computed by numpy
+    # here and by DuckDB's libm in the oracle.  The two may differ in the
+    # last ulp (~1e-10 m at 1e6 m), and a point within that of a whole
+    # metre then floors differently on each side, moving an xm/ym extreme
+    # or a cell.  Each point flips with a tiny fixed probability, so the
+    # expected flip count grows linearly with corpus size (none seen at
+    # sf0.01/sf0.1).
     g = (
         pts.select(_proj("lon", "lat").alias("pxy"), "val_milli")
         .select(F.expr("cast(floor(pxy.x) as bigint)").alias("xm"),
@@ -2899,6 +2906,8 @@ def q307_oblique_crs_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell, nx = _Q307_CELL, _Q307_NX
     x0, x1, y0, y1 = _Q307_X0, _Q307_X1, _Q307_Y0, _Q307_Y1
     pts = spark.sql(_q307_points_sql())
+    # same last-ulp floor risk against the DuckDB oracle as q306: the
+    # expected number of points whose cell flips grows with corpus size
     g = (
         pts.select(_proj("lon", "lat").alias("pxy"), "user_id", "val_milli")
         .select(F.expr("cast(floor(pxy.x) as bigint)").alias("xm"),

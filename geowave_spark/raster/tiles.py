@@ -12,12 +12,15 @@ Reference semantics (/root/reference):
   `analytics/spark/.../kde/KDERunner.java:551-623`.
 - re-tile: `analytics/spark/.../resize/RasterTileResizeSparkRunner.java:100-178`.
 
-Spark-first design: tiles are rows `(res:int, tile_id:long, image_id,
-caption, px:binary RGBA-PNG)`.  Assignment is `mapInPandas` (vectorized
-resample per tile, no per-row Python); merge/pyramid are
-`groupBy(...).applyInPandas` — Spark's shuffle does the mosaicking
-co-location, AQE handles hot-cell skew.  At 10^12 rows every stage is a
-narrow map or a single keyed shuffle; nothing collects to the driver.
+Spark-first design: a mosaic is rows `(res:int, tile_id:long, n_src,
+px:binary RGBA-PNG)`.  Assignment is JVM-only: the closed-form level and
+row-major bbox cover explode each image row into one row per covered
+tile, carrying the source blob (`assign_tiles_df`).  The merge is ONE
+keyed shuffle then ONE streaming `mapInPandas` pass that decodes,
+resamples and composites every tile's sources (`merge_tiles_df`), so a
+mosaic job pays for a single Python stage; the pyramid stitch has the
+same shuffle-then-stream shape.  At 10^12 rows every stage is a narrow
+map or a single keyed shuffle; nothing collects to the driver.
 
 Level selection is kept in closed form (count of resolutions whose lon
 cell width >= tile ground width) so the DuckDB oracle can recompute the
@@ -38,11 +41,6 @@ from . import codec
 TILE_PX = 64
 MAX_TILE_RES = 12  # 2^12 x 2^12 global grid is plenty at test scale
 CURVE = "rowmajor"  # closed-form cell ids shared with the SQL oracle
-
-TILE_SCHEMA = (
-    "res int, tile_id long, image_id string, caption string, px binary"
-)
-
 
 # --------------------------------------------------------------------------
 # level selection (closed form, oracle-shared)
@@ -117,42 +115,60 @@ def assign_plan_df(images_df, tile_px: int = TILE_PX):
     )
 
 
+def _cover_sql_df(df, tile_px: int):
+    """``df`` rows exploded to one row per covering tile, all columns kept
+    plus ``res, tile_id``: closed-form level selection and row-major bbox
+    cover as Spark SQL (`explode(sequence(...))`), so it compiles to
+    WholeStageCodegen with no Python.  Needs ``lon0, lat0, lon1, lat1, w``."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    res = level_res_sql("lon0", "lon1", "w", tile_px)
+    idx = "least(greatest(cast(ceil(({} + {}) / {} * n) as bigint) - 1, 0), n - 1)"
+    y0, y1 = (idx.format(v, "90e0", "180e0") for v in ("lat0", "lat1"))
+    x0, x1 = (idx.format(v, "180e0", "360e0") for v in ("lon0", "lon1"))
+    return (
+        df.withColumn("res", F.expr(f"cast({res} as int)"))
+        .withColumn("n", F.expr("cast(pow(2, res) as bigint)"))
+        .withColumn("ty", F.explode(F.expr(f"sequence({y0}, {y1})")))
+        .withColumn("tx", F.explode(F.expr(f"sequence({x0}, {x1})")))
+        .withColumn("tile_id", F.expr("ty * n + tx"))
+        .drop("n", "ty", "tx")
+    )
+
+
 def assign_plan_sql_df(scalars_df, tile_px: int = TILE_PX):
     """JVM-only assignment plan (image_id, res, tile_id) — no Python at all.
 
-    The row-major curve's bbox cover is closed-form, so the whole plan —
-    level selection, ordinate clamp, cover explode — compiles to
-    WholeStageCodegen via `explode(sequence(...))`.  This is the scale path
-    for plan-only workloads: at 10^12 rows the cover explode runs entirely
-    JVM-side with zero Arrow transfer.  `assign_plan_df` (the mapInPandas
-    twin) remains the general path for non-closed-form curves; a pytest
-    asserts the two produce identical rows.
+    The closed-form cover `assign_tiles_df` also uses (`_cover_sql_df`),
+    keeping only the plan columns, so on a pure-SQL scalar table Catalyst
+    prunes the scan to the footprint inputs (q11 reads only doc_id).
+    `assign_plan_df` (the mapInPandas twin) remains the general path for
+    non-closed-form curves; a pytest asserts the two produce identical rows.
     """
-    from pyspark.sql import functions as F  # noqa: N812
-
-    res_sql = level_res_sql("lon0", "lon1", "w", tile_px)
-    n = "cast(pow(2, res) as bigint)"
-    df = (
-        scalars_df.select("image_id", "lon0", "lat0", "lon1", "lat1", "w")
-        .withColumn("res", F.expr(f"cast({res_sql} as int)"))
-        .withColumn("n", F.expr(n))
-        .select(
-            "image_id", "res", "n",
-            F.expr("least(greatest(cast(ceil((lon0 + 180e0) / 360e0 * n) as bigint) - 1, 0), n - 1)").alias("x0"),
-            F.expr("least(greatest(cast(ceil((lat0 + 90e0) / 180e0 * n) as bigint) - 1, 0), n - 1)").alias("y0"),
-            F.expr("least(greatest(cast(ceil((lon1 + 180e0) / 360e0 * n) as bigint) - 1, 0), n - 1)").alias("x1"),
-            F.expr("least(greatest(cast(ceil((lat1 + 90e0) / 180e0 * n) as bigint) - 1, 0), n - 1)").alias("y1"),
-        )
-        .withColumn("ty", F.explode(F.expr("sequence(y0, y1)")))
-        .withColumn("tx", F.explode(F.expr("sequence(x0, x1)")))
-    )
-    return df.select(
-        "image_id", "res", F.expr("ty * n + tx").alias("tile_id")
-    )
+    cols = ["image_id", "lon0", "lat0", "lon1", "lat1", "w"]
+    return _cover_sql_df(scalars_df.select(*cols), tile_px).select(
+        "image_id", "res", "tile_id")
 
 
 # --------------------------------------------------------------------------
 # pixel-level tile extraction
+
+
+def _axis_span(centres: np.ndarray, a0, a1, n: int):
+    """Floor-mapped source pixel index of each tile pixel centre along one
+    axis, ``floor((centres - a0) / (a1 - a0) * n)``, as ``(i0, i1, idx)``:
+    the indices are monotone in the centre, so the ones inside ``[0, n)``
+    are the single run ``idx`` at tile positions ``[i0, i1)``."""
+    idx = np.floor((centres - a0) / (a1 - a0) * n).astype(np.int64)
+    i0, i1 = np.searchsorted(idx, (0, n))
+    return i0, i1, idx[i0:i1]
+
+
+def _centres(b0, b1, tile_px: int) -> np.ndarray:
+    """Pixel-centre ordinates from edge ``b0`` towards edge ``b1`` (arrays
+    of edges give one row per tile)."""
+    b0, b1 = np.asarray(b0)[..., None], np.asarray(b1)[..., None]
+    return b0 + (np.arange(tile_px) + 0.5) * (b1 - b0) / tile_px
 
 
 def _resample_tile(
@@ -163,82 +179,35 @@ def _resample_tile(
 ) -> np.ndarray:
     """Nearest-neighbor resample of one image into one tile's RGBA grid.
 
-    Pixels outside the image footprint get alpha 0 (no-data) — the merge
-    contract (NoDataMergeStrategy analog).
+    Pixels outside the image footprint get alpha 0 and RGB 0 (no-data) —
+    the merge contract (NoDataMergeStrategy analog).  Row 0 is the north
+    edge.  The merge kernel writes only the covered rectangle of this tile.
     """
     lon0, lat0, lon1, lat1 = fp
     clon0, clat0, clon1, clat1 = cell_bounds
     h, w = img_px.shape[:2]
-    # tile pixel centers in geo coordinates (row 0 = north edge)
-    lons = clon0 + (np.arange(tile_px) + 0.5) * (clon1 - clon0) / tile_px
-    lats = clat1 - (np.arange(tile_px) + 0.5) * (clat1 - clat0) / tile_px
-    xi = np.floor((lons - lon0) / (lon1 - lon0) * w).astype(np.int64)
-    yi = np.floor((lat1 - lats) / (lat1 - lat0) * h).astype(np.int64)
-    inside_x = (xi >= 0) & (xi < w)
-    inside_y = (yi >= 0) & (yi < h)
-    xi = np.clip(xi, 0, w - 1)
-    yi = np.clip(yi, 0, h - 1)
+    # rows run north -> south; IEEE negation is exact, so measuring from
+    # the north edges is bit-equal to measuring (lat1 - lat) from the south
+    ia, ib, yi = _axis_span(_centres(clat1, clat0, tile_px), lat1, lat0, h)
+    ja, jb, xi = _axis_span(_centres(clon0, clon1, tile_px), lon0, lon1, w)
     tile = np.zeros((tile_px, tile_px, 4), dtype=np.uint8)
-    tile[:, :, :3] = img_px[yi[:, None], xi[None, :], :3]
-    tile[:, :, 3] = np.where(inside_y[:, None] & inside_x[None, :], 255, 0)
-    tile[:, :, :3] *= (tile[:, :, 3:] > 0)  # zero out no-data pixels
+    tile[ia:ib, ja:jb, :3] = img_px[yi[:, None], xi, :3]
+    tile[ia:ib, ja:jb, 3] = 255
     return tile
 
 
-def assign_tiles_pdf(img_rows: pd.DataFrame, tile_px: int = TILE_PX,
-                     payload: str = "png") -> pd.DataFrame:
-    """Full image rows -> tile rows with RGBA payloads.
+def assign_tiles_df(images_df, tile_px: int = TILE_PX):
+    """Image rows -> one row per (res, tile_id) the image covers, carrying
+    the source's ``image_id, caption, lon0..lat1, fmt, bytes``.
 
-    payload="png" encodes each tile (the at-rest format); payload="raw"
-    ships bare RGBA bytes to the next stage.  MEASURED at sf0.1 (smooth
-    synthetic tiles): png is ~2x faster end-to-end — the in-repo PNG
-    encoder is cheap on compressible data and the ~10x smaller payload
-    wins at Arrow serialization + shuffle.  raw is the right knob when
-    tiles are photographic (encode cost high, compression ratio low);
-    both paths are byte-identical after merge
-    (tests/test_raster.py::test_raw_intermediate_merge_parity).
+    JVM-only (`_cover_sql_df`): nothing is decoded or rendered here; the
+    pixels are resampled and composited in `merge_tiles_df`'s single
+    Python pass.
     """
-    enc = codec.png_encode if payload == "png" else (lambda t: t.tobytes())
-    plan: list[tuple] = []
-    res = level_res(img_rows["lon0"], img_rows["lon1"], img_rows["w"], tile_px)
-    # columnar extraction once per batch: pandas .iloc row access costs
-    # ~100us/row, which dominates small-tile batches at 100k+ images
-    lon0 = img_rows["lon0"].to_numpy()
-    lat0 = img_rows["lat0"].to_numpy()
-    lon1 = img_rows["lon1"].to_numpy()
-    lat1 = img_rows["lat1"].to_numpy()
-    blobs = img_rows["bytes"].tolist()
-    fmts = img_rows["fmt"].tolist()
-    image_ids = img_rows["image_id"].tolist()
-    captions = img_rows["caption"].tolist()
-    for i in range(len(img_rows)):  # per-image; inner math vectorized
-        r = int(res[i])
-        _, cells = grid.cover_bbox(
-            [lon0[i]], [lat0[i]], [lon1[i]], [lat1[i]], r, curve=CURVE
-        )
-        px = codec.decode(blobs[i], fmts[i])
-        fp = (lon0[i], lat0[i], lon1[i], lat1[i])
-        lo_lon, lo_lat, hi_lon, hi_lat = grid.cell_bounds(cells, r, curve=CURVE)
-        for j in range(len(cells)):
-            tile = _resample_tile(
-                px, fp, (lo_lon[j], lo_lat[j], hi_lon[j], hi_lat[j]), tile_px
-            )
-            plan.append(
-                (r, int(cells[j].astype(np.int64)), image_ids[i],
-                 captions[i], enc(tile))
-            )
-    return pd.DataFrame(
-        plan, columns=["res", "tile_id", "image_id", "caption", "px"]
+    return _cover_sql_df(images_df, tile_px).select(
+        "res", "tile_id", "image_id", "caption",
+        "lon0", "lat0", "lon1", "lat1", "fmt", "bytes",
     )
-
-
-def assign_tiles_df(images_df, tile_px: int = TILE_PX, payload: str = "png"):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield assign_tiles_pdf(pdf, tile_px, payload)
-
-    return images_df.mapInPandas(gen, schema=TILE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -287,20 +256,74 @@ def _group_bounds(pdf: pd.DataFrame, key_cols: list[str]):
     return starts, ends
 
 
-def merge_tiles_df(tiles_df, tile_px: int = TILE_PX, src_payload: str = "png",
+def _mosaic_stream(batches: Iterator[pd.DataFrame],
+                   tile_px: int = TILE_PX) -> Iterator[pd.DataFrame]:
+    """`merge_tiles_df`'s kernel: key-sorted source rows -> one
+    ``(res, tile_id, n_src, px)`` row per tile."""
+    # one accumulator reused across every group in the task (~100k
+    # per-group allocations churned the heap); the encoded bytes are
+    # copied out before the buffer is reused
+    key = ["res", "tile_id"]
+    acc = np.empty((tile_px, tile_px, 4), dtype=np.uint8)
+    for pdf in _complete_groups(batches, key):
+        starts, ends = _group_bounds(pdf, key)
+        res = pdf["res"].to_numpy()[starts]
+        tid = pdf["tile_id"].to_numpy()[starts]
+        cb = np.empty((4, len(starts)))
+        for r in np.unique(res):  # one cell_bounds call per distinct res
+            m = res == r
+            cb[:, m] = grid.cell_bounds(tid[m], int(r), curve=CURVE)
+        lons = _centres(cb[0], cb[2], tile_px)
+        lats = _centres(cb[3], cb[1], tile_px)  # row 0 = north edge
+        fp = pdf[["lon0", "lat0", "lon1", "lat1"]].to_numpy()
+        blobs, fmts = pdf["bytes"].tolist(), pdf["fmt"].tolist()
+        out = []
+        for g, (s, e) in enumerate(zip(starts, ends)):
+            acc[:] = 0
+            for k in range(s, e):  # sources in image_id order
+                img = codec.decode(blobs[k], fmts[k])
+                h, w = img.shape[:2]
+                ia, ib, yi = _axis_span(lats[g], fp[k, 3], fp[k, 1], h)
+                ja, jb, xi = _axis_span(lons[g], fp[k, 0], fp[k, 2], w)
+                src = img[yi[:, None], xi, :3]
+                dst = acc[ia:ib, ja:jb]
+                if k == s:
+                    dst[:, :, :3] = src
+                    dst[:, :, 3] = 255
+                else:
+                    hole = dst[:, :, 3] == 0
+                    dst[hole, :3] = src[hole]
+                    dst[hole, 3] = 255
+            out.append((int(res[g]), int(tid[g]), e - s, codec.png_encode(acc)))
+        yield pd.DataFrame(
+            out, columns=["res", "tile_id", "n_src", "px"]
+        )
+
+
+def merge_tiles_df(tiles_df, tile_px: int = TILE_PX,
                    num_partitions: int | None = None):
     """One row per (res, tile_id): no-data-aware composite of all sources.
 
     Deterministic: sources applied in image_id order; a later source fills
     only pixels still no-data (alpha 0) — NoDataMergeStrategy semantics.
-    src_payload must match the assign stage's ``payload``; the merged
-    OUTPUT is always PNG (the at-rest format).
+    ``n_src`` counts every source row of the tile, including one whose
+    footprint covers no tile pixel centre.  The output is PNG (the at-rest
+    format).
 
     Physically: ONE hash shuffle on the tile key + in-partition sort, then
-    a single streaming mapInPandas pass (see `_complete_groups`) — the
-    same data movement as groupBy().applyInPandas but without its
-    per-group Arrow round-trip, which dominates when most tiles have only
-    a few sources.
+    a single streaming mapInPandas pass (see `_complete_groups`) that
+    decodes each source, resamples it and composites it — the whole mosaic
+    is one Python stage.  Only the columns the kernel reads cross the
+    Exchange (``caption`` is pruned).  Each source covers one rectangle of
+    the tile (the floor-mapped indices are monotone): the first source is
+    a slice write into it, later ones apply a hole mask inside it only.
+
+    Trade-off: the shuffle carries the source blob once per covered tile
+    rather than a rendered tile PNG.  Level selection makes one tile span
+    >= tile_px source pixels, so an image of w x h pixels is copied at most
+    (ceil(w/tile_px)+1) * (ceil(h/tile_px)+1) times — 3.2 on average for
+    the 32-80 px synthetic images.  For corpora of large images, rendering
+    tiles before the shuffle may move fewer bytes.
 
     The shuffle width defaults to 1x the cluster parallelism, NOT
     `spark.sql.shuffle.partitions`: the keyless default is a fixed number
@@ -318,41 +341,15 @@ def merge_tiles_df(tiles_df, tile_px: int = TILE_PX, src_payload: str = "png",
     groups needs no headroom; explicit repartition(n) is exempt from AQE
     coalescing, so the width stays cores-proportional on any cluster.
     """
-    if src_payload == "png":
-        dec = lambda b: codec.png_decode(bytes(b))  # noqa: E731
-    else:
-        dec = lambda b: np.frombuffer(b, dtype=np.uint8).reshape(  # noqa: E731
-            tile_px, tile_px, 4)
-
     def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one accumulator + one hole mask reused across every group in the
-        # task (VERDICT r2: ~100k per-group allocations churned the heap);
-        # the encoded bytes are copied out before the buffers are reused
-        acc = np.empty((tile_px, tile_px, 4), dtype=np.uint8)
-        hole = np.empty((tile_px, tile_px), dtype=bool)
-        for pdf in _complete_groups(batches, ["res", "tile_id"]):
-            starts, ends = _group_bounds(pdf, ["res", "tile_id"])
-            res = pdf["res"].to_numpy()
-            tid = pdf["tile_id"].to_numpy()
-            px = pdf["px"].tolist()
-            out = []
-            for s, e in zip(starts, ends):
-                acc[:] = 0
-                for buf in px[s:e]:  # per-source-tile; pixel ops vectorized
-                    t = dec(buf)
-                    np.equal(acc[:, :, 3], 0, out=hole)
-                    acc[hole] = t[hole]
-                out.append(
-                    (int(res[s]), int(tid[s]), e - s, codec.png_encode(acc))
-                )
-            yield pd.DataFrame(
-                out, columns=["res", "tile_id", "n_src", "px"]
-            )
+        return _mosaic_stream(batches, tile_px)
 
+    key = ["res", "tile_id"]
     n_part = num_partitions or tiles_df.sparkSession.sparkContext.defaultParallelism
     return (
-        tiles_df.repartition(n_part, "res", "tile_id")
-        .sortWithinPartitions("res", "tile_id", "image_id")
+        tiles_df.select(*key, "image_id", "lon0", "lat0", "lon1", "lat1", "fmt", "bytes")
+        .repartition(n_part, *key)
+        .sortWithinPartitions(*key, "image_id")
         .mapInPandas(
             merge_stream, schema="res int, tile_id long, n_src int, px binary"
         )

@@ -151,8 +151,8 @@ def query_polygons(spark: SparkSession, sf_dir: str, max_polys: int = 100) -> di
 
 def image_tiles(spark: SparkSession, path: str) -> DataFrame:
     """Tile assignment + no-data mosaic merge over a SCAN of the corpus
-    table: parquet read -> mapInPandas decode/split -> one keyed shuffle ->
-    streaming merge (`raster/tiles.py`)."""
+    table: parquet read -> JVM cover explode -> one keyed shuffle ->
+    streaming decode/resample/merge (`raster/tiles.py`)."""
     from ..raster import tiles
 
     return tiles.merge_tiles_df(tiles.assign_tiles_df(snap.scan(spark, path)))

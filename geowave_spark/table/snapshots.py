@@ -554,9 +554,21 @@ def scan(
     m = load_manifest(path, snapshot)
     kept, _total = plan_files(path, snapshot, prune)
     if kept:
-        df = spark.read.schema(StructType.fromJson(json.loads(m["schema"]))).parquet(
-            *[os.path.join(path, f["path"]) for f in kept]
-        )
+        # the manifest already names every file; above this threshold (32
+        # by default) Spark would re-list them with a distributed job while
+        # the DataFrame is built, so raise it for this one read
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, str(max(len(kept), int(spark.conf.get(key)))))
+        try:
+            df = spark.read.schema(StructType.fromJson(json.loads(m["schema"]))).parquet(
+                *[os.path.join(path, f["path"]) for f in kept]
+            )
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
     else:
         df = spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
     if where:

@@ -118,6 +118,24 @@ def test_tile_plan_is_jvm_only(spark, sf_dir):
     assert "ReadSchema: struct<doc_id:bigint>" in plan
 
 
+def test_q12_mosaic_is_one_python_stage(spark, sf_dir):
+    """q12's mosaic is ONE Python stage: tile assignment is the JVM-only
+    cover explode, so above the image table's own synthesis
+    (`images_df`'s mapInPandas, whose output carries ``phash``) the plan
+    has exactly one MapInPandas (the merge), and the only Exchange below it
+    is the hashpartitioning(res, tile_id) shuffle."""
+    lines = _plan(spark, sf_dir, "q12_tile_merge_counts").splitlines()
+    synth = [i for i, ln in enumerate(lines) if "MapInPandas" in ln and "phash#" in ln]
+    assert len(synth) == 1, lines
+    above = lines[: synth[0]]
+    py = [i for i, ln in enumerate(above) if "MapInPandas" in ln]
+    assert len(py) == 1, above
+    assert not any("ArrowEvalPython" in ln or "BatchEvalPython" in ln for ln in lines)
+    exch = [ln.strip() for ln in above[py[0]:] if "Exchange" in ln]
+    assert len(exch) == 1, exch
+    assert "hashpartitioning(res#" in exch[0] and ", tile_id#" in exch[0], exch
+
+
 def test_salted_join_shuffles_on_salt(spark, sf_dir):
     """The salted big-big join must actually hash-partition on the salted
     key (explicit skew split), not broadcast."""

@@ -142,34 +142,112 @@ def test_tile_extraction_matches_brute_force(img_pdf, docs):
 
 
 def test_tiles_cover_every_valid_pixel_once(img_pdf):
-    """Union of a row's tiles covers its footprint; overlapping-tile pixels
-    are consistent (same source)."""
+    """Union of a row's tiles covers its footprint; every valid tile pixel
+    is a pixel of that source."""
     row = img_pdf.iloc[4]
-    trows = tiles.assign_tiles_pdf(img_pdf.iloc[[4]])
+    plan = tiles.assign_plan_pdf(img_pdf.iloc[[4]])
+    px = codec.decode(row["bytes"], row.fmt)
+    fp = (row.lon0, row.lat0, row.lon1, row.lat1)
+    bounds = np.column_stack(grid.cell_bounds(
+        plan["tile_id"].to_numpy(), int(plan["res"].iloc[0]), curve=tiles.CURVE))
+    src_rgb = {tuple(p) for p in px[:, :, :3].reshape(-1, 3)}
     total_valid = 0
-    for _, t in trows.iterrows():
-        px = codec.png_decode(bytes(t["px"]))
-        total_valid += int((px[:, :, 3] > 0).sum())
+    for cb in bounds:
+        t = tiles._resample_tile(px, fp, tuple(cb), tiles.TILE_PX)
+        valid = t[:, :, 3] > 0
+        total_valid += int(valid.sum())
+        assert (t[~valid] == 0).all()
+        assert {tuple(p) for p in t[valid][:, :3]} <= src_rgb
     assert total_valid > 0
-    assert (trows["caption"] == row.caption).all()
+
+
+def _composite_ref(srcs, cb, tile_px=tiles.TILE_PX):
+    """`_resample_tile` per source in image_id order plus the boolean
+    hole-mask composite: the mosaic kernel's reference."""
+    acc = np.zeros((tile_px, tile_px, 4), dtype=np.uint8)
+    for px, fp in srcs:
+        t = tiles._resample_tile(px, fp, cb, tile_px)
+        hole = acc[:, :, 3] == 0
+        acc[hole] = t[hole]
+    return acc
+
+
+def _mosaic(rows, batch=3):
+    """Run the mosaic kernel over key-sorted source rows in small batches
+    (groups straddle batch boundaries)."""
+    pdf = pd.DataFrame(rows, columns=[
+        "res", "tile_id", "image_id", "lon0", "lat0", "lon1", "lat1", "fmt", "bytes"])
+    pdf = pdf.sort_values(["res", "tile_id", "image_id"]).reset_index(drop=True)
+    batches = [pdf.iloc[i : i + batch] for i in range(0, len(pdf), batch)]
+    return pd.concat(list(tiles._mosaic_stream(iter(batches))), ignore_index=True)
 
 
 def test_merge_nodata_semantics():
-    """Later source fills only holes left by earlier sources."""
-    a = np.zeros((8, 8, 4), dtype=np.uint8)
-    a[:4, :, :3], a[:4, :, 3] = 100, 255
-    b = np.zeros((8, 8, 4), dtype=np.uint8)
-    b[:, :, :3], b[:, :, 3] = 200, 255
-    pdf = pd.DataFrame(
-        {"image_id": ["a", "b"], "px": [codec.png_encode(a), codec.png_encode(b)]}
-    )
-    # replicate the merge kernel
-    acc = np.zeros((8, 8, 4), dtype=np.uint8)
-    for buf in pdf.sort_values("image_id")["px"]:
-        t = codec.png_decode(bytes(buf))
-        hole = acc[:, :, 3] == 0
-        acc[hole] = t[hole]
-    assert (acc[:4, :, 0] == 100).all() and (acc[4:, :, 0] == 200).all()
+    """Later source fills only holes left by earlier sources: "a" covers
+    the tile's north half, "b" the whole tile."""
+    r, tid = 10, 300 * 1024 + 500
+    lo_lon, lo_lat, hi_lon, hi_lat = (float(v[0]) for v in grid.cell_bounds(
+        np.array([tid]), r, curve=tiles.CURVE))
+    mid = (lo_lat + hi_lat) / 2
+    a = np.full((8, 8, 3), 100, dtype=np.uint8)
+    b = np.full((8, 8, 3), 200, dtype=np.uint8)
+    out = _mosaic([
+        (r, tid, "b", lo_lon - 1, lo_lat - 1, hi_lon + 1, hi_lat + 1, "raw", codec.encode(b, "raw")),
+        (r, tid, "a", lo_lon - 1, mid, hi_lon + 1, hi_lat + 1, "png", codec.encode(a, "png")),
+    ])
+    assert out[["res", "tile_id", "n_src"]].values.tolist() == [[r, tid, 2]]
+    acc = codec.png_decode(bytes(out["px"][0]))
+    half = tiles.TILE_PX // 2
+    assert (acc[:half, :, 0] == 100).all() and (acc[half:, :, 0] == 200).all()
+    assert (acc[:, :, 3] == 255).all()
+
+
+def test_mosaic_kernel_matches_resample_composite():
+    """The rectangle composite is byte-identical to full-tile `_resample_tile`
+    (checked against the per-pixel oracle) plus the boolean hole-mask
+    composite: all three fmts, multi-source tiles, sources whose edges fall
+    inside the tile, sources wholly outside one of the group's tiles, and a
+    source inside the tile that covers no pixel centre (it still counts in
+    n_src)."""
+    r, tile_px = 10, tiles.TILE_PX
+    tids = np.array([300 * 1024 + 500, 300 * 1024 + 501, 301 * 1024 + 500])
+    lo_lon, lo_lat, hi_lon, hi_lat = grid.cell_bounds(tids, r, curve=tiles.CURVE)
+    cw, ch = hi_lon[0] - lo_lon[0], hi_lat[0] - lo_lat[0]
+    rng = np.random.default_rng(5)
+    srcs = []
+    for i in range(9):
+        w, h = (int(v) for v in rng.integers(5, 90, size=2))
+        lon0 = lo_lon[0] + rng.uniform(-0.6, 1.4) * cw
+        lat0 = lo_lat[0] + rng.uniform(-0.6, 1.4) * ch
+        fp = (lon0, lat0, lon0 + rng.uniform(0.2, 1.5) * cw, lat0 + rng.uniform(0.2, 1.5) * ch)
+        srcs.append((f"img{i}", rng.integers(0, 256, (h, w, 3), dtype=np.uint8), fp))
+    # strictly between two pixel centres of tile 0 in both axes
+    px_w, px_h = cw / tile_px, ch / tile_px
+    x0, y0 = lo_lon[0] + 10.6 * px_w, lo_lat[0] + 20.6 * px_h
+    srcs.append(("img_gap", np.full((4, 4, 3), 7, dtype=np.uint8),
+                 (x0, y0, x0 + 0.3 * px_w, y0 + 0.3 * px_h)))
+    rows, want = [], {}
+    for j, tid in enumerate(tids):
+        cb = (lo_lon[j], lo_lat[j], hi_lon[j], hi_lat[j])
+        ref = []
+        for k, (iid, px, fp) in enumerate(srcs):
+            fmt = images.FMTS[k % 3]
+            blob = codec.encode(px, fmt)
+            dec = codec.decode(blob, fmt)
+            assert np.array_equal(tiles._resample_tile(dec, fp, cb, tile_px),
+                                  brute_force_tile(dec, fp, cb, tile_px))
+            rows.append((r, int(tid), iid, *fp, fmt, blob))
+            ref.append((dec, fp))
+        want[int(tid)] = codec.png_encode(_composite_ref(ref, cb))
+        if j == 0:
+            gap = tiles._resample_tile(ref[-1][0], ref[-1][1], cb, tile_px)
+            assert not gap[:, :, 3].any()
+    for batch in (1, 4, 100):
+        out = _mosaic(rows, batch)
+        assert out["tile_id"].tolist() == sorted(want)
+        assert (out["n_src"] == len(srcs)).all()
+        for tid, px in zip(out["tile_id"], out["px"]):
+            assert px == want[tid], tid
 
 
 def test_complete_groups_never_splits_a_key():
@@ -213,27 +291,34 @@ def test_downsample2_block_mean():
 def test_spark_tile_pipeline(spark, sf_dir, img_pdf):
     """Distributed synthesize -> tile -> merge -> pyramid; counts line up and
     one merged tile is pixel-identical to the locally-computed merge."""
-    df = images.images_df(spark, sf_dir)
+    df = images.images_df(spark, sf_dir).cache()
     t = tiles.assign_tiles_df(df)
     merged = tiles.merge_tiles_df(t).cache()
     plan_local = tiles.assign_plan_pdf(img_pdf)
     assert merged.count() == plan_local.groupby(["res", "tile_id"]).ngroups
-    # deepest-res tile with most sources: recompute locally
+    # first tile with 2+ sources: recompute locally from _resample_tile
     top = merged.orderBy("res", "tile_id").filter("n_src >= 2").limit(1).toPandas()
     if len(top):
         r, tid = int(top["res"][0]), int(top["tile_id"][0])
-        local_rows = tiles.assign_tiles_pdf(img_pdf)
-        sel = local_rows[(local_rows["res"] == r) & (local_rows["tile_id"] == tid)]
-        acc = np.zeros((tiles.TILE_PX, tiles.TILE_PX, 4), dtype=np.uint8)
-        for buf in sel.sort_values("image_id")["px"]:
-            tt = codec.png_decode(bytes(buf))
-            hole = acc[:, :, 3] == 0
-            acc[hole] = tt[hole]
+        sel = plan_local[(plan_local["res"] == r) & (plan_local["tile_id"] == tid)]
+        assert int(top["n_src"][0]) == len(sel)
+        cb = tuple(float(v[0]) for v in grid.cell_bounds(
+            np.array([tid]), r, curve=tiles.CURVE))
+        src = img_pdf.set_index("image_id").loc[sorted(sel["image_id"])]
+        acc = _composite_ref(
+            [(codec.decode(x["bytes"], x.fmt), (x.lon0, x.lat0, x.lon1, x.lat1))
+             for _, x in src.iterrows()], cb)
         spark_px = codec.png_decode(bytes(top["px"][0]))
         assert np.array_equal(spark_px, acc)
+    # assignment rows carry their source's caption
+    cap = t.select("image_id", "caption").distinct().toPandas()
+    want_cap = dict(zip(img_pdf["image_id"], img_pdf["caption"]))
+    assert len(cap) == len(img_pdf)
+    assert all(want_cap[i] == c for i, c in zip(cap["image_id"], cap["caption"]))
     parents = tiles.pyramid_level_df(merged)
     assert parents.count() > 0
     merged.unpersist()
+    df.unpersist()
 
 
 def test_assign_plan_sql_matches_mapinpandas(spark, sf_dir):
@@ -295,28 +380,6 @@ def test_image_stats_histogram(spark, sf_dir, img_pdf):
     assert g["n_px"] == sum(r["n_px"] for r in got.values())
     assert sum(g[f"bin{b}"] for b in range(rstats.N_BINS)) == g["n_px"]
     st.unpersist()
-
-
-def test_raw_intermediate_merge_parity(spark, sf_dir):
-    """The raw-payload fast path (no intermediate PNG round trip between
-    assign and merge) must produce byte-identical merged mosaics."""
-    from geowave_spark.table import images as img_tab
-
-    df = img_tab.images_df(spark, sf_dir).limit(40)
-    via_png = (
-        tiles.merge_tiles_df(tiles.assign_tiles_df(df, payload="png"),
-                             src_payload="png")
-        .orderBy("res", "tile_id").collect()
-    )
-    via_raw = (
-        tiles.merge_tiles_df(tiles.assign_tiles_df(df, payload="raw"),
-                             src_payload="raw")
-        .orderBy("res", "tile_id").collect()
-    )
-    assert len(via_png) == len(via_raw) > 0
-    for a, b in zip(via_png, via_raw):
-        assert (a["res"], a["tile_id"], a["n_src"]) == (b["res"], b["tile_id"], b["n_src"])
-        assert bytes(a["px"]) == bytes(b["px"])
 
 
 # --------------------------------------------------------------------- focal

@@ -41,6 +41,27 @@ def test_create_read_roundtrip(spark, tdir):
     ]
 
 
+def test_scan_of_many_files_starts_no_job(spark, tdir):
+    """Building a scan over more files than Spark's parallel-listing
+    threshold (32) starts no Spark job: the manifest already lists the
+    files.  The threshold is restored afterwards and every row is read."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    S.create(_mk(spark, 4000, parts=40), tdir, num_files=40)
+    assert len(S.load_manifest(tdir)["files"]) > 32
+    before = spark.conf.get(key, None)
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-scan-plan", "scan build only")
+    try:
+        got = S.scan(spark, tdir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        assert list(sc.statusTracker().getJobIdsForGroup("snapshot-scan-plan")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert spark.conf.get(key, None) == before
+    assert got.count() == 4000
+    assert got.select("id").distinct().count() == 4000
+
+
 def test_append_and_history(spark, tdir):
     S.create(_mk(spark, 1000), tdir, cluster_by=["cell"], num_files=4)
     S.append(spark.range(1000, 1500).selectExpr(
