@@ -1,27 +1,25 @@
-"""Benchmark driver: runs headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+"""Benchmark driver: runs headline queries at $SPARK_GRAFT_SF_DIR on the
+shared machine-sized session (`geowave_spark.session`) and prints ONE JSON
+line.
 
 Each query is materialized with the noop sink (full execution, no driver
-collect overhead).  `python bench.py --scaling` additionally runs the two
-north-rule workloads — the flagship spatial join and the raster tile
-assignment — at two parallelism levels (N and 4N cores, same input) and
-reports rows/sec at both plus throughput scaling efficiency: the sandbox
-evidence for the north rule's N->4N executor criterion.
+collect overhead).  The N->4N executor scaling evidence is measured by
+`perfbench/run.py` (`scaling_eff` on `pip_join` and `tile_mosaic`).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from geowave_spark.session import local_session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 BENCH_QUERIES = [
     "q01_pricing_summary",
@@ -99,39 +97,6 @@ BENCH_QUERIES = [
 ]
 
 
-def make_spark(cores: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"geowave-bench-{cores}")
-        # shuffle width must scale WITH cores or reduce stages cap at the
-        # smaller level's parallelism (2x cores leaves AQE room to coalesce)
-        .config("spark.sql.shuffle.partitions", str(max(2 * cores, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        # Arrow for driver<->JVM pandas conversion (pickle path is ~8x slower
-        # for the broadcast cover tables)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        # pin the heap and use the throughput collector: G1's incremental
-        # grow/shrink between pixel-heavy queries showed up as 2-3x swings
-        # (q12 9-12s vs 5.6s steady with a pre-committed heap); batch
-        # analytics wants ParallelGC's throughput behavior anyway
-        .config("spark.driver.extraJavaOptions", "-Xms16g -XX:+UseParallelGC")
-        # 10k-row default Arrow batches make the vectorized refine pay its
-        # per-batch pandas/serde overhead 5000+ times on the big join; 128k
-        # rows amortizes it (the kernel itself is O(rows))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-        # testdata files are tiny; split scans so map stages use all cores
-        # (a 100 TB table gets this from its thousands of file splits)
-        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(512 * 1024))
-        .getOrCreate()
-    )
-
-
 def _warm(spark) -> None:
     """Warm the JVM and the Arrow Python worker pool before timing.
 
@@ -181,89 +146,6 @@ def run_query(spark, name: str, sf_dir: str) -> float:
     return sec
 
 
-def _count_timed(df) -> tuple[int, float]:
-    t0 = time.time()
-    n = df.count()
-    return n, time.time() - t0
-
-
-# amplification targets for the scaling runs: the parallel section must
-# dominate the fixed session/broadcast/worker-spawn/plan overhead (~8s
-# measured) or Amdahl's law measures the harness instead of the engine
-JOIN_TARGET_PTS = int(os.environ.get("SPARK_GRAFT_JOIN_TARGET", str(960_000_000)))
-TILE_TARGET_IMGS = int(os.environ.get("SPARK_GRAFT_TILE_TARGET", str(40_000)))
-JOIN_MAX_POLYS = int(os.environ.get("SPARK_GRAFT_JOIN_POLYS", "100"))
-
-
-def _scaling_workloads(spark, sf_dir: str):
-    """The two north-rule workloads as (name, DataFrame) pairs — both SCAN
-    the Iceberg-analog snapshot table of image+caption rows (the metric is
-    "...on the 10^12-scale Iceberg image+caption table"), staged once and
-    unmeasured (a real cluster's input table pre-exists; see
-    `geowave_spark/table/corpus.py`).
-
-    The join's point side is amplified in flight (deterministic
-    replication with distinct ids) so the parallel section dominates fixed
-    overhead — Amdahl: at 240M pts this join measured 0.76 N->4N
-    efficiency from ~1s of fixed per-run cost, at 960M the fixed second is
-    ~3% of the 8-core runtime.  The replication runs AFTER the cached
-    repartition, so every core produces rows (a 100 TB table gets this
-    width from its file splits).  data_res=10 keeps ~80% of candidates in
-    fully-interior cells (zero refine traffic); single-tier normalization
-    collapses the cover to one broadcast + one scan.
-    """
-    from geowave_spark.join import spatial
-    from geowave_spark.table import corpus
-
-    path = corpus.ensure_image_table(spark, sf_dir, TILE_TARGET_IMGS)
-    pts, _n_base = corpus.image_points(spark, path, amplify=JOIN_TARGET_PTS)
-    polys = corpus.query_polygons(spark, sf_dir, max_polys=JOIN_MAX_POLYS)
-    join_df = spatial.point_in_polygon_join(spark, pts, polys,
-                                            data_res=10, max_cells=1024)
-    tile_df = corpus.image_tiles(spark, path)
-    return {"join": join_df, "tiles": tile_df}
-
-
-def _scaling_worker(cores: int) -> None:
-    """Child process (CPU-pinned by the parent): run the two north-rule
-    workloads at local[cores], print one JSON line of best-of-3 timings."""
-    s = make_spark(cores)
-    s.sparkContext.setLogLevel("ERROR")
-    s.range(1000).count()
-    dfs = _scaling_workloads(s, SF_DIR)
-    best: dict[str, list] = {}
-    for k, df in dfs.items():
-        _count_timed(df)  # warm (python workers, broadcasts, AQE, C2)
-        for _ in range(int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))):
-            rows, sec = _count_timed(df)
-            if k not in best or sec < best[k][1]:
-                best[k] = [rows, sec]
-    s.stop()
-    print("SCALING_RESULT " + json.dumps(best))
-
-
-def _run_scaling_level(cores: int) -> dict[str, list]:
-    """Run one parallelism level in a subprocess pinned to exactly ``cores``
-    CPUs (cores 0..N-1).
-
-    Pinning is what makes the N -> 4N comparison honest on one box:
-    local[N] alone oversubscribes — its N JVM task threads, N Python
-    workers, and the shuffle/GC threads all run concurrently, so an
-    unpinned "2-core" run really consumes ~4-5 cores and deflates the
-    measured efficiency.  A real N-executor cluster caps each executor at
-    its core count; `taskset` reproduces that cap.
-    """
-    env = {**os.environ, "SPARK_GRAFT_CPUS": str(cores)}
-    cmd = [sys.executable, os.path.abspath(__file__), "--scaling-worker", str(cores)]
-    if shutil.which("taskset"):
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    out = subprocess.run(cmd, env=env, capture_output=True, text=True, check=True)
-    for line in reversed(out.stdout.splitlines()):
-        if line.startswith("SCALING_RESULT "):
-            return json.loads(line[len("SCALING_RESULT "):])
-    raise RuntimeError(f"scaling worker produced no result: {out.stderr[-2000:]}")
-
-
 def _isolated_query_worker(name: str) -> None:
     """Child process: run ONE query in a fresh JVM, print its samples.
 
@@ -274,7 +156,7 @@ def _isolated_query_worker(name: str) -> None:
     queries their own JVM (own spill dir lifecycle, own heap), the
     single-box analog of running them as separate cluster applications.
     """
-    spark = make_spark(CPUS)
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
     _warm(spark)
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
@@ -295,9 +177,6 @@ def _run_isolated(name: str) -> list[float]:
 
 
 def main() -> None:
-    if "--scaling-worker" in sys.argv:
-        _scaling_worker(int(sys.argv[sys.argv.index("--scaling-worker") + 1]))
-        return
     if "--isolated-query" in sys.argv:
         _isolated_query_worker(sys.argv[sys.argv.index("--isolated-query") + 1])
         return
@@ -308,88 +187,38 @@ def main() -> None:
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     times: dict[str, float] = {}
     medians: dict[str, float] = {}
-    if "--scaling-only" not in sys.argv:
-        spark = make_spark(CPUS)
-        spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session()
+    spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
-        _warm(spark)
+    _warm(spark)
 
-        # best-of-N per query: single-JVM local mode shows 2-4x run-to-run
-        # swings from stop-the-world GC landing inside a measurement (heap
-        # churn from the pixel paths); the minimum is the engine's actual
-        # capability, same methodology as the --scaling best-of-3.  The
-        # median is recorded alongside so round-over-round regression
-        # comparisons have a stabler statistic than noisy minima.
-        reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
-        for name in BENCH_QUERIES:
-            print(f"BENCH_PROGRESS {name}", file=sys.stderr, flush=True)
-            if name in isolate:
-                samples = sorted(_run_isolated(name))
-            else:
-                samples = sorted(
-                    run_query(spark, name, SF_DIR) for _ in range(reps))
-            times[name] = round(samples[0], 3)
-            medians[name] = round(samples[len(samples) // 2], 3)
-        spark.stop()
+    # best-of-N per query: single-JVM local mode shows 2-4x run-to-run
+    # swings from stop-the-world GC landing inside a measurement (heap
+    # churn from the pixel paths); the minimum is the engine's actual
+    # capability.  The median is recorded alongside so round-over-round
+    # regression comparisons have a stabler statistic than noisy minima.
+    reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
+    for name in BENCH_QUERIES:
+        print(f"BENCH_PROGRESS {name}", file=sys.stderr, flush=True)
+        if name in isolate:
+            samples = sorted(_run_isolated(name))
+        else:
+            samples = sorted(
+                run_query(spark, name, SF_DIR) for _ in range(reps))
+        times[name] = round(samples[0], 3)
+        medians[name] = round(samples[len(samples) // 2], 3)
+    spark.stop()
 
-    total = round(sum(times.values()), 3)
-    out = {
+    print(json.dumps({
         "metric": "headline_query_wall_seconds",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "queries_median": medians,
         "sf": sf,
-        "cpus": CPUS,
-    }
-    if "--scaling-only" in sys.argv:
-        sys.argv.append("--scaling")
-
-    if "--scaling" in sys.argv:
-        # same jobs, two parallelism levels (N and 4N cores), same input ->
-        # throughput scaling efficiency.  Each level runs in its own
-        # CPU-pinned subprocess (see _run_scaling_level).  The two levels
-        # ALTERNATE over several rounds and each level keeps its minimum:
-        # this sandbox shows minutes-long background-load episodes that can
-        # inflate one whole subprocess run 1.5-2x (measured 8-core join
-        # 6.0s..9.6s across sessions, same code) — alternating rounds give
-        # every level a sample from a quiet window, which is the number a
-        # dedicated cluster would see.
-        n_lo = max(2, CPUS // 16)
-        n_hi = n_lo * 4
-        # stage the corpus snapshot table with the parent's full core count
-        # (ingest is setup, not a measured job — don't make the first
-        # pinned 2-core worker pay for it)
-        stage = make_spark(CPUS)
-        stage.sparkContext.setLogLevel("ERROR")
-        from geowave_spark.table import corpus
-
-        corpus.ensure_image_table(stage, SF_DIR, TILE_TARGET_IMGS)
-        stage.stop()
-        rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "3"))
-        runs: dict[int, dict[str, list]] = {n_lo: {}, n_hi: {}}
-        for _ in range(rounds):
-            for cores in (n_lo, n_hi):
-                for k, (rows, sec) in _run_scaling_level(cores).items():
-                    cur = runs[cores].get(k)
-                    if cur is None or sec < cur[1]:
-                        runs[cores][k] = [rows, sec]
-        scaling = {"cores_n": n_lo, "cores_4n": n_hi}
-        for k in ("join", "tiles"):
-            rows, sec_lo = runs[n_lo][k]
-            _, sec_hi = runs[n_hi][k]
-            # efficiency = (throughput_4N / throughput_N) / 4 = t_N / (4 * t_4N)
-            scaling[k] = {
-                "output_rows": rows,
-                "sec_n": round(sec_lo, 3),
-                "sec_4n": round(sec_hi, 3),
-                "rows_per_sec_n": round(rows / sec_lo, 1),
-                "rows_per_sec_4n": round(rows / sec_hi, 1),
-                "efficiency": round(sec_lo / (4 * sec_hi), 3),
-            }
-        out["scaling"] = scaling
-
-    print(json.dumps(out))
+        "cpus": cpus,
+    }))
 
 
 if __name__ == "__main__":

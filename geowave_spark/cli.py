@@ -28,25 +28,9 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
-
-def _make_spark(cpus: str | None = None):
-    from pyspark.sql import SparkSession
-
-    n = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    return (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("geowave-spark-cli")
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
+from .session import local_session
 
 _DEFAULT_EMIT_CAP = 100_000
 
@@ -88,7 +72,7 @@ def cmd_query(args) -> int:
     from .plans.sqlrewrite import spatial_sql
     from .table.views import register_views
 
-    spark = _make_spark(args.cpus)
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
     if args.sf_dir:
         register_views(spark, args.sf_dir)
@@ -133,7 +117,7 @@ _INGEST_READERS = {
 def cmd_ingest(args) -> int:
     import importlib
 
-    spark = _make_spark(args.cpus)
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
     if args.format == "parquet":
         df = spark.read.parquet(args.src)
@@ -163,28 +147,28 @@ def cmd_table(args) -> int:
         return 0
     spark = None
     if args.table_cmd == "delete":
-        spark = _make_spark(args.cpus)
+        spark = local_session()
         spark.sparkContext.setLogLevel("ERROR")
         print(json.dumps(snap.delete_where(spark, args.path, args.where)))
     elif args.table_cmd == "compact":
-        spark = _make_spark(args.cpus)
+        spark = local_session()
         spark.sparkContext.setLogLevel("ERROR")
         print(json.dumps(snap.compact(spark, args.path,
                                       target_rows=args.target_rows)))
     elif args.table_cmd == "optimize":
-        spark = _make_spark(args.cpus)
+        spark = local_session()
         spark.sparkContext.setLogLevel("ERROR")
         print(json.dumps(snap.optimize(
             spark, args.path, cluster_by=args.cluster_by.split(","),
             target_rows=args.target_rows)))
     elif args.table_cmd == "merge":
-        spark = _make_spark(args.cpus)
+        spark = local_session()
         spark.sparkContext.setLogLevel("ERROR")
         src = spark.read.parquet(args.source)
         print(json.dumps(snap.merge_into(
             spark, args.path, src, key_cols=args.key.split(","))))
     elif args.table_cmd == "incremental":
-        spark = _make_spark(args.cpus)
+        spark = local_session()
         spark.sparkContext.setLogLevel("ERROR")
         df = snap.incremental_scan(spark, args.path, args.from_snapshot,
                                    args.to_snapshot)
@@ -217,7 +201,7 @@ def cmd_stat(args) -> int:
     from .table import geo
     from .table.views import register_views
 
-    spark = _make_spark(args.cpus)
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
     if args.sf_dir:
         register_views(spark, args.sf_dir)
@@ -243,7 +227,7 @@ def cmd_analytic(args) -> int:
     from .table import geo
     from .table.views import register_views
 
-    spark = _make_spark(args.cpus)
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
     register_views(spark, args.sf_dir)
     pts = spark.sql(geo.events_points_sql())
@@ -271,7 +255,6 @@ def cmd_analytic(args) -> int:
 
 def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="python -m geowave_spark")
-    ap.add_argument("--cpus", help="local[N] core count (default: all)")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     q = sub.add_parser("query", help="run a GWQL or Spark SQL statement")

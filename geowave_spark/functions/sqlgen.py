@@ -190,12 +190,6 @@ def shingles3_from(d: Dialect, vals: str) -> str:
     return f"list_transform({idx}, i -> {body})"
 
 
-def shingles3(d: Dialect, text: str = "text") -> str:
-    """3-gram shingles straight from text (convenience; prefer projecting
-    `wordvals` to a column and calling `shingles3_from` in hot paths)."""
-    return shingles3_from(d, wordvals(d, text))
-
-
 P_MINHASH = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 
@@ -206,29 +200,12 @@ def minhash_one(d: Dialect, shingle_arr: str, a: int, b: int) -> str:
     )
 
 
-def minhash_sig(d: Dialect, shingle_arr: str, k: int = 16) -> list[str]:
-    """k independent minhash expressions (deterministic coefficient schedule)."""
-    return [
-        minhash_one(d, shingle_arr, a=2 * j + 3, b=104729 * (j + 1) % P_MINHASH)
-        for j in range(k)
-    ]
-
-
 def band_hash(cols: list[str]) -> str:
     """Fold r minhash columns into one band id (mod 1e9+7, overflow-safe)."""
     expr = f"({cols[0]} % 1000000007)"
     for c in cols[1:]:
         expr = f"(({expr} * 31 + {c}) % 1000000007)"
     return expr
-
-
-def simhash16(d: Dialect, text: str = "text") -> str:
-    """16-bit SimHash over word hashes: bit b set iff sum of +-1 votes > 0.
-
-    Vote for bit b from word value v: +1 if bit b of a remixed v is 1 else
-    -1.  remix(v) = v * 2654435761 % 2^31 spreads the low-entropy wordval.
-    """
-    return simhash16_from(d, wordvals(d, text))
 
 
 def simhash16_from(d: Dialect, v: str) -> str:
@@ -290,14 +267,6 @@ def simhash64_halves_from(d: Dialect, v: str) -> tuple[str, str]:
         for b in range(32, 64)
     )
     return f"({lo})", f"({hi})"
-
-
-def jaccard_micro(d: Dialect, a: str, b: str) -> str:
-    """floor(1e6 * |A ∩ B| / |A ∪ B|) over distinct shingle sets."""
-    da, db = d.arr_distinct(a), d.arr_distinct(b)
-    inter = d.size(d.arr_intersect(da, db))
-    union = f"({d.size(da)} + {d.size(db)} - {inter})"
-    return f"cast(floor(1000000.0 * {inter} / {union}) as bigint)"
 
 
 # ----------------------------------------------------------------- vectors

@@ -22,27 +22,10 @@ def after_sql(ts: str, t: str) -> str:
     return f"({ts} > timestamp '{t}')"
 
 
-def before_sql(ts: str, t: str) -> str:
-    return f"({ts} < timestamp '{t}')"
-
-
 def during_sql(ts: str, t0: str, t1: str) -> str:
     """During: field contained in [t0, t1) (reference: start-inclusive,
     end-exclusive TemporalRange containment)."""
     return f"({ts} >= timestamp '{t0}' AND {ts} < timestamp '{t1}')"
-
-
-def before_or_during_sql(ts: str, t0: str, t1: str) -> str:
-    return f"({ts} < timestamp '{t1}')"
-
-
-def during_or_after_sql(ts: str, t0: str, t1: str) -> str:
-    return f"({ts} >= timestamp '{t0}')"
-
-
-def overlaps_sql(a0: str, a1: str, t0: str, t1: str) -> str:
-    """TimeOverlaps: the [a0, a1) range intersects [t0, t1)."""
-    return f"({a0} < timestamp '{t1}' AND {a1} >= timestamp '{t0}')"
 
 
 def after(col: Column | str, t: str) -> Column:

@@ -147,14 +147,6 @@ def point_in_polygons(px, py, poly_rows, ax_pad, ay_pad, bx_pad, by_pad) -> np.n
     return inside
 
 
-def point_in_bbox(px, py, lon0, lat0, lon1, lat1) -> np.ndarray:
-    """Closed-boundary bbox test (matches SQL BETWEEN semantics so the DuckDB
-    oracle join agrees exactly)."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    return (px >= lon0) & (px <= lon1) & (py >= lat0) & (py <= lat1)
-
-
 def _segments_intersect(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1) -> np.ndarray:
     """Proper/improper segment intersection, vectorized (orientations)."""
 

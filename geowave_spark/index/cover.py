@@ -80,18 +80,6 @@ def bbox_cells_udf(res: int, curve: str = "hilbert"):
     return _cov
 
 
-def grid_disk_udf(res: int, k: int, curve: str = "hilbert"):
-    """Vectorized cell -> array of cells within k Chebyshev rings (kNN /
-    distance-join candidate expansion; lon wraps, lat clamps)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _disk(cell: pd.Series) -> pd.Series:
-        d = grid.grid_disk(cell.to_numpy().astype(np.uint64), res, k, curve)
-        return pd.Series(list(d.astype(np.int64)))
-
-    return _disk
-
-
 def point_disk_cells_udf(res: int, k: int, curve: str = "hilbert"):
     """Fused point -> deduped k-ring disk cells (one Arrow round-trip).
 

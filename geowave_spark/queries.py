@@ -43,11 +43,6 @@ def _parquet_num_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(geo.lineitem_points_sql())
-
-
 DIST_MICRO = "cast(floor(sqrt((lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat)) * 1000000) as bigint)"
 
 
@@ -4176,249 +4171,3 @@ QUERIES.update(FLEET_QUERIES)
 from .queries_overlay import OVERLAY_QUERIES  # noqa: E402
 
 QUERIES.update(OVERLAY_QUERIES)
-
-# ---------------------------------------------------------------------------
-# Registry ordering: queries the driver's correctness sampler has NEVER
-# scored rotate to the FRONT (the sampler reads the registry in order),
-# followed by queries whose SEMANTICS OR PLAN CHANGED since the round
-# that last scored them, so each round's 50-query window lands on fresh
-# or re-validation-worthy families first (VERDICT r2 #7 + r4 "next" #2).
-# Every entry keeps its oracle; this reorders, never drops.
-
-# union of CORRECTNESS_r01..r04 keys (190 driver-scored queries)
-_DRIVER_SCORED_R1_R4 = frozenset({
-    "q01_pricing_summary",
-    "q02_top_revenue_orders",
-    "q03_top_customers_per_nation",
-    "q04_part_text_filter",
-    "q05_pip_rect_join",
-    "q06_pip_rect_agg",
-    "q07_distance_join_agg",
-    "q08_knn",
-    "q09_binned_agg",
-    "q100_hotspots_gi",
-    "q101_rect_overlay",
-    "q102_emerging_hotspots",
-    "q103_focal_sobel",
-    "q104_contour_segments",
-    "q108_raster_warp",
-    "q10_bbox_agg",
-    "q110_exact_span_dedup",
-    "q111_repetition_signals",
-    "q112_token_chunking",
-    "q113_trajectory_resample",
-    "q114_temporal_composite",
-    "q115_zipf_vocab",
-    "q116_embedding_outliers",
-    "q117_trending_cells",
-    "q118_graph_centrality",
-    "q119_spatiotemporal_join",
-    "q11_tile_assign_plan",
-    "q120_map_matching",
-    "q121_focal_hillshade",
-    "q122_pii_scrub",
-    "q126_rasterize_polygons",
-    "q128_cost_distance",
-    "q129_spatiotemporal_knn",
-    "q12_tile_merge_counts",
-    "q130_local_supplier_revenue",
-    "q132_flow_direction",
-    "q133_flow_accumulation",
-    "q134_watershed_basins",
-    "q135_strahler_order",
-    "q136_sessionization",
-    "q137_harris_corners",
-    "q138_edge_thinning",
-    "q139_morph_gradient",
-    "q13_image_scalars",
-    "q140_lbp_texture",
-    "q142_bpe_merge_rounds",
-    "q144_stay_points",
-    "q145_od_transitions",
-    "q146_patch_extraction",
-    "q147_kdop_hull_extremes",
-    "q149_heading_reversals",
-    "q14_pyramid_counts",
-    "q152_embedding_covariance",
-    "q153_cover_compaction",
-    "q154_viewshed_rays",
-    "q155_class_separation",
-    "q156_fuzzy_dedup",
-    "q157_semivariogram",
-    "q158_cooccurrence_lift",
-    "q159_exact_median",
-    "q15_exact_dedup",
-    "q160_decayed_counts",
-    "q161_poisson_anomaly",
-    "q162_stationary_visits",
-    "q163_triangle_clustering",
-    "q164_track_hausdorff",
-    "q165_trimmed_mean",
-    "q167_mad",
-    "q168_movement_rose",
-    "q169_knox_statistic",
-    "q16_minhash_lsh_pairs",
-    "q170_colocation_index",
-    "q171_mobility_profile",
-    "q172_interevent_moments",
-    "q173_weekly_retention",
-    "q174_hog_orientation",
-    "q175_tile_complexity",
-    "q176_home_work_anchors",
-    "q177_hourly_seasonality",
-    "q178_conversion_funnel",
-    "q17_simhash",
-    "q180_nearest_facility",
-    "q181_benford_audit",
-    "q182_cusum_changepoint",
-    "q183_footprint_iou",
-    "q184_collocations",
-    "q185_dsir_importance",
-    "q186_gravity_model",
-    "q187_kcore",
-    "q188_ripley_k",
-    "q189_ssim_pairs",
-    "q18_ngram_jaccard",
-    "q190_path_interpolation",
-    "q191_grayworld",
-    "q192_theil_sen",
-    "q193_domain_shift",
-    "q194_attribution",
-    "q195_leakage_safe_split",
-    "q196_lsh_recall_audit",
-    "q197_source_overlap",
-    "q198_psnr_verify",
-    "q199_kanon_od",
-    "q19_ann_bruteforce_topk",
-    "q200_focal_median",
-    "q201_heaps_law",
-    "q202_blur_laplacian",
-    "q203_hard_negatives",
-    "q204_int8_quant",
-    "q205_lexicon_screen",
-    "q206_containment_dedup",
-    "q207_skyline_selection",
-    "q209_hist_signature_join",
-    "q20_ann_lsh_bucketed",
-    "q210_cc_blobs",
-    "q211_segment_intersections",
-    "q212_hough_lines",
-    "q213_template_match",
-    "q214_otsu_threshold",
-    "q215_bayer_dither",
-    "q219_ppjoin_similarity",
-    "q21_text_stats",
-    "q222_power_iteration",
-    "q223_random_projection",
-    "q224_phrase_search",
-    "q225_palette_extraction",
-    "q22_langid",
-    "q230_integral_image",
-    "q238_truncation_audit",
-    "q239_block_transform_energy",
-    "q23_fingerprint_dedup",
-    "q243_tfidf_keywords",
-    "q246_kcenter_coreset",
-    "q24_kde_heatmap",
-    "q258_ivf_recall_curve",
-    "q25_numeric_stats",
-    "q267_bitplane_preview",
-    "q268_neardup_transitivity",
-    "q26_value_histogram",
-    "q272_span_token_alignment",
-    "q27_cell_histogram",
-    "q285_embedding_decontamination",
-    "q28_temporal_predicates",
-    "q29_subsample_resolution",
-    "q302_skew_salted_join",
-    "q303_skew_unsalted_join",
-    "q305_custom_crs_kde",
-    "q30_pip_rect_anti",
-    "q31_sql_geom_filter",
-    "q32_sql_geom_distance",
-    "q35_raster_stats",
-    "q36_pip_loose",
-    "q37_spatiotemporal_bins",
-    "q38_geohash_binning",
-    "q39_simhash_neardup",
-    "q40_embedding_neardup",
-    "q41_ann_ivf",
-    "q42_rollup_agg",
-    "q43_set_ops",
-    "q47_interval_join",
-    "q48_asof_join",
-    "q49_tile_resize",
-    "q50_text_search",
-    "q51_sql_within_distance",
-    "q52_filter_algebra",
-    "q53_kde_pyramid",
-    "q54_polygon_join",
-    "q55_image_polygon_join",
-    "q56_bigbig_salted_join",
-    "q57_geodesic_distance_join",
-    "q58_polygon_polygon_join",
-    "q60_knn_geodesic",
-    "q62_mercator_tiles",
-    "q63_quality_score",
-    "q64_dup_clusters",
-    "q65_polygon_bigbig_join",
-    "q67_sessionize",
-    "q82_ann_pq_adc",
-    "q83_semantic_dedup",
-    "q84_lm_familiarity",
-    "q87_zonal_stats",
-    "q88_trajectory_stats",
-    "q89_idw_interpolation",
-    "q90_change_detection",
-    "q93_spatial_autocorrelation",
-    "q94_coverage_gaps",
-    "q95_band_math",
-    "q96_decontamination",
-    "q97_json_props_rollup",
-    "q98_focal_mean",
-    "q99_bm25_scoring",
-})
-
-# placed at the VERY FRONT (ahead of the never-scored pool) so the
-# driver's sample window re-validates them this round: scored only in
-# r1, but their shared hash text / plan knobs changed in
-# r4 (WORDVAL entropy fix, adaptive kNN res, sqrt(n) IVF) and r5 (bigint
-# widening + % 2^31 bound in WORDVAL): the driver should re-score these
-# right after the never-scored pool.
-_CHANGED_SINCE_SCORED = (
-    # brand-new in r5 (polar + oblique CRS families): never scored, and
-    # their whole family (custom-CRS registry entries) has exactly one
-    # prior driver sample (q305 in r4) — score them first
-    "q306_polar_crs_grid",
-    "q307_oblique_crs_grid",
-    "q308_modis_tile_binning",
-    # r5 scale-sweep fix: sum(pid) -> sum(pid % 1000003) (raw composite
-    # keys burst int64 at sf0.1); semantics changed, re-score first
-    "q296_snapshot_diff",
-    # r5 scale-sweep fix: fixed 16-cell home grid -> sqrt(users/8)
-    # adaptive grid (the blocking contract changed above 128 users)
-    "q164_track_hausdorff",
-    # r5 scale-sweep fix: fraction-of-corpus eval/query panels pinned to
-    # fixed sets (byte-identical below sf1; linear above)
-    "q285_embedding_decontamination",
-    "q258_ivf_recall_curve",
-    # r5 scale-sweep fix: INT32 rank squares + dual-decimal rho boundary
-    "q297_order_correlation",
-    # r5 scale-sweep fix: metadata-adaptive as-of bin (plan-only,
-    # bin-size-invariant result)
-    "q48_asof_join",
-    "q08_knn",
-    "q16_minhash_lsh_pairs",
-    "q39_simhash_neardup",
-    "q41_ann_ivf",
-    "q64_dup_clusters",
-    "q81_incremental_dedup",
-    "q185_dsir_importance",
-)
-
-_changed = {k: QUERIES[k] for k in _CHANGED_SINCE_SCORED if k in QUERIES}
-_undriven = {k: v for k, v in QUERIES.items()
-             if k not in _DRIVER_SCORED_R1_R4 and k not in _changed}
-_driven = {k: v for k, v in QUERIES.items()
-           if k in _DRIVER_SCORED_R1_R4 and k not in _changed}
-QUERIES = {**_changed, **_undriven, **_driven}

@@ -56,13 +56,6 @@ def tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
     return tx, ty
 
 
-def tile_id_sql(lon: str, lat: str, z: int) -> str:
-    """Single bigint tile id ty * 2^z + tx (row-major over the pyramid
-    level, matching the engine's row-major cell convention)."""
-    tx, ty = tile_xy_sql(lon, lat, z)
-    return f"(({ty}) * {1 << z} + ({tx}))"
-
-
 # ---------------------------------------------------------------- numpy twins
 
 def merc_xy(lon, lat) -> tuple[np.ndarray, np.ndarray]:

@@ -260,20 +260,3 @@ def reproject_wkt(wkt: str, crs: str | int) -> str:
     out[1::2] = lat
     it = iter(repr(float(v)) for v in out)
     return _WKT_NUMS.sub(lambda _m: next(it), wkt)
-
-
-def reproject_wkt_udf(crs: str | int):
-    """Arrow-batched pandas UDF: WKT column in `crs` -> WKT in EPSG:4326."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: N812
-    from pyspark.sql.types import StringType
-
-    kind, zone, north = parse_crs(crs)  # validate on the driver, fail fast
-
-    @F.pandas_udf(StringType())
-    def _re(wkt: pd.Series) -> pd.Series:
-        if kind == "lonlat":
-            return wkt
-        return wkt.map(lambda w: reproject_wkt(w, crs))
-
-    return _re

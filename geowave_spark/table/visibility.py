@@ -250,9 +250,3 @@ def visibility_counts(df: DataFrame, vis_col: str = "visibility") -> DataFrame:
     analog) — one partial-agg groupBy, O(labels) shuffle."""
     return (df.groupBy(F.coalesce(F.col(vis_col), F.lit("")).alias("visibility"))
             .agg(F.count("*").alias("n_rows")))
-
-
-def field_visibility_json(mapping: Mapping[str, str]) -> str:
-    """Serialize a field->expression map the way the reference's JSON
-    handler consumes it (helper for writers)."""
-    return json.dumps(dict(mapping), separators=(",", ":"))

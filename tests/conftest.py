@@ -10,21 +10,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from geowave_spark.session import local_session
 
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("geowave-spark-tests")
-        # the default 1g driver heap dies on the adaptive-knob boundary
-        # tests (200k-event dissolve in the SHARED session after ~800
-        # accumulated tests); the box has 128 GiB
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = local_session()
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

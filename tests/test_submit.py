@@ -79,7 +79,7 @@ def test_spark_submit_checkpoint_resume(tmp_path):
 def test_spark_submit_amplified_corpus_join(tmp_path):
     """The scaling workload through the deployment shape: stage the corpus
     snapshot table, scan it, amplify the point side in flight, run the
-    flagship polygon join (bench.py --scaling's join, via spark-submit)."""
+    flagship polygon join (perfbench's pip_join, via spark-submit)."""
     sys.path.insert(0, ROOT)
     from tools.make_pyfiles_zip import build
 

@@ -21,11 +21,13 @@ Usage: python tools/audit_oracles.py [--json out.json]
 from __future__ import annotations
 
 import json
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.001"
 
@@ -48,18 +50,10 @@ def normalize(sql: str) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from geowave_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("audit_oracles")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entry.queries()
@@ -67,7 +61,7 @@ def main() -> None:
 
     test_words = set(subprocess.run(
         ["grep", "-rhoE", r"q[0-9]+[a-z_]*", "tests/"],
-        capture_output=True, text=True, cwd="/root/repo").stdout.split())
+        capture_output=True, text=True, cwd=ROOT).stdout.split())
     test_prefixes = {w.split("_")[0] for w in test_words}
 
     real_sql = type(spark).sql

@@ -7,8 +7,9 @@ match.
 """
 from __future__ import annotations
 
-import sys
 import hashlib
+import os
+import sys
 
 import time
 
@@ -18,8 +19,10 @@ import pandas as pd
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as entry_mod
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+import __spark_entry__ as entry_mod  # noqa: E402
+from geowave_spark.session import local_session  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -38,15 +41,7 @@ def norm_hash(df: pd.DataFrame) -> str:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check_correctness")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -8,19 +8,17 @@ crossJoin oracle (GeoWaveSparkSpatialJoinIT.java:228-255 analog).
 import sys, time
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from geowave_spark.sfc import grid
 from geowave_spark.geom import core as geom
+from geowave_spark.session import local_session
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 RES = 10
 
-spark = (SparkSession.builder.master("local[8]")
-         .appName("drive")
-         .config("spark.sql.shuffle.partitions", "8")
-         .getOrCreate())
+spark = local_session()
 spark.sparkContext.setLogLevel("WARN")
 
 # points: deterministic lon/lat derived from lineitem keys (SQL-expressible form)

@@ -1,15 +1,17 @@
 """Regenerate PLANS.md: formatted physical plans of the flagship queries
-with the scale-relevant properties called out.  Run from /root/repo:
+with the scale-relevant properties called out:
 
-    PYTHONPATH=/root/repo python tools/dump_plans.py
+    python tools/dump_plans.py
 """
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.001"
 
@@ -257,23 +259,17 @@ NOTES = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from geowave_spark.queries import QUERIES
+    from geowave_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     out = io.StringIO()
     out.write(
         "# PLANS — physical plans of the flagship queries\n\n"
-        "Generated by `tools/dump_plans.py` (sf0.001, local[4]; plans are\n"
+        "Generated by `tools/dump_plans.py` (sf0.001, "
+        f"local[{spark.sparkContext.defaultParallelism}]; plans are\n"
         "pre-execution AQE plans — `isFinalPlan=false` is expected).  The\n"
         "properties the engine guarantees are asserted as regression tests\n"
         "in `tests/test_plans.py`; this file is the human-readable copy.\n"
@@ -320,7 +316,7 @@ def main() -> None:
         "raycast chain is elided below for readability).\n\n"
         f"```\n{raycast}\n```\n"
     )
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write(out.getvalue())
     print("wrote PLANS.md")
     spark.stop()

@@ -60,7 +60,7 @@ def main() -> None:
     out = {"sf_dir": args.sf_dir, "master": spark.sparkContext.master}
 
     if args.amplify:
-        # same workload definition as bench.py --scaling: scan the staged
+        # same workload definition as perfbench's pip_join: scan the staged
         # Iceberg-analog image+caption snapshot table, amplify in flight
         from geowave_spark.table import corpus
 

@@ -20,7 +20,7 @@ Construction (fully deterministic, derived only from driver data):
 - region/nation: copied (fixed dimension tables at every TPC-H sf).
 
 Usage: python tools/make_scale_data.py [K] [OUT_DIR]
-Defaults: K=10, OUT_DIR=/root/repo/.scratch/sf1
+Defaults: K=10, OUT_DIR=<checkout>/.scratch/sf1
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
 
 KEY_COLS = {
@@ -126,7 +127,8 @@ def fresh_embeddings(src_tbl: pa.Table, k: int) -> pa.Table:
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+        ROOT, ".scratch", "sf1")
     os.makedirs(out_dir, exist_ok=True)
     spans: dict[str, int] = {}
     tables = {}

@@ -8,7 +8,7 @@ two scale factors and compare ratios; anything far above the ~12x
 linear+shuffle bar for a 10x decade is a suspect shape.
 
     python tools/scale_sweep.py /root/testdata/sf0.1  --json /tmp/sweep_sf01.json
-    python tools/scale_sweep.py /root/repo/.scratch/sf1 --json /tmp/sweep_sf1.json
+    python tools/scale_sweep.py .scratch/sf1 --json /tmp/sweep_sf1.json
     python tools/scale_sweep.py --compare /tmp/sweep_sf01.json /tmp/sweep_sf1.json
 
 Timing uses the `noop` sink (full computation, no driver collect, no
@@ -19,10 +19,12 @@ detection across a decade, not microbenchmarks.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def compare(a_path: str, b_path: str, bar: float = 12.0) -> int:
@@ -66,19 +68,10 @@ def main() -> int:
     if "--only" in sys.argv:
         only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
+    from geowave_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("scale_sweep")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "100g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     results: dict[str, float | str] = {}
