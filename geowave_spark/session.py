@@ -1,21 +1,23 @@
 """The one local SparkSession every in-repo entry point runs on.
 
-The bench, the CLI, the correctness gate, the tools and the test suite
-all call `local_session()`, so the configuration that is checked is the
-configuration that is timed.  Cores and heap come from the machine, not
-from constants: `local[cores]` with cores = ``$SPARK_GRAFT_CPUS`` or the
-process's CPU affinity mask, and a driver heap of half of physical RAM.
-A spark-submit job keeps the session its launcher configures.
+`bench.py`, the CLI, the correctness gate, the tools and the test suite
+all call `local_session()`, so the configuration the gate checks is the
+one `bench.py` times.  `perfbench/` builds its own session with a smaller
+heap, and a spark-submit job keeps the session its launcher configures.
+
+Cores and heap come from the machine, not from constants: `local[cores]`
+with cores = the size of the process's CPU affinity mask (`taskset`
+narrows it), and a driver heap of half of physical RAM.  Two of these
+JVMs can be alive at once -- the pytest fixture while `test_cli` runs
+CLI subprocesses, or `bench.py --isolate`'s parent while its child
+runs -- and their heap caps then add up to all of RAM before Python
+workers and off-heap memory.  No failure has been seen from it, but a
+change to the heap policy should measure that case.
 """
 
 from __future__ import annotations
 
 import os
-
-
-def _cores() -> int:
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def _half_ram_mb() -> int:
@@ -29,7 +31,7 @@ def _half_ram_mb() -> int:
 def local_session():
     from pyspark.sql import SparkSession
 
-    cores = _cores()
+    cores = len(os.sched_getaffinity(0))
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("geowave-spark")
@@ -48,8 +50,9 @@ def local_session():
         .config("spark.ui.enabled", "false")
         # no -Xms: a pinned heap is committed up front, which a box shared
         # with the Python workers cannot afford.  ParallelGC for batch
-        # throughput: G1's incremental grow/shrink between pixel-heavy
-        # queries showed up as 2-3x swings in the bench
+        # throughput.  q12, whose sf0.1 time swung 2x under G1, stays
+        # steady without -Xms: four bench.py runs on a 4-core 15.7 GiB
+        # box timed it at 4.5-5.3 s best-of-3
         .config("spark.driver.memory", f"{_half_ram_mb()}m")
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         # testdata files are tiny; split scans so map stages use all cores

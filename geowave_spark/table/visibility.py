@@ -25,7 +25,6 @@ per-row Python anywhere.
 """
 from __future__ import annotations
 
-import json
 import re
 from collections.abc import Iterable, Mapping
 

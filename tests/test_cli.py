@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def run_cli(*args, timeout=240):
-    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_GRAFT_CPUS": "4"}
+    env = {**os.environ, "PYTHONPATH": ROOT}
     proc = subprocess.run(
         [sys.executable, "-m", "geowave_spark", *args],
         capture_output=True, text=True, timeout=timeout, env=env, cwd=ROOT,

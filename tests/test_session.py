@@ -3,10 +3,7 @@ its cores and heap from the machine, so the gate, the tests and the bench
 all run one machine-sized config."""
 import os
 
-
-def _cores() -> int:
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(env) if env else len(os.sched_getaffinity(0))
+CORES = len(os.sched_getaffinity(0))
 
 
 def _mem_total_kb() -> int:
@@ -18,11 +15,11 @@ def _mem_total_kb() -> int:
 
 
 def test_master_uses_the_machine_cores(spark):
-    assert spark.sparkContext.master == f"local[{_cores()}]"
+    assert spark.sparkContext.master == f"local[{CORES}]"
 
 
 def test_shuffle_width_is_twice_the_cores(spark):
-    assert spark.conf.get("spark.sql.shuffle.partitions") == str(2 * _cores())
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(2 * CORES)
 
 
 def test_driver_heap_is_half_of_physical_ram(spark):
