@@ -91,9 +91,6 @@ class Dialect:
         fn = "filter" if self.is_spark else "list_filter"
         return f"{fn}({arr}, x -> {body_of_x})"
 
-    def arr_min(self, arr: str) -> str:
-        return f"array_min({arr})" if self.is_spark else f"list_min({arr})"
-
     def intdiv(self, a: str, b: str) -> str:
         # operands are parenthesized: div/// share precedence with *, so
         # an unwrapped `x * y div p * q` left-associates into
@@ -191,13 +188,6 @@ def shingles3_from(d: Dialect, vals: str) -> str:
 
 
 P_MINHASH = 2147483647  # 2^31 - 1 (Mersenne prime)
-
-
-def minhash_one(d: Dialect, shingle_arr: str, a: int, b: int) -> str:
-    """min over shingles of (a*(s % P) + b) % P."""
-    return d.arr_min(
-        d.xform(shingle_arr, f"({a} * (x % {P_MINHASH}) + {b}) % {P_MINHASH}")
-    )
 
 
 def band_hash(cols: list[str]) -> str:

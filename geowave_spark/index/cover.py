@@ -189,6 +189,14 @@ def polygon_cover(polys: dict[int, np.ndarray], res: int | None = None,
     order = np.argsort(pos, kind="stable")
     pos, ress, cells, lo0, la0, lo1, la1 = (
         a[order] for a in (pos, ress, cells, lo0, la0, lo1, la1))
+    # a border cell also takes the points the encoder clamps in from beyond
+    # the domain: classify it on its box stretched out to the polygon's
+    # bbox, which also keeps it from being `full` (its inflated box always
+    # reaches past the polygon), so clamped points are always refined
+    lo0 = np.where(lo0 <= grid.LON_MIN, np.minimum(lo0, bx0[pos]), lo0)
+    la0 = np.where(la0 <= grid.LAT_MIN, np.minimum(la0, by0[pos]), la0)
+    lo1 = np.where(lo1 >= grid.LON_MAX, np.maximum(lo1, bx1[pos]), lo1)
+    la1 = np.where(la1 >= grid.LAT_MAX, np.maximum(la1, by1[pos]), la1)
     ids_sorted, *edges = geom.pack_polygons(polys)
     rows = np.searchsorted(ids_sorted, pids[pos])
     keep = geom.classify_bboxes(lo0, la0, lo1, la1, rows, *edges)
@@ -198,6 +206,105 @@ def polygon_cover(polys: dict[int, np.ndarray], res: int | None = None,
         "poly_id": pids[pos[keep]], "res": ress[keep],
         "cell": cells[keep].astype(np.int64), "full": full,
     })
+
+
+# Per-cell edge windows are widened by this much (degrees): the encoder's
+# rounding can put a point just past its cell's edge, and the crossing
+# abscissa can round a few ulps past an edge's end points.
+_EDGE_MARGIN = 1e-9
+
+
+def cell_edges(polys: dict[int, np.ndarray], cover: pd.DataFrame,
+               curve: str = "hilbert") -> tuple[np.ndarray, np.ndarray]:
+    """Per-cell refine lists for the exact ray cast of a `polygon_cover`
+    frame's boundary cells.
+
+    An eastward ray from a point in a cell can only cross an edge of the
+    cell's polygon that straddles the cell's latitude band and reaches its
+    west edge; every other edge fails the ray cast's straddle test or its
+    ``px < xint`` test for every point in the cell.  Of those, an edge
+    lying wholly EAST of the cell is crossed whenever it straddles, so it
+    adds ``[ay <= lat] XOR [by <= lat]`` and needs only its end points'
+    latitudes: end points below the band always test true, those above it
+    never do, and equal values cancel in pairs (a vertex shared by two
+    such edges).  The remaining NEAR edges keep the full per-edge term.
+    Windows are widened by ``_EDGE_MARGIN``, and on the sides that touch
+    the edge of the lon/lat domain they stay open to +-inf, because the
+    encoder clamps out-of-range points into border cells.  The result is
+    bit-identical to the ray cast over all edges for finite coordinates.
+
+    Returns ``(near, ends)`` for the rows where ``cover["full"]`` is
+    false, in row order.  ``near`` is a (rows, K, 5) float64 array of
+    ``(ay, by, ax, bx - ax, by - ay)`` per near edge (`geom.rings_edges`
+    orientation: head a, tail b), padded with all-zero edges that never
+    straddle; ``ends`` is a (rows, J) array of end-point latitudes to
+    test ``<= lat`` (``-inf`` stands for an odd number of end points
+    below the band), padded with ``+inf``.
+    """
+    b = np.flatnonzero(~cover["full"].to_numpy(bool))
+    res = cover["res"].to_numpy()[b]
+    cell = cover["cell"].to_numpy()[b].astype(np.uint64)
+    x0, y0, x1, y1 = (np.empty(len(b)) for _ in range(4))
+    for r in np.unique(res):
+        sel = res == r
+        x0[sel], y0[sel], x1[sel], y1[sel] = grid.cell_bounds(cell[sel], int(r), curve)
+    m, inf = _EDGE_MARGIN, np.inf
+    west = np.where(x0 <= grid.LON_MIN, -inf, x0 - m)[:, None]
+    east = np.where(x1 >= grid.LON_MAX, inf, x1 + m)[:, None]
+    south = np.where(y0 <= grid.LAT_MIN, -inf, y0 - m)[:, None]
+    north = np.where(y1 >= grid.LAT_MAX, inf, y1 + m)[:, None]
+
+    ids_sorted, ax, ay, bx, by = geom.pack_polygons(polys)
+    rows = np.searchsorted(ids_sorted, cover["poly_id"].to_numpy()[b])
+    live = ay != by  # drops horizontal edges and the zero-length padding
+    xlo, xhi = np.minimum(ax, bx), np.maximum(ax, bx)
+    ylo, yhi = np.minimum(ay, by), np.maximum(ay, by)
+    terms = (ay, by, ax, bx - ax, by - ay)
+    near_parts, end_parts = [], []
+    step = max(1, geom._PAIR_CHUNK // ax.shape[1])
+    for s in range(0, len(b), step):
+        c = slice(s, s + step)
+        r = rows[c]
+        near = (live[r] & (ylo[r] <= north[c]) & (yhi[r] >= south[c])
+                & (xhi[r] >= west[c]) & (xlo[r] <= east[c]))
+        near_parts.append(_first(near, [t[r] for t in terms], 0.0))
+        # end points of the edges wholly east of the cell, sorted, with
+        # equal values cancelled in pairs: a value survives at the last
+        # element of a run of odd length
+        v = np.concatenate((ay[r], by[r]), axis=1)
+        on = np.tile(live[r] & (xlo[r] > east[c]), 2) & (v <= north[c])
+        v = np.sort(np.where(on, np.where(v < south[c], -inf, v), inf), axis=1)
+        idx = np.arange(v.shape[1])
+        start = np.ones(v.shape, bool)
+        start[:, 1:] = v[:, 1:] != v[:, :-1]
+        last = np.ones(v.shape, bool)
+        last[:, :-1] = start[:, 1:]
+        run_pos = idx - np.maximum.accumulate(np.where(start, idx, 0), axis=1)
+        odd = last & (run_pos % 2 == 0) & (v < inf)
+        end_parts.append(_first(odd, [v], inf)[..., 0])
+    near = _stack(near_parts, (0, 0, 5), 0.0)
+    ends = _stack(end_parts, (0, 0), inf)
+    return near, ends
+
+
+def _first(keep: np.ndarray, cols: list[np.ndarray], pad: float) -> np.ndarray:
+    """Per row, the kept entries of ``cols`` moved to the front in their
+    order, as a (rows, max kept, len(cols)) array padded with ``pad``."""
+    count = keep.sum(axis=1)
+    k = int(count.max(initial=0))
+    idx = np.argsort(~keep, axis=1, kind="stable")[:, :k]
+    out = np.stack([np.take_along_axis(a, idx, axis=1) for a in cols], axis=-1)
+    out[np.arange(k) >= count[:, None]] = pad
+    return out
+
+
+def _stack(parts: list[np.ndarray], empty: tuple, pad: float) -> np.ndarray:
+    """Concatenate row chunks whose second axis differs, padding with ``pad``."""
+    k = max((p.shape[1] for p in parts), default=0)
+    return np.concatenate(
+        [np.pad(p, [(0, 0), (0, k - p.shape[1])] + [(0, 0)] * (p.ndim - 2),
+                constant_values=pad) for p in parts]
+        or [np.zeros(empty)], axis=0)
 
 
 def rect_cover(rects: pd.DataFrame, res: int, curve: str = "hilbert",

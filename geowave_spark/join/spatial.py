@@ -1,16 +1,23 @@
-"""Spatial joins: cover -> broadcast equi-join on cell -> exact refine -> dedup.
+"""Spatial joins: cover -> broadcast equi-join on cell -> exact refine.
 
-Reference analog: `analytics/spark/.../spatial/TieredSpatialJoin.java:76-382`
-(in /root/reference) — both sides keyed by (tier, cell), per-tier cogroup +
-exact JTS predicate, cross-tier reprojection, dedup by key, subtractByKey for
-negative predicates.  Re-expressed Spark-first:
+Reference analog: GeoWave's
+`analytics/spark/.../spatial/TieredSpatialJoin.java:76-382` — both sides
+keyed by (tier, cell), per-tier cogroup + exact JTS predicate, cross-tier
+reprojection, dedup by key, subtractByKey for negative predicates.
+Re-expressed Spark-first:
 
-- per-tier cogroup        -> single equi-join on (res, cell); the small side's
+- per-tier cogroup        -> one equi-join on cell per tier; the small side's
                              candidate cells are BROADCAST (north rule)
 - cross-tier reprojection -> the point side derives parent cells per active
-                             polygon resolution with a vectorized parent UDF
-- exact JTS refine        -> vectorized numpy predicates inside mapInPandas
-- reduceByKey dedup       -> dropDuplicates on stable row ids
+                             polygon resolution in closed-form integer SQL
+- exact JTS refine        -> a flat codegen'd ray cast (or range / distance
+                             predicate) in the broadcast join's own condition;
+                             the polygon join reads each boundary cell's
+                             edge list off its broadcast row
+- reduceByKey dedup       -> none where pairs are unique by construction
+                             (point joins: one cell per point per tier);
+                             dropDuplicates on id pairs where a pair can meet
+                             in several cells (polygon x polygon)
 - subtractByKey           -> left_anti join on the matched-id set
 
 Scale notes (100 TB design): the only shuffle is the equi-join itself, and it
@@ -24,7 +31,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..geom import core as geom
 from ..index import cover as cov
@@ -32,19 +40,47 @@ from ..sfc import grid
 from ..table.views import ensure_arrow
 
 
+def _raycast_terms(lon: str, lat: str, edges) -> list[str]:
+    """Ray-cast terms, one per ``(ay, by, ax, dx, dy)`` tuple of SQL
+    operands: edge head (ax, ay), tail (bx, by), ``dx = bx - ax`` and
+    ``dy = by - ay``.
+
+    Per edge, ``cond AND px < dx*(py-ay)/dy+ax``.  Multiply-then-divide
+    order matches the numpy kernels, so IEEE-double results are
+    bit-identical whether ``dx``/``dy`` are computed in SQL or stored.
+    The division sits inside the CASE branch (lazily evaluated) where
+    ``cond`` guarantees ay != by -- no divide-by-zero even under ANSI mode.
+    """
+    return [
+        f"(CASE WHEN ({ay} > {lat}) != ({by} > {lat}) "
+        f"THEN {lon} < {dx} * ({lat} - {ay}) / {dy} + {ax} "
+        f"ELSE false END)"
+        for ay, by, ax, dx, dy in edges
+    ]
+
+
+def _xor_sql(terms: list[str]) -> str:
+    """Left-nested XOR chain: `a != b != c` is a parse error in DuckDB
+    (comparison ops are non-associative there), so the oracle twins need
+    the parens."""
+    if not terms:
+        return "false"
+    expr = terms[0]
+    for t in terms[1:]:
+        expr = f"({expr} != {t})"
+    return expr
+
+
+def _edge(ax: str, ay: str, bx: str, by: str) -> tuple[str, ...]:
+    return ay, by, ax, f"({bx} - {ax})", f"({by} - {ay})"
+
+
 def raycast_flat_sql(lon: str, lat: str, max_nv: int) -> str:
     """Spark-SQL twin of `geom.point_in_polygon`: a flat XOR chain of
     ``max_nv`` edge terms over PRIMITIVE vertex columns ``vx0..vy{K-1}``
     — whole-stage-codegen-able (an `aggregate` higher-order lambda is
-    CodegenFallback and ~10x slower; array `element_at` terms force the
-    broadcast row's arrays to be copied into every candidate row).
-
-    Per edge i (with j its predecessor, wrapping), XOR-accumulate
-    ``cond AND px < (xj-xi)*(py-yi)/(yj-yi)+xi``.  Multiply-then-divide
-    order matches the numpy kernel, so IEEE-double results are
-    bit-identical.  The division sits inside the CASE branch (lazily
-    evaluated) where ``cond`` guarantees yi != yj — no divide-by-zero
-    even under ANSI mode.
+    CodegenFallback and ~10x slower).  Edge i runs from its predecessor
+    vertex j (wrapping) to vertex i.
 
     Vertex columns must be PADDED to ``max_nv`` by repeating vertex 0:
     the real closing edge (v[n-1] -> v[0]) appears at term i=n, and every
@@ -52,21 +88,10 @@ def raycast_flat_sql(lon: str, lat: str, max_nv: int) -> str:
     identically false — results stay bit-identical for any true vertex
     count n <= max_nv.
     """
-    terms = []
-    for i in range(max_nv):
-        j = max_nv - 1 if i == 0 else i - 1  # predecessor vertex
-        xi, yi, xj, yj = f"vx{i}", f"vy{i}", f"vx{j}", f"vy{j}"
-        terms.append(
-            f"(CASE WHEN ({yi} > {lat}) != ({yj} > {lat}) "
-            f"THEN {lon} < ({xj} - {xi}) * ({lat} - {yi}) / ({yj} - {yi}) + {xi} "
-            f"ELSE false END)"
-        )
-    # left-nested XOR: `a != b != c` is a parse error in DuckDB (comparison
-    # ops are non-associative there), so the oracle twin needs the parens
-    expr = terms[0]
-    for t in terms[1:]:
-        expr = f"({expr} != {t})"
-    return expr
+    j = [(i - 1) % max_nv for i in range(max_nv)]
+    return _xor_sql(_raycast_terms(lon, lat, [
+        _edge(f"vx{i}", f"vy{i}", f"vx{j[i]}", f"vy{j[i]}") for i in range(max_nv)
+    ]))
 
 
 def raycast_edges_sql(lon: str, lat: str, max_ne: int,
@@ -83,19 +108,22 @@ def raycast_edges_sql(lon: str, lat: str, max_ne: int,
     with fewer edges are padded with zero-length edges (head == tail), a
     crossing condition that is identically false.
     """
-    terms = []
-    for i in range(max_ne):
-        xi, yi = f"{prefix}ax{i}", f"{prefix}ay{i}"
-        xj, yj = f"{prefix}bx{i}", f"{prefix}by{i}"
-        terms.append(
-            f"(CASE WHEN ({yi} > {lat}) != ({yj} > {lat}) "
-            f"THEN {lon} < ({xj} - {xi}) * ({lat} - {yi}) / ({yj} - {yi}) + {xi} "
-            f"ELSE false END)"
-        )
-    expr = terms[0]
-    for t in terms[1:]:
-        expr = f"({expr} != {t})"
-    return expr
+    return _xor_sql(_raycast_terms(lon, lat, [
+        _edge(f"{prefix}ax{i}", f"{prefix}ay{i}", f"{prefix}bx{i}", f"{prefix}by{i}")
+        for i in range(max_ne)
+    ]))
+
+
+def raycast_cell_sql(lon: str, lat: str, k_near: int, k_ends: int) -> str:
+    """The ray cast over one boundary cell's refine lists
+    (`cover.cell_edges`), packed in the non-null ``array<double>`` column
+    ``edges``: ``k_near`` full edge terms over ``ay, by, ax, dx, dy`` at
+    ``5i..5i+4``, then ``k_ends`` end-point tests ``v <= lat``.  Each
+    element is read in place from the broadcast row; nothing is copied
+    into the output rows."""
+    near = [tuple(f"edges[{5 * i + c}]" for c in range(5)) for i in range(k_near)]
+    ends = [f"(edges[{5 * k_near + j}] <= {lat})" for j in range(k_ends)]
+    return _xor_sql(_raycast_terms(lon, lat, near) + ends)
 
 
 def point_in_polygon_join(
@@ -119,13 +147,24 @@ def point_in_polygon_join(
 
     Polygons are covered adaptively (each at its own tier, cells trimmed to
     the exact geometry); points are encoded once at ``data_res`` and
-    re-projected to each coarser active tier by a parent-cell UDF.
+    re-projected to each coarser active tier by closed-form integer SQL.
 
-    Boundary-cell candidates are refined by the exact ray cast, evaluated
-    as a flat whole-stage-codegen XOR chain (`raycast_edges_sql`) inside
-    the second broadcast join's condition — single pass over the point
-    side, ZERO Python stages, bit-identical to `geom.point_in_rings` (same
-    per-edge formula, IEEE doubles).
+    Each tier is ONE BroadcastHashJoin with the condition
+    ``cell = jcell AND (full OR raycast_K)``.  Candidates in a cell lying
+    fully inside its polygon match without a refine.  Each boundary cell
+    carries its own refine lists (`cover.cell_edges`): the polygon edges
+    an eastward ray from that cell can cross, where edges wholly east of
+    the cell collapse to end-point latitude tests.  The refine is a flat
+    whole-stage-codegen XOR chain over K near-edge terms and J end-point
+    tests, K and J the largest counts over the tier's boundary cells
+    (`raycast_cell_sql`) — single pass over the point side, zero Python
+    stages, bit-identical to `geom.point_in_rings` (every dropped edge
+    fails the straddle or the ``px < xint`` test, every east edge passes
+    ``px < xint``, and every near edge uses the same per-edge formula on
+    IEEE doubles).  The chain's length follows the edges near one cell,
+    not the polygon's vertex count, so the generated join stays far under
+    HotSpot's 8,000-byte JIT limit.  The broadcast schema is non-nullable
+    and interior cells carry an empty array.
 
     ``single_tier_cells``: when re-covering EVERY polygon at the finest
     active tier keeps the total broadcast cover under this budget, the
@@ -167,69 +206,40 @@ def point_in_polygon_join(
     # closed-form row-major encode: the big point side never enters Python
     pts_c = cov.add_point_cells_jvm(pts, lon, lat, data_res)
 
-    # JVM ray-cast: per-geometry EDGE arrays ride the broadcast cover;
-    # the exact even-odd PIP is a flat codegen'd XOR chain over all ring
-    # edges (holes/MultiPolygon included) — no Python process anywhere in
-    # the join, and `full OR raycast` short-circuits per row, so the whole
-    # match is ONE filter in ONE pass
-    max_ne = max(len(geom.rings_edges(v)[0]) for v in polys.values())
-    refine_pred = F.expr(raycast_edges_sql(lon, lat, max_ne))
-
-    # per-poly bbox + edges live on a ONE-ROW-PER-POLYGON relation, not
-    # on the (much larger) per-cell cover: the cover broadcast stays tiny
-    # (cell, poly_id, full) and the per-job broadcast build cost with it
-    bbox = {
-        p: geom.poly_bbox(v) for p, v in polys.items()
-    }
-    poly_ids = sorted(polys)
-    poly_pdf = pd.DataFrame({"jpoly": poly_ids})
-    poly_pdf[["bx0", "by0", "bx1", "by1"]] = pd.DataFrame(
-        [bbox[p] for p in poly_ids]
-    )
-    # primitive edge columns, padded with zero-length edges
-    # (see raycast_edges_sql); pack_polygons sorts ids identically
-    _ids, eax, eay, ebx, eby = geom.pack_polygons(polys)
-    for i in range(max_ne):
-        poly_pdf[f"eax{i}"] = eax[:, i]
-        poly_pdf[f"eay{i}"] = eay[:, i]
-        poly_pdf[f"ebx{i}"] = ebx[:, i]
-        poly_pdf[f"eby{i}"] = eby[:, i]
-    poly_df = spark.createDataFrame(poly_pdf)
-
+    # one join per tier; boundary cells carry their refine lists, interior
+    # cells an empty array, so the broadcast grows with boundary cells
+    # only.  The XOR chain reads edges[] only in the ELSE branch, which
+    # codegen evaluates lazily: interior rows never index it
+    schema = T.StructType([
+        T.StructField("cell", T.LongType(), False),
+        T.StructField("poly_id", T.LongType(), False),
+        T.StructField("full", T.BooleanType(), False),
+        T.StructField("edges", T.ArrayType(T.DoubleType(), False), False),
+    ])
     matched_parts = []
-    for r in sorted(cover_pdf["res"].unique()):
-        sub = cover_pdf[cover_pdf["res"] == r][["poly_id", "cell", "full"]]
-        cover_df = spark.createDataFrame(sub)
+    for r, sub in cover_pdf.groupby("res"):
+        full = sub["full"].to_numpy()
+        near, ends = cov.cell_edges(polys, sub, curve="rowmajor")
+        lists = np.hstack((near.reshape(len(near), -1), ends))
+        offsets = np.zeros(len(sub) + 1, dtype=np.int32)
+        offsets[1:] = np.cumsum(np.where(full, 0, lists.shape[1]))
+        cover_df = spark.createDataFrame(pa.table({
+            "cell": pa.array(sub["cell"].to_numpy(np.int64)),
+            "poly_id": pa.array(sub["poly_id"].to_numpy(np.int64)),
+            "full": pa.array(full),
+            "edges": pa.ListArray.from_arrays(pa.array(offsets), pa.array(lists.ravel())),
+        }), schema)
         side = (
             pts_c.withColumn("jcell", cov.parent_cell_expr("cell", data_res, int(r)))
             if int(r) < data_res
             else pts_c.withColumn("jcell", F.col("cell"))
         )
-        # join1: cell -> (poly_id, full) candidates
-        cand = side.join(
-            F.broadcast(cover_df), on=side["jcell"] == cover_df["cell"]
-        ).select(pid_col, lon, lat, "poly_id", "full")
-        # join2: poly_id -> (bbox, vertices), one row per polygon; the bbox
-        # reject runs inside the join condition, so candidates that cannot
-        # pass the exact PIP are rejected before any refine.
-        # Interior/boundary split (XZ-order idea): candidates whose cell is
-        # FULLY inside the polygon are matches by construction — zero
-        # refine traffic; only boundary-cell candidates pay the exact
-        # refine.  Uniqueness is preserved (a cell is full xor partial).
-        base_cond = (
-            (cand["poly_id"] == poly_df["jpoly"])
-            & (cand[lon] >= poly_df["bx0"]) & (cand[lon] <= poly_df["bx1"])
-            & (cand[lat] >= poly_df["by0"]) & (cand[lat] <= poly_df["by1"])
-        )
-        # single pass, both joins fused in one codegen stage: the refine
-        # sits LAST in join2's condition, inside a CASE WHEN whose
-        # branches codegen lazily — interior candidates never evaluate
-        # the raycast, and no vertex column materializes into output rows
+        refine = raycast_cell_sql(lon, lat, near.shape[1], ends.shape[1])
         matched_parts.append(
-            cand.join(
-                F.broadcast(poly_df),
-                on=base_cond
-                & F.when(cand["full"], F.lit(True)).otherwise(refine_pred),
+            side.join(
+                F.broadcast(cover_df),
+                on=(side["jcell"] == cover_df["cell"])
+                & F.when(cover_df["full"], F.lit(True)).otherwise(F.expr(refine)),
             ).select(pid_col, "poly_id")
         )
 

@@ -138,14 +138,23 @@ def resumable_write(
 
 
 def load(spark, out_dir: str) -> DataFrame:
-    """Read back a checkpointed dataset (zero-byte empty markers excluded)."""
+    """Read back a checkpointed dataset (zero-byte empty markers excluded).
+
+    The schema comes from the first file's footer, read on the driver:
+    every part is written from the same Arrow conversion, and Spark's own
+    inference would start a job to read that footer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from ..table.snapshots import read_files
+
     files = [
         os.path.join(out_dir, f)
         for f in sorted(os.listdir(out_dir))
         if f.startswith("part-") and f.endswith(".parquet")
         and os.path.getsize(os.path.join(out_dir, f)) > 0
     ]
-    return spark.read.parquet(*files)
+    return read_files(spark, files, from_arrow_schema(pq.read_schema(files[0])))
 
 
 def delete_where(spark, out_dir: str, condition_sql: str) -> dict:

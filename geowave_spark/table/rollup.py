@@ -33,9 +33,11 @@ isolation and time travel on the rollup for free.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: N812
+from pyspark.sql.types import StructType
 
 from . import snapshots as snap
 
@@ -86,7 +88,8 @@ def refresh_rollup(
         return summary | {"mode": "incremental", "files_scanned": 0}
 
     fresh = (
-        spark.read.parquet(*[os.path.join(src, f["path"]) for f in files])
+        snap.read_files(spark, [os.path.join(src, f["path"]) for f in files],
+                        StructType.fromJson(json.loads(m["schema"])))
         .groupBy(_bucket_expr(time_col, bucket), *keys)
         .agg(
             F.count("*").alias("n"),

@@ -536,6 +536,27 @@ def plan_files(
     return [f for f in files if _file_matches(f["stats"], prune)], len(files)
 
 
+def read_files(spark: SparkSession, paths: list[str], schema: StructType) -> DataFrame:
+    """Read parquet files that the caller already names, building the
+    DataFrame without a Spark job.
+
+    Above ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
+    (32 by default) Spark would list them again with a distributed job,
+    so the threshold is raised for this one read; and schema inference
+    would start a job to read a footer, so the caller passes the schema.
+    """
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(max(len(paths), int(spark.conf.get(key)))))
+    try:
+        return spark.read.schema(schema).parquet(*paths)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def scan(
     spark: SparkSession,
     path: str,
@@ -553,24 +574,11 @@ def scan(
     """
     m = load_manifest(path, snapshot)
     kept, _total = plan_files(path, snapshot, prune)
+    schema = StructType.fromJson(json.loads(m["schema"]))
     if kept:
-        # the manifest already names every file; above this threshold (32
-        # by default) Spark would re-list them with a distributed job while
-        # the DataFrame is built, so raise it for this one read
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, str(max(len(kept), int(spark.conf.get(key)))))
-        try:
-            df = spark.read.schema(StructType.fromJson(json.loads(m["schema"]))).parquet(
-                *[os.path.join(path, f["path"]) for f in kept]
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        df = read_files(spark, [os.path.join(path, f["path"]) for f in kept], schema)
     else:
-        df = spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
+        df = spark.createDataFrame([], schema)
     if where:
         df = df.filter(where)
     if columns:
@@ -597,8 +605,7 @@ def delete_where(spark: SparkSession, path: str, condition_sql: str, **commit_kw
     # are heterogeneous, and a bare read would take one file's schema and
     # silently drop the others' columns in the rewrite
     tbl_schema = StructType.fromJson(json.loads(base["schema"]))
-    full = spark.read.schema(tbl_schema).parquet(
-        *[os.path.join(path, f["path"]) for f in files])
+    full = read_files(spark, [os.path.join(path, f["path"]) for f in files], tbl_schema)
     hit = (
         full.filter(condition_sql)
         .select(F.input_file_name().alias("f"))
@@ -613,8 +620,8 @@ def delete_where(spark: SparkSession, path: str, condition_sql: str, **commit_kw
     snap = base["snapshot"] + 1
     new_entries: list[dict] = []
     if affected:
-        keep = spark.read.schema(tbl_schema).parquet(
-            *[os.path.join(path, f["path"]) for f in affected]
+        keep = read_files(
+            spark, [os.path.join(path, f["path"]) for f in affected], tbl_schema
         ).filter(f"NOT ({condition_sql})")
         new_entries = _stage_files(
             keep, path, snap, base.get("cluster_by"), max(1, len(affected))
@@ -661,8 +668,8 @@ def merge_into(
         raise ValueError("merge source has duplicate keys — not a function "
                          "of the merge key")
     files = base["files"]
-    full = spark.read.schema(tbl_schema).parquet(
-        *[os.path.join(path, f["path"]) for f in files]
+    full = read_files(
+        spark, [os.path.join(path, f["path"]) for f in files], tbl_schema
     ) if files else spark.createDataFrame([], tbl_schema)
     keys = src.select(*key_cols).dropDuplicates()
     # pin input_file_name to the scan BEFORE the join (after a join the
@@ -679,8 +686,8 @@ def merge_into(
     snap = base["snapshot"] + 1
     new_entries: list[dict] = []
     if affected:
-        aff = spark.read.schema(tbl_schema).parquet(
-            *[os.path.join(path, f["path"]) for f in affected])
+        aff = read_files(
+            spark, [os.path.join(path, f["path"]) for f in affected], tbl_schema)
         kept = aff.join(F.broadcast(keys), key_cols, "left_anti")
         matched_src = src.join(
             full.select(*key_cols).dropDuplicates(), key_cols, "left_semi")
@@ -779,8 +786,7 @@ def incremental_scan(
     schema = StructType.fromJson(json.loads(m["schema"]))
     if not new:
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(
-        *[os.path.join(path, f["path"]) for f in new])
+    return read_files(spark, [os.path.join(path, f["path"]) for f in new], schema)
 
 
 def compact(
@@ -792,9 +798,8 @@ def compact(
     base = load_manifest(path)
     total = sum(f["rows"] for f in base["files"])
     n = max(1, -(-total // target_rows))
-    df = spark.read.schema(
-        StructType.fromJson(json.loads(base["schema"]))
-    ).parquet(*[os.path.join(path, f["path"]) for f in base["files"]])
+    df = read_files(spark, [os.path.join(path, f["path"]) for f in base["files"]],
+                    StructType.fromJson(json.loads(base["schema"])))
     snap = base["snapshot"] + 1
     entries = _stage_files(df, path, snap, base.get("cluster_by"), n)
     m = _new_manifest(
@@ -828,9 +833,8 @@ def optimize(
     base = load_manifest(path)
     total = sum(f["rows"] for f in base["files"])
     n = max(1, -(-total // target_rows))
-    df = spark.read.schema(
-        StructType.fromJson(json.loads(base["schema"]))
-    ).parquet(*[os.path.join(path, f["path"]) for f in base["files"]])
+    df = read_files(spark, [os.path.join(path, f["path"]) for f in base["files"]],
+                    StructType.fromJson(json.loads(base["schema"])))
     snap = base["snapshot"] + 1
     entries = _stage_files(df, path, snap, cluster_by, n)
     m = _new_manifest(

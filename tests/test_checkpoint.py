@@ -38,6 +38,28 @@ def test_clean_write_and_load_roundtrip(spark, sf_dir, out_dir):
     assert all({"pid", "rows", "bytes", "wall_s", "app_id", "key"} <= m.keys() for m in metrics)
 
 
+def test_load_of_many_parts_starts_no_job(spark, out_dir):
+    """Loading a checkpoint of more parts than Spark's parallel-listing
+    threshold (32) starts no Spark job: the directory listing already
+    names the files and the schema comes from one footer read on the
+    driver.  The threshold is restored afterwards and every row is read."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    df = spark.range(4000).selectExpr("id", "cast(id % 13 as double) AS value")
+    checkpoint.resumable_write(df, out_dir, key="id", num_partitions=40)
+    before = spark.conf.get(key, None)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-load-plan", "load build only")
+    try:
+        back = checkpoint.load(spark, out_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        assert list(sc.statusTracker().getJobIdsForGroup("checkpoint-load-plan")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert spark.conf.get(key, None) == before
+    assert back.count() == 4000
+    assert back.select("id").distinct().count() == 4000
+
+
 def test_preempted_run_resumes_without_rework(spark, sf_dir, out_dir):
     df = _src(spark, sf_dir)
     # first attempt: partition 4 is preempted -> job fails, but earlier

@@ -79,6 +79,36 @@ def test_polygon_join_jvm_refine_has_no_python(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan
 
 
+def test_polygon_join_of_48_gons_stays_in_codegen(spark):
+    """With 48-gons every BroadcastHashJoin in the final adaptive plan sits
+    inside whole-stage codegen (``*(n)``).  The edges ride one array
+    column, so the broadcast row does not widen with the vertex count; a
+    join whose row passes spark.sql.codegen.maxFields (100) columns drops
+    out of codegen and runs interpreted."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from geowave_spark.geom import core as geom
+    from geowave_spark.join import spatial
+
+    pts = spark.range(0, 1000).select(
+        F.col("id").alias("pid"),
+        (F.col("id") % 360 - 180.0).alias("lon"),
+        (F.col("id") % 180 - 90.0).alias("lat"),
+    )
+    polys = {i: geom.regular_polygon(i * 10.0 - 120, i * 5.0 - 30, 3.0, 48)
+             for i in range(5)}
+    df = spatial.point_in_polygon_join(spark, pts, polys, data_res=7)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    joins = [ln for ln in final.splitlines() if "BroadcastHashJoin" in ln]
+    assert joins
+    assert all(re.search(r"\*\(\d+\) BroadcastHashJoin", ln) for ln in joins), plan
+
+
 def test_distance_join_is_broadcast(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q07_distance_join_agg")
     assert "BroadcastHashJoin" in plan

@@ -514,3 +514,110 @@ def test_spatiotemporal_knn_matches_brute_force(spark):
             broadcast_queries=bcast,
         ).toPandas()
         assert sorted(map(tuple, got.to_numpy().tolist())) == exp_rows
+
+
+# --- per-cell edge lists: exactness at cell and domain edges ---------------
+
+_RES = 8  # data resolution of the edge-list exactness cases
+_W, _H = 360.0 / (1 << _RES), 180.0 / (1 << _RES)  # cell size at _RES
+
+
+def _edge_case_polys():
+    """Polygons whose refine depends on the per-cell edge windows."""
+    g = lambda i, j: (-180.0 + i * _W, -90.0 + j * _H)  # noqa: E731  grid node
+    notch = [g(140, 140), g(150, 140), g(150, 150), g(145, 145), g(140, 150)]
+    return {
+        # left vertex 1e-16 north of the lat-0 grid line: points there
+        # encode into the row below, so only the margin keeps the edge
+        # leaving that vertex upward in their cell's list
+        1: np.array([10.0, 1e-16, 13.0, -5.0, 16.0, 0.0, 13.0, 5.0]),
+        # every vertex on a grid line, with a notch
+        2: np.array(notch).ravel(),
+        # square with a hole, and a two-triangle MultiPolygon
+        3: [np.array([-40.0, -40.0, -20.0, -40.0, -20.0, -20.0, -40.0, -20.0]),
+            np.array([-35.0, -35.0, -25.0, -35.0, -30.0, -25.0])],
+        4: [np.array([-60.0, 40.0, -52.0, 40.0, -56.0, 47.0]),
+            np.array([-60.0, 60.0, -52.0, 60.0, -56.0, 67.0])],
+        # touching the domain edge: the north-east corner, and the
+        # antimeridian on the west
+        5: np.array([170.0, 60.0, 180.0, 60.0, 180.0, 90.0, 170.0, 90.0]),
+        6: np.array([-180.0, -10.0, -170.0, 0.0, -180.0, 10.0]),
+        # reaching past the domain edge: the encoder clamps points beyond
+        # it into border cells, so border windows must stay open there
+        7: np.array([-190.0, 20.0, -170.0, 20.0, -170.0, 30.0, -190.0, 30.0]),
+        8: np.array([0.0, 80.0, 10.0, 80.0, 10.0, 100.0, 5.0, 95.0, 0.0, 100.0]),
+        9: np.array([20.0, 70.0, 40.0, 70.0, 40.0, 100.0, 20.0, 100.0]),
+        10: np.array([-20.0, -100.0, 0.0, -100.0, -10.0, -80.0]),
+    }
+
+
+def _edge_case_points(polys) -> pd.DataFrame:
+    """Grid-line and grid-corner points over every polygon's bbox, each
+    polygon vertex, all of them nudged by one ulp, plus named points,
+    some of them non-finite."""
+    xs, ys = [], []
+    for g in polys.values():
+        x0, y0, x1, y1 = geom.poly_bbox(g)
+        gx = -180.0 + _W * np.arange(np.floor((x0 + 180.0) / _W) - 1,
+                                     np.ceil((x1 + 180.0) / _W) + 2)
+        gy = -90.0 + _H * np.arange(np.floor((y0 + 90.0) / _H) - 1,
+                                    np.ceil((y1 + 90.0) / _H) + 2)
+        gx = np.concatenate((gx, gx + _W / 2))
+        gy = np.concatenate((gy, gy + _H / 2))
+        mx, my = np.meshgrid(gx, gy)
+        xs.append(mx.ravel())
+        ys.append(my.ravel())
+        for r in geom.as_rings(g):
+            xs.append(r[:, 0])
+            ys.append(r[:, 1])
+    named = np.array([
+        (10.0 - 1e-6, 1e-16), (10.0 - 1e-6, 0.0), (12.0, 1e-16),
+        (-195.0, 25.0), (-185.0, 25.0), (-175.0, 25.0), (-200.0, 0.0),
+        (4.0, 97.0), (2.0, 97.0), (30.0, 105.0), (30.0, 95.0),
+        (175.0, 95.0), (185.0, 75.0), (-10.0, -95.0), (-10.0, -105.0),
+        (-30.0, -30.0), (-38.0, -38.0), (-56.0, 42.0), (-56.0, 62.0),
+        # non-finite coordinates are inside no polygon
+        (np.nan, 25.0), (-175.0, np.nan), (np.inf, 75.0), (30.0, np.inf),
+    ])
+    x = np.concatenate(xs + [named[:, 0]])
+    y = np.concatenate(ys + [named[:, 1]])
+    x = np.concatenate((x, np.nextafter(x, np.inf), np.nextafter(x, -np.inf),
+                        x, x))
+    y = np.concatenate((y, y, y, np.nextafter(y, np.inf),
+                        np.nextafter(y, -np.inf)))
+    return pd.DataFrame({"pid": np.arange(len(x), dtype=np.int64),
+                         "lon": x, "lat": y})
+
+
+@pytest.fixture(scope="module")
+def edge_case(spark):
+    polys = _edge_case_polys()
+    pdf = _edge_case_points(polys)
+    want = sorted(
+        (int(p), int(q)) for q, g in polys.items()
+        for p in pdf["pid"].to_numpy()[geom.point_in_rings(pdf["lon"], pdf["lat"], g)])
+    return polys, pdf, spark.createDataFrame(pdf).cache(), want
+
+
+@pytest.mark.parametrize("single_tier", [262_144, 0])
+def test_edge_lists_exact_at_cell_and_domain_edges(spark, edge_case, single_tier):
+    """The per-cell edge lists keep the join bit-identical to
+    `geom.point_in_rings` for points on cell edges and corners, polygon
+    vertices on grid lines, holes and MultiPolygons, polygons touching or
+    crossing +-180/+-90, out-of-domain points clamped into border cells
+    and non-finite points -- on the single-tier and the tiered path, and
+    in anti mode."""
+    polys, pdf, pts, want = edge_case
+    got = spatial.point_in_polygon_join(
+        spark, pts, polys, data_res=_RES, single_tier_cells=single_tier)
+    assert sorted(map(tuple, got.toPandas()[["pid", "poly_id"]]
+                      .to_numpy().tolist())) == want
+    neg = spatial.point_in_polygon_join(
+        spark, pts, polys, data_res=_RES, single_tier_cells=single_tier,
+        negative=True)
+    assert sorted(neg.toPandas()["pid"]) == sorted(
+        set(pdf["pid"]) - {p for p, _ in want})
+    # the cases reach the paths they are here for
+    assert {1, 7, 8, 9} <= {q for _, q in want}
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert ("Union" in plan) == (not single_tier)  # tiered: one join per tier

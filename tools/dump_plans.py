@@ -308,11 +308,11 @@ def main() -> None:
     )
     out.write(
         "\n## point_in_polygon_join (engine API)\n\n"
-        "Single pass, fully JVM: two chained BroadcastHashJoins fused in "
-        "one codegen stage — cell -> (poly_id, full), then poly_id -> "
-        "(bbox, padded vertex columns) with the bbox reject and the lazy "
-        "CASE WHEN raycast in the second join's condition.  No Python "
-        "node, no Exchange, no dedup (pairs unique by construction; the "
+        "Single pass, fully JVM: one BroadcastHashJoin per tier in one "
+        "codegen stage, cell -> (poly_id, full, edges) on a non-nullable "
+        "broadcast, with the lazy CASE WHEN raycast over the boundary "
+        "cell's own edge list in the join's condition.  No Python node, "
+        "no Exchange, no dedup (pairs unique by construction; the "
         "raycast chain is elided below for readability).\n\n"
         f"```\n{raycast}\n```\n"
     )
