@@ -214,10 +214,10 @@ def polygon_cover(polys: dict[int, np.ndarray], res: int | None = None,
 _EDGE_MARGIN = 1e-9
 
 
-def cell_edges(polys: dict[int, np.ndarray], cover: pd.DataFrame,
-               curve: str = "hilbert") -> tuple[np.ndarray, np.ndarray]:
-    """Per-cell refine lists for the exact ray cast of a `polygon_cover`
-    frame's boundary cells.
+def cell_edges(polys: dict[int, np.ndarray],
+               cover: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Per-cell refine lists for the exact ray cast of a row-major
+    `polygon_cover` frame's boundary cells.
 
     An eastward ray from a point in a cell can only cross an edge of the
     cell's polygon that straddles the cell's latitude band and reaches its
@@ -231,7 +231,8 @@ def cell_edges(polys: dict[int, np.ndarray], cover: pd.DataFrame,
     Windows are widened by ``_EDGE_MARGIN``, and on the sides that touch
     the edge of the lon/lat domain they stay open to +-inf, because the
     encoder clamps out-of-range points into border cells.  The result is
-    bit-identical to the ray cast over all edges for finite coordinates.
+    bit-identical to the ray cast over all edges for every point that
+    reaches the join (a NaN coordinate encodes to a null cell).
 
     Returns ``(near, ends)`` for the rows where ``cover["full"]`` is
     false, in row order.  ``near`` is a (rows, K, 5) float64 array of
@@ -239,7 +240,9 @@ def cell_edges(polys: dict[int, np.ndarray], cover: pd.DataFrame,
     orientation: head a, tail b), padded with all-zero edges that never
     straddle; ``ends`` is a (rows, J) array of end-point latitudes to
     test ``<= lat`` (``-inf`` stands for an odd number of end points
-    below the band), padded with ``+inf``.
+    below the band), padded with NaN: Spark orders NaN above ``+inf``, so
+    a pad never tests true, not even for a point at ``lat = +inf`` that
+    the encoder clamps into the top row.
     """
     b = np.flatnonzero(~cover["full"].to_numpy(bool))
     res = cover["res"].to_numpy()[b]
@@ -247,7 +250,8 @@ def cell_edges(polys: dict[int, np.ndarray], cover: pd.DataFrame,
     x0, y0, x1, y1 = (np.empty(len(b)) for _ in range(4))
     for r in np.unique(res):
         sel = res == r
-        x0[sel], y0[sel], x1[sel], y1[sel] = grid.cell_bounds(cell[sel], int(r), curve)
+        x0[sel], y0[sel], x1[sel], y1[sel] = grid.cell_bounds(
+            cell[sel], int(r), "rowmajor")
     m, inf = _EDGE_MARGIN, np.inf
     west = np.where(x0 <= grid.LON_MIN, -inf, x0 - m)[:, None]
     east = np.where(x1 >= grid.LON_MAX, inf, x1 + m)[:, None]
@@ -281,9 +285,9 @@ def cell_edges(polys: dict[int, np.ndarray], cover: pd.DataFrame,
         last[:, :-1] = start[:, 1:]
         run_pos = idx - np.maximum.accumulate(np.where(start, idx, 0), axis=1)
         odd = last & (run_pos % 2 == 0) & (v < inf)
-        end_parts.append(_first(odd, [v], inf)[..., 0])
+        end_parts.append(_first(odd, [v], np.nan)[..., 0])
     near = _stack(near_parts, (0, 0, 5), 0.0)
-    ends = _stack(end_parts, (0, 0), inf)
+    ends = _stack(end_parts, (0, 0), np.nan)
     return near, ends
 
 

@@ -219,7 +219,7 @@ def point_in_polygon_join(
     matched_parts = []
     for r, sub in cover_pdf.groupby("res"):
         full = sub["full"].to_numpy()
-        near, ends = cov.cell_edges(polys, sub, curve="rowmajor")
+        near, ends = cov.cell_edges(polys, sub)
         lists = np.hstack((near.reshape(len(near), -1), ends))
         offsets = np.zeros(len(sub) + 1, dtype=np.int32)
         offsets[1:] = np.cumsum(np.where(full, 0, lists.shape[1]))

@@ -140,9 +140,12 @@ def resumable_write(
 def load(spark, out_dir: str) -> DataFrame:
     """Read back a checkpointed dataset (zero-byte empty markers excluded).
 
-    The schema comes from the first file's footer, read on the driver:
-    every part is written from the same Arrow conversion, and Spark's own
-    inference would start a job to read that footer."""
+    The schema comes from the first part's footer, read on the driver,
+    as Spark's own inference took it, but without the job that inference
+    starts.  Each partition converts its own pandas frame to Arrow, so a
+    column can get a different type in another part (a long column with
+    nulls becomes double, an all-null one the null type); parts whose
+    types differ were never supported."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geowave_spark.geom import core as geom
+from geowave_spark.index import cover as cov
 from geowave_spark.join import spatial
 from geowave_spark.table import geo
 
@@ -548,6 +549,12 @@ def _edge_case_polys():
         8: np.array([0.0, 80.0, 10.0, 80.0, 10.0, 100.0, 5.0, 95.0, 0.0, 100.0]),
         9: np.array([20.0, 70.0, 40.0, 70.0, 40.0, 100.0, 20.0, 100.0]),
         10: np.array([-20.0, -100.0, 0.0, -100.0, -10.0, -80.0]),
+        # same tier as 9 on the tiered path; its notch leaves a west
+        # boundary cell three end-point tests, so the tier's lists are
+        # padded to an odd length: a pad that tested true at lat = +inf
+        # would put every +inf point in 9's top-row cells inside 9
+        11: np.array([-100.0, 0.0, -80.0, 0.0, -80.0, 13.0, -95.0, 13.5,
+                      -80.0, 14.0, -80.0, 30.0, -100.0, 30.0]),
     }
 
 
@@ -578,6 +585,7 @@ def _edge_case_points(polys) -> pd.DataFrame:
         (-30.0, -30.0), (-38.0, -38.0), (-56.0, 42.0), (-56.0, 62.0),
         # non-finite coordinates are inside no polygon
         (np.nan, 25.0), (-175.0, np.nan), (np.inf, 75.0), (30.0, np.inf),
+        (22.0, np.inf), (38.0, np.inf),
     ])
     x = np.concatenate(xs + [named[:, 0]])
     y = np.concatenate(ys + [named[:, 1]])
@@ -618,6 +626,10 @@ def test_edge_lists_exact_at_cell_and_domain_edges(spark, edge_case, single_tier
     assert sorted(neg.toPandas()["pid"]) == sorted(
         set(pdf["pid"]) - {p for p, _ in want})
     # the cases reach the paths they are here for
-    assert {1, 7, 8, 9} <= {q for _, q in want}
+    assert {1, 7, 8, 9, 11} <= {q for _, q in want}
+    if not single_tier:
+        tiers = cov.polygon_cover({q: polys[q] for q in (9, 11)},
+                                  curve="rowmajor")["res"]
+        assert tiers.nunique() == 1
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert ("Union" in plan) == (not single_tier)  # tiered: one join per tier
