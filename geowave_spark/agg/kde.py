@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..table import geo
+
 KERNEL_SCALE = 1_000_000
 
 
@@ -50,15 +52,6 @@ def weight_sql(dx: str = "dx", dy: str = "dy") -> str:
     return f"cast({KERNEL_SCALE} as bigint) // cast(1 + {dx} * {dx} + {dy} * {dy} as bigint)"
 
 
-def splat_ordinates_sql(lon: str, lat: str, res: int) -> tuple[str, str]:
-    """Closed-form grid ordinates (x, y) at ``res`` (GeoWave ceil(c*n)-1
-    normalization, as in `table.geo.rowmajor_cell_sql`)."""
-    n = 1 << res
-    x = f"least(greatest(cast(ceil((({lon}) + 180e0) / 360e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    y = f"least(greatest(cast(ceil((({lat}) + 90e0) / 180e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    return x, y
-
-
 def kde_heatmap(spark: SparkSession, pts: DataFrame, res: int, k: int = 2,
                 lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Points -> (cell, weight, pr_micro) heat cells at resolution ``res``.
@@ -69,7 +62,7 @@ def kde_heatmap(spark: SparkSession, pts: DataFrame, res: int, k: int = 2,
     from pyspark.sql import Window
 
     n = 1 << res
-    xs, ys = splat_ordinates_sql(lon, lat, res)
+    xs, ys = geo.grid_xy_sql(lon, lat, n)
     pts_o = pts.select(
         F.expr(xs).alias("x"), F.expr(ys).alias("y")
     )
@@ -102,7 +95,7 @@ def kde_oracle_sql(points_sql: str, res: int, k: int = 2,
     """DuckDB twin of `kde_heatmap` (k=2 kernel)."""
     assert k == 2, "oracle fixed at k=2"
     n = 1 << res
-    xs, ys = splat_ordinates_sql(lon, lat, res)
+    xs, ys = geo.grid_xy_sql(lon, lat, n)
     return f"""
 WITH p AS ({points_sql}),
      o AS ({offsets_sql()}),
@@ -182,7 +175,7 @@ def kde_pyramid_oracle_sql(points_sql: str, res: int, levels: int,
     """DuckDB twin of `kde_pyramid`: same base CTE, same parent arithmetic."""
     assert k == 2
     n = 1 << res
-    xs, ys = splat_ordinates_sql(lon, lat, res)
+    xs, ys = geo.grid_xy_sql(lon, lat, n)
     ctes = [f"""
 l{res} AS (
   SELECT ny * {n} + nx AS cell, cast(sum(w) as bigint) AS weight

@@ -14,29 +14,7 @@ vectorized numpy).  Deterministic via fixed seed + k-means|| init.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-
-
-def convex_hull(xy: np.ndarray) -> np.ndarray:
-    """Monotone-chain convex hull, (n,2) -> (h,2) CCW (no per-row Python
-    beyond the O(h) chain loop)."""
-    pts = np.unique(xy, axis=0)  # sorts lexicographically
-    if len(pts) <= 2:
-        return pts
-
-    def half(points):
-        chain: list[np.ndarray] = []
-        for p in points:
-            while len(chain) >= 2 and np.cross(chain[-1] - chain[-2], p - chain[-2]) <= 0:
-                chain.pop()
-            chain.append(p)
-        return chain
-
-    lower = half(pts)
-    upper = half(pts[::-1])
-    return np.asarray(lower[:-1] + upper[:-1])
+from pyspark.sql import DataFrame
 
 
 def kmeans_clusters(pts: DataFrame, k: int = 8, seed: int = 42,
@@ -50,36 +28,3 @@ def kmeans_clusters(pts: DataFrame, k: int = 8, seed: int = 42,
     asm = feat.transform(pts)
     model = KMeans(k=k, seed=seed, maxIter=max_iter, initMode="k-means||").fit(asm)
     return model.transform(asm).withColumnRenamed("prediction", "cluster").drop("features")
-
-
-def cluster_hulls(clustered: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Per-cluster convex hull: (cluster, n_points, hull_n, hull_wkt,
-    bbox columns) — one keyed shuffle, numpy hull per group."""
-
-    def hull(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..geom import wkt as wktm
-
-        xy = pdf[[lon, lat]].to_numpy(dtype=np.float64)
-        h = convex_hull(xy)
-        if len(h) >= 3:
-            hwkt = wktm.polygon_wkt(h)
-        else:
-            hwkt = ""
-        return pd.DataFrame(
-            {
-                "cluster": [key[0]],
-                "n_points": [len(pdf)],
-                "hull_n": [len(h)],
-                "hull_wkt": [hwkt],
-                "min_lon": [xy[:, 0].min()],
-                "max_lon": [xy[:, 0].max()],
-                "min_lat": [xy[:, 1].min()],
-                "max_lat": [xy[:, 1].max()],
-            }
-        )
-
-    schema = (
-        "cluster int, n_points long, hull_n int, hull_wkt string, "
-        "min_lon double, max_lon double, min_lat double, max_lat double"
-    )
-    return clustered.groupBy("cluster").applyInPandas(hull, schema=schema)

@@ -4,12 +4,12 @@ Reference analog (/root/reference): GeoWave maintains incrementally-updated
 per-index / per-type / per-field statistics used for query planning and split
 balancing — `core/store/src/main/java/.../core/store/statistics/*`:
 
-- CountStatistic.java, BoundingBoxStatistic.java, TimeRangeStatistic.java
-- NumericMeanStatistic / NumericRangeStatistic / NumericStatsStatistic
-- FixedBinNumericHistogramStatistic / NumericHistogramStatistic
-- HyperLogLogStatistic / CountMinSketchStatistic / BloomFilterStatistic
-- RowRangeHistogramStatistic (drives SplitsProvider.java:284-325 split
-  balancing and OptimalExpressionQuery.java:176-193 index selection)
+- FixedBinNumericHistogramStatistic (`fixed_bin_histogram`)
+- BloomFilterStatistic (`bloom_filter`)
+- RowRangeHistogramStatistic (`cell_histogram`; drives
+  SplitsProvider.java:284-325 split balancing)
+- Count / BoundingBox / TimeRange / NumericStats / HyperLogLog as one
+  batch state row (`stats_state`, finalized by `stats_report`)
 
 Spark-first re-expression: statistics are *snapshot* aggregates over the
 DataFrame (Spark's partial+final aggregation replaces GeoWave's
@@ -25,35 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..table import geo
-
-
-def count_stat(df: DataFrame) -> DataFrame:
-    """CountStatistic analog."""
-    return df.agg(F.count("*").alias("n"))
-
-
-def bbox_stat(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """BoundingBoxStatistic analog: envelope union as 4 scalar aggs."""
-    return df.agg(
-        F.min(lon).alias("min_lon"), F.max(lon).alias("max_lon"),
-        F.min(lat).alias("min_lat"), F.max(lat).alias("max_lat"),
-    )
-
-
-def time_range_stat(df: DataFrame, ts: str) -> DataFrame:
-    """TimeRangeStatistic analog."""
-    return df.agg(F.min(ts).alias("min_ts"), F.max(ts).alias("max_ts"))
-
-
-def numeric_stats(df: DataFrame, col: str) -> DataFrame:
-    """NumericStatsStatistic analog (count/min/max/mean/stddev/M2)."""
-    return df.agg(
-        F.count(col).alias("n"),
-        F.min(col).alias("min"),
-        F.max(col).alias("max"),
-        F.avg(col).alias("mean"),
-        F.stddev_pop(col).alias("stddev"),
-    )
 
 
 def fixed_bin_histogram(df: DataFrame, col: str, lo: float, hi: float,
@@ -77,34 +48,6 @@ def bucket_sql(col: str, lo: float, hi: float, bins: int) -> str:
     )
 
 
-def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05) -> DataFrame:
-    """HyperLogLogStatistic analog (Spark's own HLL++)."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias("approx_distinct"))
-
-
-def countmin_sketch(df: DataFrame, col: str, width: int = 256,
-                    depth: int = 4) -> DataFrame:
-    """CountMinSketchStatistic analog as a mergeable counter table.
-
-    One groupBy over (hash-row, bucket) pairs; the result is a small
-    (depth x width) sparse counter DataFrame that merges across datasets by
-    element-wise sum — the same commutative-monoid contract as the
-    reference's Mergeable statistics.  Buckets use xxhash64 with the row
-    index as seed, so `cms_estimate` can re-derive them for any probe value.
-    """
-    rows = [
-        df.select(
-            F.lit(d).alias("row"),
-            F.pmod(F.xxhash64(F.col(col), F.lit(d)), F.lit(width)).alias("bucket"),
-        )
-        for d in range(depth)
-    ]
-    allrows = rows[0]
-    for r in rows[1:]:
-        allrows = allrows.unionByName(r)
-    return allrows.groupBy("row", "bucket").agg(F.count("*").alias("n"))
-
-
 def _probe_lit(value):
     """Literal with the same Spark type the column hash saw (xxhash64 is
     type-sensitive: int32 and int64 of the same value hash differently)."""
@@ -114,24 +57,6 @@ def _probe_lit(value):
     if isinstance(value, int):
         return c.cast("long")
     return c
-
-
-def cms_estimate(spark, sketch_rows, value, width: int = 256,
-                 depth: int = 4) -> int:
-    """Point estimate from a collected countmin sketch (min over rows).
-
-    ``sketch_rows`` is `countmin_sketch(...).collect()`.  Probe buckets are
-    computed with the same JVM xxhash64 (one tiny local job) so build and
-    probe hashing can never drift.
-    """
-    counters = {(r["row"], r["bucket"]): r["n"] for r in sketch_rows}
-    probe = spark.range(1).select(
-        *[
-            F.pmod(F.xxhash64(_probe_lit(value), F.lit(d)), F.lit(width)).alias(f"b{d}")
-            for d in range(depth)
-        ]
-    ).collect()[0]
-    return min(counters.get((d, probe[f"b{d}"]), 0) for d in range(depth))
 
 
 def bloom_filter(df: DataFrame, col: str, m_bits: int = 1 << 16,
@@ -191,34 +116,6 @@ def recommend_salt(cell_hist: DataFrame, target_rows_per_task: int = 100_000,
     return max(1, min(cap, math.ceil(hot / max(1, target_rows_per_task))))
 
 
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """PartitionsStatistic analog: rows per physical Spark partition
-    (observability for the north rule's per-partition metrics)."""
-    return (
-        df.withColumn("pid_", F.spark_partition_id())
-        .groupBy("pid_").agg(F.count("*").alias("n"))
-        .withColumnRenamed("pid_", "partition")
-    )
-
-
-def balance_partitions(df: DataFrame, key: str, n_parts: int) -> DataFrame:
-    """Statistics-balanced splits: range-partition on ``key`` into
-    equal-CARDINALITY chunks.
-
-    Reference analog (/root/reference): `core/mapreduce/.../splits/
-    SplitsProvider.java:62-325` slices SFC key ranges into splits of equal
-    estimated row count using the RowRangeHistogram statistic, so no task
-    owns a disproportionate key range.  Spark-first: `repartitionByRange`
-    IS that operator — it samples the key distribution (the histogram) and
-    picks quantile boundaries, so skewed keys still land in balanced
-    partitions.  Pair with `sortWithinPartitions(key)` to reproduce the
-    reference's within-split SFC ordering for scan locality.
-    """
-    from pyspark.sql import functions as F  # noqa: N812
-
-    return df.repartitionByRange(n_parts, F.col(key)).sortWithinPartitions(key)
-
-
 # ------------------------------------------------- incremental maintenance
 
 def stats_state(
@@ -237,10 +134,9 @@ def stats_state(
     entryIngested` (`core/store/src/main/java/.../statistics/
     StatisticUpdateCallback.java:87`) and periodically-merged partials
     (`StatisticValueWriter`/`StatisticValueReader`).  Spark-first, the
-    same contract is a commutative-monoid state row per ingest batch:
-    every component merges associatively (`merge_stats_states`), so a
-    100 TB store never recomputes statistics from scratch — each new
-    batch contributes one tiny state row, and reads fold the rows.
+    state is one row per batch whose every component is a commutative
+    monoid (sums, minima, maxima, HLL sketches), so rows of several
+    batches can be folded instead of rescanning the data.
 
     Components: row count; bbox (min/max lon/lat); optional time range;
     optional value min/max/sum/sum-of-squares (mean/std derivable);
@@ -268,32 +164,6 @@ def stats_state(
     return df.agg(*aggs)
 
 
-def merge_stats_states(*states: DataFrame) -> DataFrame:
-    """Fold any number of `stats_state` rows into one (associative and
-    commutative — the reference's `StatisticValueReader` merge loop)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F  # noqa: N812
-
-    u = reduce(lambda a, b: a.unionByName(b), states)
-    cols = set(u.columns)
-    aggs = [
-        F.sum("n").alias("n"),
-        F.min("lon0").alias("lon0"), F.max("lon1").alias("lon1"),
-        F.min("lat0").alias("lat0"), F.max("lat1").alias("lat1"),
-    ]
-    if "ts0" in cols:
-        aggs += [F.min("ts0").alias("ts0"), F.max("ts1").alias("ts1")]
-    if "vmin" in cols:
-        aggs += [
-            F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"), F.sum("vsumsq").alias("vsumsq"),
-        ]
-    if "hll" in cols:
-        aggs += [F.hll_union_agg("hll").alias("hll")]
-    return u.agg(*aggs)
-
-
 def stats_report(state: DataFrame) -> DataFrame:
     """Finalize a (possibly merged) state row into user-facing numbers:
     distinct estimate from the HLL sketch, mean/std from the moments."""
@@ -316,14 +186,3 @@ def stats_report(state: DataFrame) -> DataFrame:
             .drop("vsum", "vsumsq")
         )
     return out
-
-
-def merge_cell_hists(*hists: DataFrame) -> DataFrame:
-    """Merge per-batch `cell_histogram` outputs: union + keyed sum —
-    the binned-statistic merge (`StatisticValueWriter` per-bin merge)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F  # noqa: N812
-
-    u = reduce(lambda a, b: a.unionByName(b), hists)
-    return u.groupBy("cell").agg(F.sum("n").alias("n"))

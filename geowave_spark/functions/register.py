@@ -368,13 +368,3 @@ def register_geometry_functions(spark: SparkSession) -> list[str]:
         spark.udf.register(nm, _mk(idx))
         names.append(nm)
     return names
-
-
-GEOM_POINT_SQL = (
-    "format_string('POINT (%s %s)', cast({lon} as string), cast({lat} as string))"
-)
-
-
-def geom_point_sql(lon: str, lat: str) -> str:
-    """SQL fragment: build POINT WKT from coordinate columns (JVM-side)."""
-    return GEOM_POINT_SQL.format(lon=lon, lat=lat)

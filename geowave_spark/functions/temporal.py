@@ -32,17 +32,6 @@ def after(col: Column | str, t: str) -> Column:
     return F.col(col) > F.expr(f"timestamp '{t}'") if isinstance(col, str) else col > F.expr(f"timestamp '{t}'")
 
 
-def before(col: Column | str, t: str) -> Column:
-    return F.col(col) < F.expr(f"timestamp '{t}'") if isinstance(col, str) else col < F.expr(f"timestamp '{t}'")
-
-
 def during(col: Column | str, t0: str, t1: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return (c >= F.expr(f"timestamp '{t0}'")) & (c < F.expr(f"timestamp '{t1}'"))
-
-
-def time_bin(col: Column | str, unit: str = "week") -> Column:
-    """Temporal binning strategy analog (`TemporalBinningStrategy.java`,
-    per-periodicity bins): timestamp -> truncated bin start."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_trunc(unit, c)

@@ -171,8 +171,9 @@ def _segments_intersect(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1) -> np.ndarray:
 # The (box x edge) overlap matrix is built at most this many elements at a
 # time, so one polygon with thousands of edges cannot blow up memory.
 _PAIR_CHUNK = 1 << 20
-# `within` inflates each box by this much (degrees) before testing it
-_WITHIN_MARGIN = 1e-9
+# Each box is inflated by this much (degrees) before it is classified: the
+# encoder's rounding can put a point just past its cell's edge
+_BOX_MARGIN = 1e-9
 
 
 def _box_edge_hits(x0, y0, x1, y1, rows, ax, ay, bx, by) -> np.ndarray:
@@ -210,26 +211,29 @@ def classify_bboxes(lon0, lat0, lon1, lat1, rows, ax_pad, ay_pad, bx_pad,
     """Box i against geometry ``rows[i]`` (`pack_polygons` matrices), for
     boxes of MIXED geometries in one batch — the polygon-cover classifier.
 
+    Both modes test the box inflated by ``_BOX_MARGIN``.
+
     ``within=False``: does the box intersect the geometry — any box corner
     inside (even-odd), any vertex inside the box, or any edge crossing a
     box side (reference: `RDDUtils.java:158-183` trims insertion ids to
-    cells actually intersecting the geometry).
+    cells actually intersecting the geometry).  The margin keeps a cell
+    whose edge lies a rounding error from the geometry: a point on the
+    grid line between two rows, or less than half an ulp of ``lat + 90``
+    north of it, encodes into the row below.
 
     ``within=True``: does the box lie FULLY inside — all corners inside, no
-    vertex inside and no edge crossing, all on the box inflated by
-    ``_WITHIN_MARGIN``, so any edge passing that close demotes the box to
-    "partial" and float rounding in the exact ray cast (~1e-14 abs) can
-    never disagree with it.  Points in a fully-interior cell need no exact
-    refine (GeoWave's XZ-order makes the same interior/boundary split).
+    vertex inside and no edge crossing, so any edge passing within the
+    margin demotes the box to "partial" and float rounding in the exact
+    ray cast (~1e-14 abs) can never disagree with it.  Points in a
+    fully-interior cell need no exact refine (GeoWave's XZ-order makes the
+    same interior/boundary split).
 
     The corners decide most boxes; the vertex and crossing tests run only
     on the boxes they leave open.
     """
-    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64)
-                      for v in (lon0, lat0, lon1, lat1))
-    if within:
-        m = _WITHIN_MARGIN
-        x0, y0, x1, y1 = x0 - m, y0 - m, x1 + m, y1 + m
+    m = _BOX_MARGIN
+    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64) + d
+                      for v, d in ((lon0, -m), (lat0, -m), (lon1, m), (lat1, m)))
     rows = np.asarray(rows, dtype=np.int64)
     n = len(x0)
     corners = point_in_polygons(
@@ -248,13 +252,6 @@ def bboxes_intersect_polygon(lon0, lat0, lon1, lat1, poly) -> np.ndarray:
     (`classify_bboxes` for a single geometry)."""
     return classify_bboxes(lon0, lat0, lon1, lat1, np.zeros(len(lon0), np.int64),
                            *pack_polygons({0: poly})[1:])
-
-
-def bboxes_within_polygon(lon0, lat0, lon1, lat1, poly) -> np.ndarray:
-    """Which of N bboxes (cells) lie FULLY inside one geometry
-    (`classify_bboxes` for a single geometry)."""
-    return classify_bboxes(lon0, lat0, lon1, lat1, np.zeros(len(lon0), np.int64),
-                           *pack_polygons({0: poly})[1:], within=True)
 
 
 def planar_distance(ax, ay, bx, by) -> np.ndarray:

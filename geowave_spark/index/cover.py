@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..geom import core as geom
@@ -37,18 +37,6 @@ def cell_udf(res: int, curve: str = "hilbert"):
         return pd.Series(c.astype(np.int64))
 
     return _enc.asNondeterministic()
-
-
-def parent_cell_udf(res: int, parent_res: int, curve: str = "hilbert"):
-    """Vectorized cell -> parent-cell pandas UDF (cross-tier alignment;
-    reference: reprojectToTier `TieredSFCIndexStrategy.java:514-529`)."""
-
-    @F.pandas_udf(LongType())
-    def _par(cell: pd.Series) -> pd.Series:
-        p = grid.cell_to_parent(cell.to_numpy().astype(np.uint64), res, parent_res, curve)
-        return pd.Series(p.astype(np.int64))
-
-    return _par
 
 
 def bbox_cells_udf(res: int, curve: str = "hilbert"):
@@ -138,7 +126,7 @@ def add_point_cells_jvm(df: DataFrame, lon: str = "lon", lat: str = "lat",
 
 def parent_cell_expr(cell_col: str, res: int, parent_res: int):
     """Closed-form row-major reprojection to a coarser tier (JVM twin of
-    `parent_cell_udf` for curve='rowmajor'; reference reprojectToTier,
+    `grid.cell_to_parent` for curve='rowmajor'; reference reprojectToTier,
     `TieredSFCIndexStrategy.java:514-529`)."""
     n = 1 << res
     s = 1 << (res - parent_res)

@@ -317,67 +317,6 @@ def point_in_rects_join(
     return matched
 
 
-def spatial_join_rects(
-    spark: SparkSession,
-    pts: DataFrame,
-    rects_df: DataFrame,
-    *,
-    strategy: str = "auto",
-    pid_col: str = "pid",
-    lon: str = "lon",
-    lat: str = "lat",
-    res: int = 10,
-    rid_col: str = "rid",
-    salt_buckets: int = 8,
-    keep_cols: list[str] | None = None,
-    broadcast_max_rects: int | None = None,
-) -> DataFrame:
-    """Build-side selection for the point x rectangle join — the
-    user-facing knob the reference exposes as `JoinOptions.BuildSide`
-    (`analytics/spark/.../spatial/JoinOptions.java`, consumed at
-    `TieredSpatialJoin.java:103,160`).
-
-    ``strategy``:
-      "broadcast" — rect side covered driver-side, broadcast
-                    (`point_in_rects_join`): the fast path when the rect
-                    side is small
-      "shuffle"   — both sides stay distributed, salted ShuffledHashJoin
-                    (`point_in_rects_join_salted`): the 100 TB big-big path
-      "auto"      — count the rect side and pick: the cover fans out
-                    ~4 cells/rect at the default budget, ~100 B/cover-row,
-                    so the broadcast estimate is rects * 400 B compared
-                    against spark.sql.autoBroadcastJoinThreshold (the same
-                    count-then-choose the reference does when BuildSide is
-                    unset).  ``broadcast_max_rects`` overrides the derived
-                    row cap.
-
-    Both paths return identical (pid, rid[, keep_cols]) pairs — asserted in
-    tests/test_spatial_join.py.
-    """
-    if isinstance(rects_df, pd.DataFrame):
-        rects_df = spark.createDataFrame(rects_df)
-    if strategy == "auto":
-        if broadcast_max_rects is None:
-            thresh = int(spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760").rstrip("b"))
-            broadcast_max_rects = max(1, thresh // 400)
-        n = rects_df.limit(broadcast_max_rects + 1).count()
-        strategy = "broadcast" if n <= broadcast_max_rects else "shuffle"
-    if strategy == "broadcast":
-        rects_pdf = rects_df.select(
-            rid_col, "lon0", "lat0", "lon1", "lat1").toPandas()
-        return point_in_rects_join(
-            spark, pts, rects_pdf, pid_col=pid_col, lon=lon, lat=lat,
-            res=res, rid_col=rid_col, keep_cols=keep_cols)
-    if strategy == "shuffle":
-        return point_in_rects_join_salted(
-            spark, pts, rects_df, pid_col=pid_col, lon=lon, lat=lat,
-            res=res, rid_col=rid_col, salt_buckets=salt_buckets,
-            keep_cols=keep_cols)
-    raise ValueError(f"unknown strategy {strategy!r} "
-                     "(want auto|broadcast|shuffle)")
-
-
 def rect_cover_df(rects_df: DataFrame, res: int, *,
                   rid_col: str = "rid") -> DataFrame:
     """DISTRIBUTED bbox cover: (rid, lon0..lat1) rows -> one row per
@@ -451,9 +390,8 @@ def point_in_rects_join_salted(
 
 def resolve_query_side(spark: SparkSession, queries: DataFrame,
                        broadcast_queries, disk_k: int) -> bool:
-    """Build-side auto-selection for the query-disk joins (the same
-    count-then-choose `spatial_join_rects` does; reference analog:
-    `JoinOptions.BuildSide` unset => size-based pick in
+    """Build-side auto-selection for the query-disk joins (reference
+    analog: `JoinOptions.BuildSide` unset => size-based pick in
     `TieredSpatialJoin.java:103,160`).
 
     ``broadcast_queries`` may be True/False (explicit) or "auto": estimate

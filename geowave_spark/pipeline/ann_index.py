@@ -115,11 +115,6 @@ def _centroid_view(spark: SparkSession, path: str) -> str:
     return "_ann_cent"
 
 
-def index_k(spark: SparkSession, path: str) -> int:
-    """The frozen quantizer size — self-described by the table."""
-    return snapshots.scan(spark, path, where="is_cent = 1").count()
-
-
 def append_batch(spark: SparkSession, path: str, vec_view: str) -> dict:
     """Assign a new batch against the FROZEN quantizer and append one
     atomic snapshot; cost is O(batch x K), never O(corpus)."""

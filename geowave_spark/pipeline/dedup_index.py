@@ -11,8 +11,9 @@ makes it O(batch + matching buckets).
 Design (all engine-native pieces):
 - The index is a snapshot table (`table/snapshots.py`) of band rows
   `(doc_id, band, bh)` — 4 rows per doc, clustered by `bh` so footer
-  min/max stats prune targeted bucket lookups, committed atomically per
-  batch (`append`), time-travelable like any other table.
+  min/max stats prune targeted bucket lookups; a batch is added with one
+  atomic `snapshots.append` of its `band_rows`, time-travelable like any
+  other table.
 - A new batch's band rows are computed in-flight (codegen shingle →
   16 minhash aggregates → 4 band hashes, exactly q16's relational
   pipeline — `queries_text.shingle_rows_sql_spark`).
@@ -96,11 +97,6 @@ def build_index(
         band_rows(spark, docs_view), path, cluster_by=["bh"],
         num_files=num_files,
     )
-
-
-def append_batch(spark: SparkSession, docs_view: str, path: str) -> dict:
-    """Ingest a batch: one atomic snapshot append of its band rows."""
-    return snapshots.append(band_rows(spark, docs_view), path)
 
 
 def dedup_batch(

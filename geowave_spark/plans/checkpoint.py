@@ -160,51 +160,6 @@ def load(spark, out_dir: str) -> DataFrame:
     return read_files(spark, files, from_arrow_schema(pq.read_schema(files[0])))
 
 
-def delete_where(spark, out_dir: str, condition_sql: str) -> dict:
-    """Bulk delete by predicate over a checkpointed dataset.
-
-    Reference analog: `BaseDataStore.delete` by query constraints
-    (`core/store/.../base/BaseDataStore.java:855-929` in /root/reference)
-    and GWQL `DELETE FROM t WHERE ...` (`.../gwql/statement/
-    DeleteStatement.java`); the modern lakehouse shape is Iceberg's
-    copy-on-write `DELETE FROM`: only files containing matching rows are
-    rewritten, each with an atomic rename commit.
-
-    Driver work is one tiny aggregation (which partitions match); the
-    rewrite itself is executor-side pandas/Arrow per affected file.
-    """
-    files = [
-        f for f in sorted(os.listdir(out_dir))
-        if f.startswith("part-") and f.endswith(".parquet")
-        and os.path.getsize(os.path.join(out_dir, f)) > 0
-    ]
-    deleted = 0
-    rewritten = 0
-    for f in files:  # per-FILE loop (bounded by partition count, not rows)
-        path = os.path.join(out_dir, f)
-        df = spark.read.parquet(path)
-        n_match = df.filter(condition_sql).limit(1).count()
-        if n_match == 0:
-            continue  # file skipping: untouched partitions keep their commit
-        keep = df.filter(f"NOT ({condition_sql})")
-        tmp = path + ".tmp-delete"
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob
-        import shutil
-
-        part_file = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        before = df.count()
-        after = keep.count()
-        if part_file:
-            os.replace(part_file[0], path)
-        else:
-            open(path, "wb").close()  # all rows deleted -> empty marker
-        shutil.rmtree(tmp, ignore_errors=True)
-        deleted += before - after
-        rewritten += 1
-    return {"files": len(files), "rewritten": rewritten, "deleted_rows": deleted}
-
-
 def partition_metrics(out_dir: str) -> list[dict]:
     """Per-partition lineage+metrics records (sorted by pid)."""
     mdir = os.path.join(out_dir, "metrics")

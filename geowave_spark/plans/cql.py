@@ -280,8 +280,8 @@ def cql_to_sql(cql: str, geom_map: dict[str, str] | None = None) -> str:
     """Compile a CQL filter string to a Spark SQL boolean expression.
 
     ``geom_map`` maps CQL geometry attribute names to SQL geometry
-    expressions — typically ``{"geom": geom_point_sql("lon", "lat")}`` for
-    a lon/lat point table, mirroring how the reference binds the CQL
+    expressions — typically ``{"geom": "GeomPoint(lon, lat)"}`` for a
+    lon/lat point table, mirroring how the reference binds the CQL
     geometry attribute to the adapter's geometry field
     (`CQLQueryFilter.java`).
     """

@@ -782,9 +782,9 @@ def _q88_body(micros: str) -> str:
     one window pass (lag over ts) turns the point stream into geodesic
     segments, then a keyed aggregate — the standard track-statistics
     shape (total distance, longest hop, top speed) of GPX/T-Drive-style
-    trajectory data (reference analog: the track rollup the STANAG 4676
-    ingest feeds, `stanag_tracks`, and orthodromic distance
-    `OrthodromicDistancePartitioner.java` in /root/reference).
+    trajectory data (reference analog: the STANAG 4676 track rollup and
+    orthodromic distance `OrthodromicDistancePartitioner.java` in
+    /root/reference).
 
     Scale: the window and the aggregate share the user_id hash partition —
     AQE plans ONE shuffle; segment math is codegen floats.  Distances
@@ -1937,9 +1937,8 @@ def q136_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first: the engine runs the NATIVE `session_window(ts, gap)`
     aggregate — one hash shuffle on user_id, sessions merged inside the
-    partition, and the identical aggregate is streaming-portable against
-    the state store (`streaming/ingest.session_rollup` runs it with a
-    watermark; stream==batch parity pinned in tests).  The oracle derives
+    partition, and the same aggregate runs under Structured Streaming with
+    a watermark.  The oracle derives
     the same sessions independently via the gap-flag running sum — a
     formulation Spark could also run, but the point is the built-in.
 

@@ -475,8 +475,8 @@ def _q266(d: G.Dialect) -> str:
     order is the event_id sequence (the ingest log order); an event is
     late for watermark w if its timestamp is more than w behind the
     running maximum event time at its arrival — exactly the condition
-    under which the streaming aggregate (`streaming/ingest.windowed_
-    counts`) would discard it.  Reported per event type for w = 1, 5 and
+    under which a watermarked streaming aggregate would discard it.
+    Reported per event type for w = 1, 5 and
     15 minutes, plus the max observed disorder, so the operator picks the
     smallest watermark with acceptable loss instead of guessing.
 

@@ -808,8 +808,7 @@ def _q233_sql() -> str:
     """Equi-depth split boundaries (exact deciles per event type) — the
     statistics-balanced split PLAN exposed as a query: the reference
     computes these boundaries from its row-range histogram to cut
-    balanced input splits (`SplitsProvider.java:284-325`); our engine's
-    `stats.balance_partitions` consumes the same quantiles.  ntile(10)
+    balanced input splits (`SplitsProvider.java:284-325`).  ntile(10)
     over a total order (value cents, then event_id) is deterministic and
     identical across engines.
 

@@ -753,8 +753,8 @@ def _q283_sql(intdiv: str) -> str:
     the data: integer cents are a bounded discrete domain, so one keyed
     histogram aggregate (map-side combinable) collapses the corpus to at
     most `distinct cents` rows; the cumulative window then runs over the
-    HISTOGRAM relation only (executor-sized by construction — the same
-    collapse `stats.balance_partitions` rides).  Rank r(q) = ceil(q*n)
+    HISTOGRAM relation only (executor-sized by construction).
+    Rank r(q) = ceil(q*n)
     in exact integer arithmetic; answer = least cents with cum >= r.
 
     q159 gives exact per-group medians via a partitioned window sort;
@@ -1257,17 +1257,14 @@ def q297_order_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q295 — batch track summaries (the track_assembler's batch twin)
+# q295 — batch track summaries
 # ---------------------------------------------------------------------------
 
 
 def _q295_sql(epoch_us: str) -> str:
     """Per-user assembled-track summary: point count, micro-int bbox and
-    integer path length over the ts-ordered point sequence — EXACTLY the
-    state `streaming/stateful.track_assembler` accumulates, as one lag
-    window + one keyed aggregate, so the stream's emit-on-silence output
-    is checkable against a batch relation (parity pinned in
-    tests/test_streaming.py).  `floor(sqrt(...))` of an int64 sum is
+    integer path length over the ts-ordered point sequence, as one lag
+    window + one keyed aggregate.  `floor(sqrt(...))` of an int64 sum is
     IEEE-correctly-rounded in both engines, so the path is hash-exact."""
     lon = f"cast(floor(({geo.lon_sql('event_id')}) * 1000000) as bigint)"
     lat = f"cast(floor(({geo.lat_sql('event_id')}) * 1000000) as bigint)"
@@ -1486,9 +1483,7 @@ def _q291_sql(epoch_us: str, intdiv: str) -> str:
     event-time windows — q283's histogram collapse PARTITIONED by the
     window, which is precisely the aggregation Structured Streaming can
     maintain incrementally (the histogram is a commutative monoid per
-    (window, cents); `streaming/ingest.windowed_value_histogram` runs
-    the same collapse through foreachBatch, and the stream==batch parity
-    is pinned in tests).  No sort of the data: the cumulative window
+    (window, cents)).  No sort of the data: the cumulative window
     runs over the per-window HISTOGRAM relation only."""
     d = intdiv
     qs = [("p50", 1, 2), ("p95", 19, 20)]

@@ -18,7 +18,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..table import images as img_mod
 from . import codec
@@ -58,9 +58,3 @@ def image_stats_df(images_df: DataFrame) -> DataFrame:
                 yield image_stats_pdf(pdf)
 
     return images_df.mapInPandas(gen, schema=STATS_SCHEMA)
-
-
-def global_histogram(stats_df: DataFrame) -> DataFrame:
-    """Dataset-wide luma histogram: the mergeable-statistic rollup."""
-    aggs = [F.sum(f"bin{i}").alias(f"bin{i}") for i in range(N_BINS)]
-    return stats_df.agg(F.sum("n_px").alias("n_px"), *aggs)

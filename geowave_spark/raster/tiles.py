@@ -123,9 +123,8 @@ def _cover_sql_df(df, tile_px: int):
     from pyspark.sql import functions as F  # noqa: N812
 
     res = level_res_sql("lon0", "lon1", "w", tile_px)
-    idx = "least(greatest(cast(ceil(({} + {}) / {} * n) as bigint) - 1, 0), n - 1)"
-    y0, y1 = (idx.format(v, "90e0", "180e0") for v in ("lat0", "lat1"))
-    x0, x1 = (idx.format(v, "180e0", "360e0") for v in ("lon0", "lon1"))
+    x0, y0 = geo.grid_xy_sql("lon0", "lat0", "n")
+    x1, y1 = geo.grid_xy_sql("lon1", "lat1", "n")
     return (
         df.withColumn("res", F.expr(f"cast({res} as int)"))
         .withColumn("n", F.expr("cast(pow(2, res) as bigint)"))

@@ -26,23 +26,6 @@ R_MERC = 6378137.0  # WGS84 spherical authalic radius used by EPSG:3857
 MAX_LAT = 85.05112877980659
 
 
-def merc_x_sql(lon: str) -> str:
-    return f"(radians({lon}) * {R_MERC!r})"
-
-
-def merc_y_sql(lat: str) -> str:
-    clamped = f"least(greatest({lat}, {-MAX_LAT!r}), {MAX_LAT!r})"
-    return f"(ln(tan(pi() / 4 + radians({clamped}) / 2)) * {R_MERC!r})"
-
-
-def inv_merc_lon_sql(x: str) -> str:
-    return f"(degrees({x} / {R_MERC!r}))"
-
-
-def inv_merc_lat_sql(y: str) -> str:
-    return f"(degrees(2 * atan(exp({y} / {R_MERC!r})) - pi() / 2))"
-
-
 def tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
     """Slippy-map tile (tx, ty) at zoom z — integer SQL, shared by Spark
     and the DuckDB oracle.  ty grows southward (the map-tile convention)."""

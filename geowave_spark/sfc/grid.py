@@ -104,19 +104,6 @@ def cell_to_parent(cell: np.ndarray, res: int, parent_res: int, curve: str = "hi
     return xy_to_cell(x >> shift, y >> shift, parent_res, curve)
 
 
-def cell_to_children(cell: int, res: int, child_res: int, curve: str = "hilbert") -> np.ndarray:
-    """All descendant cells of one cell at a finer resolution (vectorized)."""
-    if child_res < res:
-        raise ValueError("child_res must be >= res")
-    dr = child_res - res
-    x, y = cell_to_xy(np.asarray([cell], dtype=np.uint64), res, curve)
-    k = 1 << dr
-    dx, dy = np.meshgrid(np.arange(k, dtype=np.uint64), np.arange(k, dtype=np.uint64))
-    cx = (x[0] << np.uint64(dr)) + dx.ravel()
-    cy = (y[0] << np.uint64(dr)) + dy.ravel()
-    return xy_to_cell(cx, cy, child_res, curve)
-
-
 def grid_disk(cell: np.ndarray, res: int, k: int, curve: str = "hilbert") -> np.ndarray:
     """Chebyshev-ring neighborhood: all cells within k rings of each input cell.
 

@@ -14,8 +14,6 @@ in /root/reference), and hands the measured jobs DataFrames that SCAN it:
   replication with distinct ids, the stand-in for the table's full
   10^12-row width; the replicator runs post-repartition so every core
   produces rows, exactly the parallelism file splits give a real table).
-- :func:`image_tiles` — full rows (pixels included) through raster
-  tile assignment + no-data mosaic merge.
 
 Idempotent per (sf_dir, target_images): the table path encodes both, a
 committed snapshot is reused, so the alternating N / 4N scaling
@@ -147,12 +145,3 @@ def query_polygons(spark: SparkSession, sf_dir: str, max_polys: int = 100) -> di
         out[int(r.rid)] = geom.regular_polygon(
             lon, lat, max(r.lon1 - r.lon0, r.lat1 - r.lat0) / 2, 12)
     return out
-
-
-def image_tiles(spark: SparkSession, path: str) -> DataFrame:
-    """Tile assignment + no-data mosaic merge over a SCAN of the corpus
-    table: parquet read -> JVM cover explode -> one keyed shuffle ->
-    streaming decode/resample/merge (`raster/tiles.py`)."""
-    from ..raster import tiles
-
-    return tiles.merge_tiles_df(tiles.assign_tiles_df(snap.scan(spark, path)))

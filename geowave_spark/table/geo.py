@@ -205,15 +205,28 @@ def cell_center_sql(res: int) -> tuple[str, str]:
             f"((cast(gy as double) + 0.5e0) / {n} * 180e0 - 90e0)")
 
 
+def grid_xy_sql(lon: str, lat: str, n) -> tuple[str, str]:
+    """Grid ordinates (x, y) in [0, n) of a point on an n x n lon/lat grid
+    (``n`` a number or a SQL expression), valid in both SQL dialects.
+
+    GeoWave's ceil(c*n)-1 normalization (SURVEY.md §5.1), clamped BEFORE
+    the subtraction: Spark's ``ceil`` of a double below -2^63 (-inf,
+    -1e300) is Long.MIN, so ``ceil(...) - 1`` would overflow under ANSI.
+    Finite values, NaN and +inf get the same ordinate as unclamped; -inf
+    maps to 0.
+    """
+    def ordinate(v: str, lo: str, span: str) -> str:
+        return (f"(cast(least(greatest(ceil((({v}) + {lo}) / {span} * {n}), 1), "
+                f"{n}) as bigint) - 1)")
+
+    return ordinate(lon, "180e0", "360e0"), ordinate(lat, "90e0", "180e0")
+
+
 def rowmajor_cell_sql(lon: str, lat: str, res: int) -> str:
     """Row-major grid id — closed form identical to
-    grid.latlng_to_cell(curve='rowmajor') and valid in both SQL dialects.
-
-    Uses GeoWave's ceil(c*n)-1 normalization (SURVEY.md §5.1).
-    """
+    grid.latlng_to_cell(curve='rowmajor') for finite points."""
     n = 1 << res
-    x = f"least(greatest(cast(ceil(({lon} + 180e0) / 360e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    y = f"least(greatest(cast(ceil(({lat} + 90e0) / 180e0 * {n}) as bigint) - 1, 0), {n - 1})"
+    x, y = grid_xy_sql(lon, lat, n)
     return f"({y} * {n} + {x})"
 
 

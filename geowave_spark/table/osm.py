@@ -4,10 +4,7 @@ Reference: `extensions/cli/osm` in /root/reference —
 `parser/OsmPbfParser.java:197-259` (delta-decoded DenseNodes, the
 "weird spec" keys_vals run-length tag layout, stringtable lookups),
 `:156-194` (relations: per-member role stringtable ids + delta member
-ids), way refs delta-decoding per the same BinaryParser contract, and
-`mapreduce/Convert/OsmProvider/OsmProvider.java:138-212` (way geometry
-assembly: ordered node-id -> coordinate lookups, LineString vs closed
-Polygon selection).
+ids), and way refs delta-decoding per the same BinaryParser contract.
 
 The format itself is public (OSM PBF: fileformat.proto / osmformat.proto):
 a sequence of [int32-BE length][BlobHeader proto][Blob proto] where each
@@ -21,14 +18,8 @@ is worthless here.  Instead `osm_block_index` walks ONLY the 4-byte length
 prefixes + BlobHeaders (seeking past every payload — O(#blocks) tiny reads),
 and the resulting (path, offset, size) table fans out to executors where
 `mapInPandas` decodes each block independently — one planet file becomes
-~100k parallel tasks with zero driver decompression.
-
-Way/relation geometry assembly is the genuinely distributed step: the
-reference resolves way refs by per-way random lookups against Accumulo
-(`OsmProvider.nodesFromAccumulo`); at planet scale that's a big-big join —
-`ways_to_lines` explodes refs with their position and hash-joins the node
-table on id, then reassembles each way with one keyed sort-in-group
-aggregation (same shape as `table/trackfiles.gpx_tracks`).
+~100k parallel tasks with zero driver decompression.  Ways and relations
+come back as node-id lists; no query assembles their geometry.
 """
 from __future__ import annotations
 
@@ -38,7 +29,6 @@ import zlib
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------------
 # protobuf wire-format primitives (pure python; no protobuf lib in sandbox)
@@ -336,47 +326,6 @@ def read_osm_pbf(spark: SparkSession, paths: str | list[str],
     }
 
 
-def ways_to_lines(nodes: DataFrame, ways: DataFrame) -> DataFrame:
-    """Assemble way geometries: (id, tags, n_nodes, wkt, closed).
-
-    The distributed form of `OsmProvider.java:138-212`: refs explode with
-    position, hash-join the node table on id (both sides shuffle on the
-    join key — no driver lookups, no broadcast of a planet-scale node
-    table), then one keyed sort-in-group aggregation rebuilds the ordered
-    coordinate list.  Closed rings (first ref == last ref) report
-    closed=true (the reference's Polygon-vs-LineString split).
-    """
-    w = ways.select(
-        F.col("id").alias("way_id"), "tags",
-        F.posexplode("refs").alias("pos", "ref"),
-    )
-    n = nodes.select(
-        F.col("id").alias("ref"),
-        (F.col("lon_nano") / F.lit(1e9)).alias("lon"),
-        (F.col("lat_nano") / F.lit(1e9)).alias("lat"),
-    )
-    joined = w.join(n, "ref")
-    pts = F.array_sort(F.collect_list(F.struct("pos", "lon", "lat")))
-    return (
-        joined.groupBy("way_id", "tags")
-        .agg(pts.alias("pts"))
-        .select(
-            F.col("way_id").alias("id"), "tags",
-            F.size("pts").alias("n_nodes"),
-            F.concat(
-                F.lit("LINESTRING ("),
-                F.concat_ws(", ", F.transform(
-                    "pts", lambda p: F.concat_ws(" ", p["lon"].cast("string"),
-                                                 p["lat"].cast("string")))),
-                F.lit(")"),
-            ).alias("wkt"),
-            (F.element_at("pts", 1)["lon"].eqNullSafe(F.element_at("pts", -1)["lon"])
-             & F.element_at("pts", 1)["lat"].eqNullSafe(F.element_at("pts", -1)["lat"])
-             & (F.size("pts") > 2)).alias("closed"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # writer (fixture/export twin)
 # --------------------------------------------------------------------------
@@ -464,113 +413,3 @@ def write_osm_pbf(path: str, nodes: list, ways: list, relations: list = (),
 
     with open(path, "wb") as fh:
         fh.write(b"".join(chunks))
-
-
-def relations_to_multipolygons(nodes: DataFrame, ways: DataFrame,
-                               relations: DataFrame) -> DataFrame:
-    """Assemble type=multipolygon relations into (holed) MULTIPOLYGON WKT.
-
-    Distributed form of the reference's relation conversion
-    (`OsmProvider.java` resolves member ways then nodes via store lookups;
-    `OSMRelationMapper.java` stages the member list): member ways explode
-    with their position, hash-join `ways` for refs then `nodes` for
-    coordinates (planet-scale joins, no driver lookups), and one
-    `applyInPandas` per RELATION group (relations are orders of magnitude
-    rarer than ways — per-group overhead is irrelevant here, unlike the
-    per-tile focal case) stitches open member ways into closed rings,
-    classifies outer/inner by role, and nests each inner ring inside the
-    outer that contains its first vertex (even-odd raycast from
-    `geom/core.point_in_polygon`).
-
-    Output: (id, tags, n_outer, n_inner, wkt).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from ..geom import core as gc
-
-    mem = (
-        relations
-        .select(F.col("id").alias("rel_id"), "tags",
-                F.posexplode("members").alias("mpos", "m"))
-        .filter(F.col("m.type") == "way")
-        .select("rel_id", "tags", "mpos",
-                F.col("m.memid").alias("way_id"),
-                F.col("m.role").alias("role"))
-    )
-    w = ways.select(F.col("id").alias("way_id"),
-                    F.posexplode("refs").alias("pos", "ref"))
-    n = nodes.select(
-        F.col("id").alias("ref"),
-        (F.col("lon_nano") / F.lit(1e9)).alias("lon"),
-        (F.col("lat_nano") / F.lit(1e9)).alias("lat"),
-    )
-    pts = mem.join(w, "way_id").join(n, "ref")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        rel_id = int(pdf["rel_id"].iloc[0])
-        tags = pdf["tags"].iloc[0]
-        # rebuild each member way's ordered coordinate list
-        legs: dict[int, tuple[str, list[tuple[float, float]]]] = {}
-        for (way_id,), grp in pdf.groupby(["way_id"]):
-            grp = grp.sort_values("pos")
-            legs[int(way_id)] = (grp["role"].iloc[0],
-                                 list(zip(grp["lon"], grp["lat"])))
-        # stitch open ways into closed rings per role (greedy endpoint match)
-        rings: dict[str, list[list[tuple[float, float]]]] = {"outer": [], "inner": []}
-        open_legs: dict[str, list[list[tuple[float, float]]]] = {"outer": [], "inner": []}
-        for role, coords in legs.values():
-            role = "inner" if role == "inner" else "outer"
-            if len(coords) >= 3 and coords[0] == coords[-1]:
-                rings[role].append(coords)
-            else:
-                open_legs[role].append(coords)
-        for role, pool in open_legs.items():
-            while pool:
-                cur = pool.pop(0)
-                progressed = True
-                while cur[0] != cur[-1] and progressed:
-                    progressed = False
-                    for i, leg in enumerate(pool):
-                        if leg[0] == cur[-1]:
-                            cur = cur + leg[1:]
-                        elif leg[-1] == cur[-1]:
-                            cur = cur + leg[-2::-1]
-                        else:
-                            continue
-                        pool.pop(i)
-                        progressed = True
-                        break
-                if len(cur) >= 4 and cur[0] == cur[-1]:
-                    rings[role].append(cur)
-                # un-closeable fragments are dropped (degenerate relation)
-        outers = rings["outer"]
-        if not outers:
-            return pd.DataFrame(columns=["id", "tags", "n_outer", "n_inner", "wkt"])
-        # nest each inner ring inside the outer containing its first vertex
-        holes: list[list[int]] = [[] for _ in outers]
-        shells = [np.asarray(o, dtype=np.float64) for o in outers]
-        for k, inner in enumerate(rings["inner"]):
-            px = np.array([inner[0][0]])
-            py = np.array([inner[0][1]])
-            for j, sh in enumerate(shells):
-                if bool(gc.point_in_polygon(px, py, sh)[0]):
-                    holes[j].append(k)
-                    break
-
-        def ring_txt(c):
-            return "(" + ", ".join(f"{x} {y}" for x, y in c) + ")"
-
-        parts = []
-        for j, o in enumerate(outers):
-            sub = [ring_txt(o)] + [ring_txt(rings["inner"][k]) for k in holes[j]]
-            parts.append("(" + ", ".join(sub) + ")")
-        wkt = "MULTIPOLYGON (" + ", ".join(parts) + ")"
-        return pd.DataFrame({
-            "id": [rel_id], "tags": [tags],
-            "n_outer": [len(outers)], "n_inner": [len(rings["inner"])],
-            "wkt": [wkt],
-        })
-
-    return pts.groupBy("rel_id").applyInPandas(
-        assemble, schema="id long, tags string, n_outer int, n_inner int, wkt string")

@@ -9,18 +9,11 @@ Reference analogs (/root/reference):
     `mapInPandas` over a binaryFile scan, one task per .xml/.4676 file
     (the reference's unit of parallelism too: one decoder per stream).
   - Feature types: `.../stanag4676/Stanag4676Utils.java:28-131`
-    (track_point and motion_point attribute sets) and the track rollup
-    in `.../Stanag4676IngestPlugin.java:235-470` (LineString geometry,
-    duration, min/max/avg speed, distance, point/event counts, turn /
-    u-turn / stop counts and STOP->START stop-duration pairing —
-    the switch at Stanag4676IngestPlugin.java:362-383).
+    (track_point and motion_point attribute sets).  The reference's
+    track rollup (`.../Stanag4676IngestPlugin.java:235-470`) is not
+    implemented: no query reads one.
 
-Scale shape: the per-file parse fans out as wide as the file count; the
-track rollup (`stanag_tracks`) is a keyed aggregation + one window over
-(track, time) — both shuffle once on the track key and hold only one
-track's points per group, so a 100 TB archive of many small tracks
-rolls up without any driver-side state (the reference reduces per
-track UUID in an MR reducer, the same partitioning).
+Scale shape: the per-file parse fans out as wide as the file count.
 """
 
 from __future__ import annotations
@@ -29,8 +22,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 STANAG_POINT_SCHEMA = (
     "src string, kind string, mission string, track_number string, "
@@ -171,92 +162,3 @@ def read_stanag4676(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.{xml,4676}").load(path)
              .select("path", "content"))
     return files.mapInPandas(parse, schema=STANAG_POINT_SCHEMA)
-
-
-def stanag_tracks(items: DataFrame) -> DataFrame:
-    """Item rows -> one track feature per track UUID: LINESTRING WKT,
-    time span, speed stats, haversine path length (km), point/event
-    counts, and the motion-event rollup (turn / u-turn / stop counts,
-    summed STOP->START stop duration) — the reducer-side track feature
-    of `Stanag4676IngestPlugin.java:235-470`.
-
-    Relational throughout: one window (lag over per-track time order)
-    derives both segment distances and the STOP->START pairing, then a
-    single keyed aggregation builds the feature — so the rollup is one
-    shuffle on the track key at any archive size.
-    """
-    from ..join.spatial import haversine_km_sql
-
-    key = ["src", "mission", "track_number", "track_uuid"]
-    w = Window.partitionBy("track_uuid").orderBy("ts", "item_uuid")
-
-    pts = (
-        items.filter(F.col("kind") == "track_point")
-        .withColumn("prev_lon", F.lag("lon").over(w))
-        .withColumn("prev_lat", F.lag("lat").over(w))
-        .withColumn(
-            "seg_km",
-            F.when(
-                F.col("prev_lon").isNotNull(),
-                F.expr(haversine_km_sql("lon", "lat",
-                                        "prev_lon", "prev_lat")),
-            ).otherwise(F.lit(0.0)))
-        .withColumn("pt", F.struct(
-            "ts", F.concat_ws(
-                " ", F.format_string("%s", "lon"),
-                F.format_string("%s", "lat")).alias("xy")))
-    )
-    track = pts.groupBy(*key).agg(
-        F.array_sort(F.collect_list("pt")).alias("pts"),
-        F.min("ts").alias("start_time"),
-        F.max("ts").alias("end_time"),
-        F.count("*").alias("point_count"),
-        F.min("speed").alias("min_speed"),
-        F.max("speed").alias("max_speed"),
-        F.avg("speed").alias("avg_speed"),
-        F.sum("seg_km").alias("distance_km"),
-        F.max("classification").alias("classification"),
-    ).select(
-        *key, "start_time", "end_time",
-        (F.unix_timestamp("end_time")
-         - F.unix_timestamp("start_time")).cast("double").alias("duration"),
-        "point_count", "min_speed", "max_speed", "avg_speed", "distance_km",
-        "classification",
-        F.concat(F.lit("LINESTRING ("),
-                 F.array_join(F.transform("pts", lambda s: s.xy), ", "),
-                 F.lit(")")).alias("geom_wkt"),
-    )
-
-    # motion rollup.  Counts come straight off the event rows; the
-    # STOP->START stop duration lags over ONLY the STOP/START
-    # subsequence — the reference's running stopTime survives
-    # intervening turn events (Stanag4676IngestPlugin.java:362-383), so
-    # the pairing sequence must exclude them before lag().
-    mp = items.filter(F.col("kind") == "motion_point")
-    counts = mp.groupBy("track_uuid").agg(
-        F.count("*").alias("event_count"),
-        F.sum((F.col("motion_event") == "STOP").cast("int"))
-        .alias("stop_count"),
-        F.sum(F.col("motion_event").isin("LEFT TURN", "RIGHT TURN")
-              .cast("int")).alias("turn_count"),
-        F.sum(F.col("motion_event").isin("LEFT U TURN", "RIGHT U TURN")
-              .cast("int")).alias("uturn_count"),
-    )
-    ss = (
-        mp.filter(F.col("motion_event").isin("STOP", "START"))
-        .withColumn("prev_event", F.lag("motion_event").over(w))
-        .withColumn("prev_ts", F.lag("ts").over(w))
-    )
-    stops = ss.groupBy("track_uuid").agg(
-        F.sum(F.when(
-            (F.col("motion_event") == "START")
-            & (F.col("prev_event") == "STOP"),
-            F.unix_timestamp("ts") - F.unix_timestamp("prev_ts"))
-            .otherwise(F.lit(0))).cast("double").alias("stop_duration"),
-    )
-    return (
-        track.join(counts, "track_uuid", "left")
-        .join(stops, "track_uuid", "left")
-        .na.fill({"event_count": 0, "stop_count": 0, "turn_count": 0,
-                  "uturn_count": 0, "stop_duration": 0.0})
-    )

@@ -96,28 +96,6 @@ def read_gpx(spark: SparkSession, path: str) -> DataFrame:
     return files.mapInPandas(parse, schema=GPX_POINT_SCHEMA)
 
 
-def gpx_tracks(points: DataFrame) -> DataFrame:
-    """Trackpoints -> one LINESTRING WKT per (src, track): the reference's
-    track feature (`GPXConsumer.java` trackBuilder builds a LineString of
-    the accumulated coordinates).  Pure relational: sort-in-group
-    collect_list, so it scales as a keyed aggregation."""
-    pt = F.concat_ws(" ", F.format_string("%s", "lon"),
-                     F.format_string("%s", "lat"))
-    return (
-        points.filter(F.col("kind") == "trkpt")
-        .withColumn("pt", F.struct("seg", "seq", pt.alias("xy")))
-        .groupBy("src", "track")
-        .agg(F.array_sort(F.collect_list("pt")).alias("pts"),
-             F.count("*").alias("n_points"))
-        .select(
-            "src", "track", "n_points",
-            F.concat(F.lit("LINESTRING ("),
-                     F.array_join(F.transform("pts", lambda s: s.xy),
-                                  ", "),
-                     F.lit(")")).alias("geom_wkt"))
-    )
-
-
 # GDELT v1 event-table column map — indices published in the reference's
 # GDELTUtils.java:49-90.
 _GDELT_COLS = {

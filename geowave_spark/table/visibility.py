@@ -26,7 +26,7 @@ per-row Python anywhere.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterable, Mapping
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -97,43 +97,6 @@ def _parse(tokens: list[str], i: int, auths) -> tuple[bool, int]:
     return left, i
 
 
-def compose_visibility(expressions: Iterable[str]) -> str:
-    """AND-compose per-field expressions into one row expression
-    (``VisibilityComposer`` + ``addMinimalTokens`` analog: AND terms are
-    flattened, OR sub-expressions stay parenthesized, duplicates dropped)."""
-    tokens: list[str] = []
-    seen: set[str] = set()
-    for expr in expressions:
-        e = re.sub(r"\s+", "", expr or "")
-        if not e:
-            continue
-        # split top-level AND terms; keep anything containing '|' wrapped
-        for term in _top_level_and_terms(e):
-            if "|" in term and not term.startswith("("):
-                term = f"({term})"
-            if term not in seen:
-                seen.add(term)
-                tokens.append(term)
-    return "&".join(tokens)
-
-
-def _top_level_and_terms(expr: str) -> list[str]:
-    terms, depth, cur = [], 0, []
-    for ch in expr:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "&" and depth == 0:
-            terms.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        terms.append("".join(cur))
-    return terms
-
-
 # --------------------------------------------------------------------------
 # DataFrame operators
 # --------------------------------------------------------------------------
@@ -172,43 +135,6 @@ def filter_visible(df: DataFrame, auths: Iterable[str],
     return df.filter(cond)
 
 
-def resolve_field_visibility(columns: Iterable[str],
-                             field_vis: Mapping[str, str]) -> dict[str, str]:
-    """Resolve a JSON-handler style {field-or-regex: expression} mapping to a
-    concrete per-column expression map (exact name wins, then first regex
-    match in mapping order — ``JsonFieldLevelVisibilityHandler.java:62-88``)."""
-    out: dict[str, str] = {}
-    for col in columns:
-        if col in field_vis:
-            out[col] = field_vis[col]
-            continue
-        for pat, expr in field_vis.items():
-            if re.fullmatch(pat, col):
-                out[col] = expr
-                break
-    return out
-
-
-def apply_field_visibility(df: DataFrame, field_vis: Mapping[str, str],
-                           auths: Iterable[str]) -> DataFrame:
-    """Null out columns whose (static) visibility expression fails.
-
-    ``FieldLevelVisibilityHandler`` with a table-constant field map: the
-    pass/fail of every column is known at plan time, so this is a pure
-    projection (kept column or typed NULL literal) — free under codegen.
-    """
-    aset = frozenset(auths)
-    resolved = resolve_field_visibility(df.columns, field_vis)
-    cols = []
-    for f in df.schema.fields:
-        expr = resolved.get(f.name, "")
-        if evaluate_expression(expr, aset):
-            cols.append(F.col(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
-
-
 def apply_json_field_visibility(df: DataFrame, vis_json_col: str,
                                 auths: Iterable[str],
                                 fields: Iterable[str]) -> DataFrame:
@@ -241,11 +167,3 @@ def apply_json_field_visibility(df: DataFrame, vis_json_col: str,
         out = out.withColumn(
             name, F.when(keep, F.col(name)).otherwise(F.lit(None).cast(f.dataType)))
     return out.drop(*[f"__vis_{n}" for n in fields])
-
-
-def visibility_counts(df: DataFrame, vis_col: str = "visibility") -> DataFrame:
-    """Row count per distinct visibility expression
-    (``DifferingVisibilityCountStatistic``/``FieldVisibilityCountStatistic``
-    analog) — one partial-agg groupBy, O(labels) shuffle."""
-    return (df.groupBy(F.coalesce(F.col(vis_col), F.lit("")).alias("visibility"))
-            .agg(F.count("*").alias("n_rows")))

@@ -1,4 +1,4 @@
-"""KMeans-hull and DBSCAN operator tests (reference analog: KMeans IT
+"""KMeans and DBSCAN operator tests (reference analog: KMeans IT
 `test/src/test/.../spark/GeoWaveSparkKMeansIT.java` and the DBSCAN MR
 tests — here validated against a brute-force numpy oracle)."""
 
@@ -8,21 +8,6 @@ import pytest
 
 from geowave_spark.agg import dbscan as dbscan_mod
 from geowave_spark.agg import kmeans as kmeans_mod
-from geowave_spark.geom import core as geom
-
-
-def test_convex_hull_known():
-    pts = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [2, 2], [1, 1], [3, 0.5]], float)
-    h = kmeans_mod.convex_hull(pts)
-    assert sorted(map(tuple, h)) == [(0, 0), (0, 4), (4, 0), (4, 4)]
-
-
-def test_convex_hull_contains_all():
-    rng = np.random.default_rng(7)
-    pts = rng.normal(size=(200, 2))
-    h = kmeans_mod.convex_hull(pts)
-    d = geom.point_to_polygon_distance(pts[:, 0], pts[:, 1], h.ravel())
-    assert float(d.max()) == 0.0  # every point inside or on the hull
 
 
 def test_kmeans_hulls(spark):
@@ -31,14 +16,12 @@ def test_kmeans_hulls(spark):
     xy = np.concatenate([c + rng.normal(scale=3.0, size=(80, 2)) for c in centers])
     pdf = pd.DataFrame({"pid": np.arange(len(xy)), "lon": xy[:, 0], "lat": xy[:, 1]})
     df = spark.createDataFrame(pdf)
-    clustered = kmeans_mod.kmeans_clusters(df, k=3, seed=1)
-    assert clustered.count() == len(xy)
-    hulls = kmeans_mod.cluster_hulls(clustered).toPandas()
-    assert len(hulls) == 3
-    assert hulls["n_points"].sum() == len(xy)
-    assert (hulls["hull_n"] >= 3).all()
-    # well-separated blobs: each hull stays near its own blob (span < 60 deg)
-    assert ((hulls["max_lon"] - hulls["min_lon"]) < 60).all()
+    clustered = kmeans_mod.kmeans_clusters(df, k=3, seed=1).toPandas()
+    assert len(clustered) == len(xy)
+    # well-separated blobs: each blob is exactly one cluster
+    blob = clustered["pid"] // 80
+    assert clustered.groupby(blob)["cluster"].nunique().eq(1).all()
+    assert clustered["cluster"].nunique() == 3
 
 
 def _brute_dbscan(xy: np.ndarray, ids: np.ndarray, eps: float, min_pts: int):

@@ -90,21 +90,3 @@ def test_rerun_is_fully_idempotent(spark, sf_dir, out_dir):
     summary = checkpoint.resumable_write(df, out_dir, key="o_orderkey", num_partitions=4)
     assert summary["written"] == 0 and summary["skipped"] == 4
     assert checkpoint.load(spark, out_dir).count() == df.count()
-
-
-def test_delete_where_rewrites_only_matching_files(spark, sf_dir, out_dir):
-    df = _src(spark, sf_dir)
-    checkpoint.resumable_write(df, out_dir, key="o_orderkey", num_partitions=6)
-    total = df.count()
-    to_del = df.filter("o_orderkey % 10 = 3").count()
-    assert to_del > 0
-
-    res = checkpoint.delete_where(spark, out_dir, "o_orderkey % 10 = 3")
-    assert res["deleted_rows"] == to_del
-    back = checkpoint.load(spark, out_dir)
-    assert back.count() == total - to_del
-    assert back.filter("o_orderkey % 10 = 3").count() == 0
-
-    # deleting an impossible predicate rewrites nothing (file skipping)
-    res2 = checkpoint.delete_where(spark, out_dir, "o_orderkey < 0")
-    assert res2["rewritten"] == 0 and res2["deleted_rows"] == 0

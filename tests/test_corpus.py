@@ -3,10 +3,8 @@ scaling workloads scan."""
 import shutil
 
 import pytest
-from pyspark.sql import functions as F  # noqa: N812
 
 from geowave_spark.table import corpus, images, snapshots as snap
-from geowave_spark.raster import tiles
 
 TARGET = 500
 
@@ -59,21 +57,6 @@ def test_image_points_amplify(spark, table_path):
     assert amp.count() == 3 * n
     # distinct ids survive amplification
     assert amp.select("pid").distinct().count() == 3 * n
-
-
-def test_image_tiles_matches_direct_pipeline(spark, sf_dir, table_path):
-    """Tile merge over the table scan == tile merge over direct synthesis
-    (same rows in, same merged tiles out)."""
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    mult = max(1, TARGET // n_docs)
-    via_scan = corpus.image_tiles(spark, table_path).select(
-        "res", "tile_id", "n_src", F.crc32(F.col("px")).alias("h")
-    )
-    direct = tiles.merge_tiles_df(
-        tiles.assign_tiles_df(images.images_df(spark, sf_dir, mult=mult))
-    ).select("res", "tile_id", "n_src", F.crc32(F.col("px")).alias("h"))
-    assert via_scan.count() == direct.count()
-    assert via_scan.exceptAll(direct).count() == 0
 
 
 def test_q272_alignment_python_recompute(spark, sf_dir):

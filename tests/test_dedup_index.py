@@ -32,7 +32,7 @@ def test_incremental_accumulation_equals_batch_q16(spark, sf_dir, tmp_path):
     got |= _pairs(DX.dedup_batch(spark, path, "b0", "documents"))
     for b in (1, 2):
         got |= _pairs(DX.dedup_batch(spark, path, f"b{b}", "documents"))
-        DX.append_batch(spark, f"b{b}", path)
+        S.append(DX.band_rows(spark, f"b{b}"), path)
 
     full = TEXT_QUERIES["q16_minhash_lsh_pairs"][0](spark, sf_dir)
     assert got == _pairs(full)

@@ -143,8 +143,9 @@ class TestMultiRingGeometries:
             [4.0, 1.0, 20.0], [4.0, 1.0, 20.0], [6.0, 2.0, 21.0],
             [6.0, 2.0, 21.0], self.HOLED)
         assert inter.tolist() == [False, True, False]
-        within = g.bboxes_within_polygon(
-            [4.0, 1.0], [4.0, 1.0], [6.0, 2.0], [6.0, 2.0], self.HOLED)
+        within = g.classify_bboxes(
+            [4.0, 1.0], [4.0, 1.0], [6.0, 2.0], [6.0, 2.0], [0, 0],
+            *g.pack_polygons({0: self.HOLED})[1:], within=True)
         assert within.tolist() == [False, True]
 
     def test_wkt_roundtrip_holes_and_multi(self):
@@ -171,8 +172,9 @@ class TestMultiRingGeometries:
 
 
 def _brute_cover(polys, res, max_cells, curve):
-    """Reference cover: per polygon, every bbox cell against every edge
-    in a dense (cell x edge) matrix, with no pruning."""
+    """Reference cover: per polygon, every bbox cell, inflated by the
+    1e-9 margin, against every edge in a dense (cell x edge) matrix, with
+    no pruning."""
     from geowave_spark.sfc import grid
 
     def classify(x0, y0, x1, y1, poly):
@@ -193,11 +195,11 @@ def _brute_cover(polys, res, max_cells, curve):
         r = int(grid.adaptive_res(*bb, max_cells)[0]) if res is None else res
         _, cells = grid.cover_bbox(*bb, r, curve)
         x0, y0, x1, y1 = grid.cell_bounds(cells, r, curve)
+        m = 1e-9
+        x0, y0, x1, y1 = x0 - m, y0 - m, x1 + m, y1 + m
         some, _, touch = classify(x0, y0, x1, y1, poly)
         keep = some | touch
-        m = 1e-9
-        _, every, touch = classify(x0[keep] - m, y0[keep] - m,
-                                   x1[keep] + m, y1[keep] + m, poly)
+        _, every, touch = classify(x0[keep], y0[keep], x1[keep], y1[keep], poly)
         cols["poly_id"].append(np.full(keep.sum(), pid, dtype=np.int64))
         cols["res"].append(np.full(keep.sum(), r, dtype=np.int64))
         cols["cell"].append(cells[keep].astype(np.int64))

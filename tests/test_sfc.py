@@ -72,11 +72,6 @@ def test_parent_child_consistency():
     coarse_via_parent = grid.cell_to_parent(fine, 12, 8)
     np.testing.assert_array_equal(coarse_direct, coarse_via_parent)
 
-    kids = grid.cell_to_children(int(coarse_direct[0]), 8, 10)
-    assert len(kids) == 16
-    back = grid.cell_to_parent(kids, 10, 8)
-    assert (back == coarse_direct[0]).all()
-
 
 def test_grid_disk_shape_and_wrap():
     c = grid.latlng_to_cell(np.array([179.99]), np.array([0.0]), 8)

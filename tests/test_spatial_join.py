@@ -91,47 +91,6 @@ def test_salted_join_equals_unsalted(spark, pts):
     assert "salt" in plan
 
 
-def test_build_side_selection(spark, pts):
-    """`spatial_join_rects` — the reference's JoinOptions.BuildSide knob
-    (`TieredSpatialJoin.java:103,160`): explicit strategies agree, and
-    "auto" counts the rect side against the broadcast threshold to pick."""
-    rects = pd.DataFrame({
-        "rid": [1, 2, 3],
-        "lon0": [-50.0, 100.0, -10.0], "lat0": [-20.0, 10.0, -45.0],
-        "lon1": [0.0, 140.0, 35.0], "lat1": [30.0, 60.0, -5.0],
-    })
-    rects_df = spark.createDataFrame(rects)
-
-    def pairs(df):
-        return sorted(map(tuple, df.toPandas()[["pid", "rid"]]
-                          .to_numpy().tolist()))
-
-    bc = spatial.spatial_join_rects(spark, pts, rects_df,
-                                    strategy="broadcast", res=8)
-    sh = spatial.spatial_join_rects(spark, pts, rects_df,
-                                    strategy="shuffle", res=8)
-    assert pairs(bc) == pairs(sh) and len(pairs(bc)) > 0
-
-    # auto: 3 rects fit any real threshold -> broadcast plan
-    auto_small = spatial.spatial_join_rects(spark, pts, rects_df,
-                                            strategy="auto", res=8)
-    plan = auto_small._jdf.queryExecution().executedPlan().toString()
-    assert "salt" not in plan
-    # auto with a 2-rect cap -> the 3-rect side must take the salted path
-    auto_big = spatial.spatial_join_rects(
-        spark, pts, rects_df, strategy="auto", res=8,
-        broadcast_max_rects=2)
-    plan_big = auto_big._jdf.queryExecution().executedPlan().toString()
-    assert "salt" in plan_big
-    assert pairs(auto_big) == pairs(bc)
-
-    try:
-        spatial.spatial_join_rects(spark, pts, rects_df, strategy="nope")
-        assert False, "expected ValueError"
-    except ValueError:
-        pass
-
-
 def test_salted_join_splits_hot_cell(spark, pts):
     """Hot-cell skew demonstration: 30% of all points collapsed onto one
     location (a 'city' cell).  The salted join must (a) still produce the
@@ -555,6 +514,9 @@ def _edge_case_polys():
         # would put every +inf point in 9's top-row cells inside 9
         11: np.array([-100.0, 0.0, -80.0, 0.0, -80.0, 13.0, -95.0, 13.5,
                       -80.0, 14.0, -80.0, 30.0, -100.0, 30.0]),
+        # lowest edge 1e-16 north of the lat-0 grid line: points on it
+        # encode into the row below, which the cover must keep
+        12: np.array([60.0, 1e-16, 70.0, 1e-16, 70.0, 5.0, 60.0, 5.0]),
     }
 
 
@@ -583,9 +545,10 @@ def _edge_case_points(polys) -> pd.DataFrame:
         (4.0, 97.0), (2.0, 97.0), (30.0, 105.0), (30.0, 95.0),
         (175.0, 95.0), (185.0, 75.0), (-10.0, -95.0), (-10.0, -105.0),
         (-30.0, -30.0), (-38.0, -38.0), (-56.0, 42.0), (-56.0, 62.0),
+        (65.0, 1e-16),
         # non-finite coordinates are inside no polygon
         (np.nan, 25.0), (-175.0, np.nan), (np.inf, 75.0), (30.0, np.inf),
-        (22.0, np.inf), (38.0, np.inf),
+        (22.0, np.inf), (38.0, np.inf), (-np.inf, 25.0), (30.0, -np.inf),
     ])
     x = np.concatenate(xs + [named[:, 0]])
     y = np.concatenate(ys + [named[:, 1]])
@@ -626,7 +589,7 @@ def test_edge_lists_exact_at_cell_and_domain_edges(spark, edge_case, single_tier
     assert sorted(neg.toPandas()["pid"]) == sorted(
         set(pdf["pid"]) - {p for p, _ in want})
     # the cases reach the paths they are here for
-    assert {1, 7, 8, 9, 11} <= {q for _, q in want}
+    assert {1, 7, 8, 9, 11, 12} <= {q for _, q in want}
     if not single_tier:
         tiers = cov.polygon_cover({q: polys[q] for q in (9, 11)},
                                   curve="rowmajor")["res"]

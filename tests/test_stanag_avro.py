@@ -10,8 +10,6 @@ Reference analogs (/root/reference):
 """
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 import pytest
 
@@ -86,14 +84,6 @@ STANAG_DOC = """<?xml version="1.0"?>
 """
 
 
-def _hav_km(lon1, lat1, lon2, lat2):
-    sdlat = math.sin(math.radians(lat2 - lat1) / 2)
-    sdlon = math.sin(math.radians(lon2 - lon1) / 2)
-    h = (sdlat * sdlat + math.cos(math.radians(lat1))
-         * math.cos(math.radians(lat2)) * sdlon * sdlon)
-    return 2 * 6371.0088 * math.asin(math.sqrt(h))
-
-
 def test_stanag_rows_walk():
     pdf = st._stanag_rows("a.xml", STANAG_DOC.encode())
     assert len(pdf) == 6
@@ -119,30 +109,6 @@ def test_read_stanag_distributed(spark, tmp_path):
     assert df.count() == 18
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "LocalTableScan" not in plan
-
-
-def test_stanag_tracks_rollup(spark, tmp_path):
-    (tmp_path / "m.xml").write_text(STANAG_DOC)
-    items = st.read_stanag4676(spark, str(tmp_path))
-    trk = {r["track_uuid"]: r
-           for r in st.stanag_tracks(items).collect()}
-    t1 = trk["t-001"]
-    assert t1["point_count"] == 2
-    assert t1["min_speed"] == 10.0 and t1["max_speed"] == 20.0
-    assert t1["avg_speed"] == 15.0
-    assert t1["duration"] == 60.0
-    assert t1["geom_wkt"] == "LINESTRING (8.0 50.0, 8.1 50.0)"
-    assert t1["distance_km"] == pytest.approx(
-        _hav_km(8.0, 50.0, 8.1, 50.0), rel=1e-9)
-    # motion rollup: 1 stop, 1 turn; the intervening turn does not break
-    # the STOP->START pairing (Stanag4676IngestPlugin.java:362-383)
-    assert t1["event_count"] == 3
-    assert t1["stop_count"] == 1 and t1["turn_count"] == 1
-    assert t1["uturn_count"] == 0
-    assert t1["stop_duration"] == 30.0
-    t2 = trk["t-002"]
-    assert t2["point_count"] == 1 and t2["event_count"] == 0
-    assert t2["distance_km"] == 0.0 and t2["stop_duration"] == 0.0
 
 
 # ---------------------------------------------------------------- avro

@@ -53,16 +53,6 @@ def test_read_gpx_distributed(spark, tmp_path):
     assert "MapInPandas" in plan and "LocalTableScan" not in plan
 
 
-def test_gpx_tracks_linestring(spark, tmp_path):
-    (tmp_path / "a.gpx").write_text(GPX_DOC)
-    pts = tf.read_gpx(spark, str(tmp_path))
-    trk = tf.gpx_tracks(pts).toPandas()
-    assert len(trk) == 1
-    assert trk.iloc[0]["n_points"] == 3
-    assert trk.iloc[0]["geom_wkt"] == (
-        "LINESTRING (2.0 1.0, 2.1 1.1, 2.2 1.2)")
-
-
 def test_read_gdelt_column_map(spark, tmp_path):
     # 58-column GDELT v1 row; reference indices 0/1/53/54 etc.
     vals = [""] * 58

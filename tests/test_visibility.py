@@ -60,24 +60,6 @@ def test_malformed_expressions_raise():
             ev(bad, "a", "b")
 
 
-def test_compose_visibility():
-    assert vis.compose_visibility(["a", "b"]) == "a&b"
-    assert vis.compose_visibility(["a", "", "a"]) == "a"
-    # OR sub-expression stays parenthesized
-    assert vis.compose_visibility(["a|b", "c"]) == "(a|b)&c"
-    assert vis.compose_visibility(["(a|b)", "c"]) == "(a|b)&c"
-
-
-def test_resolve_field_visibility_regex_order():
-    # JsonFieldLevelVisibilityHandler: exact key first, then first regex
-    # match in order ({"geo.*": "S", ".*": "TS"} example from its javadoc)
-    cols = ["geometry", "geo_acc", "eventName"]
-    m = vis.resolve_field_visibility(cols, {"geo.*": "S", ".*": "TS"})
-    assert m == {"geometry": "S", "geo_acc": "S", "eventName": "TS"}
-    m2 = vis.resolve_field_visibility(cols, {"geometry": "X", ".*": "TS"})
-    assert m2["geometry"] == "X"
-
-
 def test_filter_visible_dataframe(spark):
     rows = [(i, ["", "a", "b", "a&b", "(a&b)|c", "a|b&c"][i % 6]) for i in range(60)]
     df = spark.createDataFrame(rows, "id long, visibility string")
@@ -97,14 +79,6 @@ def test_filter_visible_is_codegen_in_predicate(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_apply_field_visibility_static(spark):
-    df = spark.createDataFrame([(1, 10.0, "x")], "id long, value double, props string")
-    out = vis.apply_field_visibility(df, {"value": "a&b", "props": "a"}, auths=("a",))
-    r = out.collect()[0]
-    assert r.id == 1 and r.value is None and r.props == "x"
-    assert out.schema == df.schema  # types preserved
-
-
 def test_apply_json_field_visibility(spark):
     rows = [
         (1, 5.0, '{"value":"a"}'),
@@ -117,10 +91,3 @@ def test_apply_json_field_visibility(spark):
     got = {r.id: r.value for r in out.collect()}
     assert got == {1: 5.0, 2: None, 3: 7.0, 4: 8.0}
     assert "fv" in out.columns and "__vis_value" not in out.columns
-
-
-def test_visibility_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, None), (4, "a&b")], "id long, visibility string")
-    got = {r.visibility: r.n_rows for r in vis.visibility_counts(df).collect()}
-    assert got == {"a": 2, "": 1, "a&b": 1}
