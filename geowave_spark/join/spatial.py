@@ -20,11 +20,12 @@ Re-expressed Spark-first:
                              in several cells (polygon x polygon)
 - subtractByKey           -> left_anti join on the matched-id set
 
-Scale notes (100 TB design): the only shuffle is the equi-join itself, and it
-disappears into a broadcast hash join whenever the query side is small; the
-data side is never repartitioned.  Hot cells are handled by AQE skew splits
-plus an optional salt column on the exploded cover (both sides repeat the
-cover row per salt bucket — classic broadcast-salting).
+Scale notes (100 TB design): the only shuffle is the equi-join itself.  A
+size-chosen cover join has two tiers (`_broadcast_cover`): the query cover is
+broadcast while it fits 64 MB, so the data side is never repartitioned;
+past that both sides sort-merge on the cell key and AQE splits hot cells.
+The explicitly salted joins (`_salted_join`) repeat every cover row once per
+salt and spread each cell's points over the salts by a hash of their id.
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..geom import core as geom
 from ..index import cover as cov
-from ..sfc import grid
 from ..table.views import ensure_arrow
 
 
@@ -369,18 +369,9 @@ def point_in_rects_join_salted(
     ensure_arrow(spark)
     if isinstance(rects_df, pd.DataFrame):  # test convenience
         rects_df = spark.createDataFrame(rects_df)
-    cover_df = rect_cover_df(rects_df, res, rid_col=rid_col).withColumn(
-        # replicate per salt bucket (the small multiplicative cost that buys
-        # S-way parallelism on every hot cell)
-        "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    pts_c = cov.salted(
-        cov.add_point_cells_jvm(pts, lon, lat, res), pid_col, salt_buckets
-    )
-    # force the shuffled hash join: at production scale this side exceeds
-    # any broadcast threshold, and the whole point is partitioning both
-    # sides on the salted key (a broadcast join would ignore the salt)
-    cand = pts_c.join(cover_df.hint("shuffle_hash"), ["cell", "salt"])
+    cand = _salted_join(cov.add_point_cells_jvm(pts, lon, lat, res),
+                        rect_cover_df(rects_df, res, rid_col=rid_col),
+                        ["cell"], pid_col, salt_buckets)
     out_cols = [pid_col, rid_col] + list(keep_cols or [])
     return cand.filter(
         (F.col(lon) >= F.col("lon0")) & (F.col(lon) <= F.col("lon1"))
@@ -388,57 +379,45 @@ def point_in_rects_join_salted(
     ).select(*out_cols)
 
 
-def resolve_query_side(spark: SparkSession, queries: DataFrame,
-                       broadcast_queries, disk_k: int) -> bool:
-    """Build-side auto-selection for the query-disk joins (reference
-    analog: `JoinOptions.BuildSide` unset => size-based pick in
-    `TieredSpatialJoin.java:103,160`).
+def _salted_join(pts: DataFrame, cover: DataFrame, keys: list[str],
+                 id_col: str, salt_buckets: int) -> DataFrame:
+    """Explicitly salted cell join: the cover repeats once per salt (the
+    small multiplicative cost that buys S-way parallelism on every hot
+    cell), each ``pts`` row takes salt ``pmod(hash(id), S)``, and a forced
+    shuffled hash join partitions both sides on ``keys + salt`` (a
+    broadcast would ignore the salt)."""
+    cover = cover.withColumn(
+        "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])))
+    return cov.salted(pts, id_col, salt_buckets).join(
+        cover.hint("shuffle_hash"), [*keys, "salt"])
 
-    ``broadcast_queries`` may be True/False (explicit) or "auto": estimate
-    the broadcast cover at (2k+1)^2 disk cells x ~48 B per exploded row,
-    cap rows at autoBroadcastJoinThreshold, and count the query side only
-    up to cap+1 (a LIMIT count, not a full scan)."""
-    if broadcast_queries != "auto":
-        return bool(broadcast_queries)
+
+# The broadcast tier's cap on a query cover.  At sf0.1 q07's 35 MB cover
+# joined 2x faster broadcast than through the salted shuffle.
+_BROADCAST_CAP = 64 << 20
+
+
+def _broadcast_cover(spark: SparkSession, queries: DataFrame,
+                     bytes_per_row: int, rows: int | None = None) -> bool:
+    """The tier rule of every size-chosen cover join: broadcast the query
+    cover when ``rows x bytes_per_row <= 64 MB``, else sort-merge both
+    sides on the cell key, where AQE's skew join splits hot cells.  A
+    sort-merge spills; a shuffled hash join's build did not fit at q07
+    sf10 ("not enough memory to build hash map").
+
+    ``bytes_per_row`` is the cover bytes one query row explodes to.  Spark's
+    own no-broadcast switch, ``spark.sql.autoBroadcastJoinThreshold <= 0``,
+    removes the broadcast tier.  ``rows`` (e.g. a parquet footer count)
+    keeps plan build job-free; without it the query side is counted up to
+    the cap + 1 (one LIMIT job)."""
     thresh = int(str(spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold", "10485760")).rstrip("b"))
-    if thresh <= 0:          # broadcast disabled session-wide
+    if thresh <= 0:
         return False
-    per_row = 48 * (2 * disk_k + 1) ** 2
-    cap = max(1, thresh // per_row)
-    return queries.limit(cap + 1).count() <= cap
-
-
-def _bigbig_cand(spark, pts_c, q_cover, pid_col, per_row, queries,
-                 salt_buckets, shuffle_strategy):
-    """Big-big candidate join: build-side-sized strategy pick (the r5
-    sf10 sweep's lesson).
-
-    The salted ShuffledHashJoin replicates the whole query cover
-    ``salt_buckets`` times and builds an in-memory hash map per
-    partition — fastest when that build fits (hash maps never sort),
-    but SHJ has NO spill: a 100x query side pushed the per-partition
-    build past executor memory (q07 sf10: "There is not enough memory
-    to build hash map").  Past a ~256 MB estimated build the join
-    flips to an UNSALTED sort-merge on the cell key: SMJ sorts spill
-    gracefully and AQE's skew-join splitting (enabled session-wide)
-    replaces the salt for hot cells.  ``shuffle_strategy``: "auto"
-    (LIMIT-count estimate), "hash", or "merge" (callers that know the
-    size from table metadata pass it explicitly, keeping plan build
-    action-free)."""
-    if shuffle_strategy == "auto":
-        cap = max(1, (256 << 20) // (per_row * salt_buckets))
-        use_hash = queries.limit(cap + 1).count() <= cap
-    else:
-        use_hash = shuffle_strategy == "hash"
-    if use_hash:
-        q_cover = q_cover.withColumn(
-            "salt",
-            F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
-        )
-        pts_c = cov.salted(pts_c, pid_col, salt_buckets)
-        return pts_c.join(q_cover.hint("shuffle_hash"), ["cell", "salt"])
-    return pts_c.join(q_cover.hint("merge"), "cell")
+    cap = max(1, _BROADCAST_CAP // bytes_per_row)
+    if rows is None:
+        rows = queries.limit(cap + 1).count()
+    return rows <= cap
 
 
 def within_distance_join(
@@ -450,9 +429,7 @@ def within_distance_join(
     pid_col: str = "pid",
     qid_col: str = "qid",
     res: int = 8,
-    broadcast_queries: bool | str = "auto",
-    salt_buckets: int = 8,
-    shuffle_strategy: str = "auto",
+    query_rows: int | None = None,
 ) -> DataFrame:
     """All (point, query) pairs with planar distance <= radius.
 
@@ -461,28 +438,22 @@ def within_distance_join(
     expanded by ceil(radius / cell_height) rings (grid_disk), then candidates
     are refined with the exact distance predicate (pure JVM arithmetic).
 
-    ``broadcast_queries`` picks the physical strategy for the candidate
-    join (reference analog: build-side selection in TieredSpatialJoin):
-    "auto" (default) counts the query side against the session broadcast
-    threshold (`resolve_query_side`); True broadcasts the query-side
-    cover — zero shuffles, right
-    whenever the query set fits an executor; False runs a SALTED shuffled
-    hash join (`TieredSpatialJoin.java:168-172` hash-partitions both
-    sides) — the scale path when BOTH sides are large, with hot cells
-    split ``salt_buckets`` ways.  Results are identical; equality is
-    asserted in tests/test_spatial_join.py.
+    The candidate join broadcasts the query cover or sort-merges on the
+    cell (`_broadcast_cover`, ~48 B per disk cell); ``query_rows``, the
+    query side's row count when the caller knows it from metadata, saves
+    the LIMIT count.  Both tiers return the same pairs (asserted in
+    tests/test_spatial_join.py).
     """
     cell_h = 180.0 / (1 << res)
     k = int(np.ceil(radius / cell_h))
-    broadcast_queries = resolve_query_side(spark, queries,
-                                           broadcast_queries, k)
+    b = _broadcast_cover(spark, queries, 48 * (2 * k + 1) ** 2, query_rows)
 
     # distributed candidate expansion: one fused point->disk UDF, exploded —
     # no driver-side collect, so the query side may itself be large.  The
     # UDF dedups each disk in-batch, so (qid, cell) pairs are unique with
     # no shuffle, and since each data point maps to exactly one cell the
-    # final (pid, qid) pairs are unique by construction too: with
-    # broadcast_queries the whole join runs with ZERO shuffles.
+    # final (pid, qid) pairs are unique by construction too: the broadcast
+    # tier runs the whole join with ZERO shuffles.
     q_cover = queries.select(
         F.col(qid_col), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
     ).withColumn(
@@ -492,12 +463,7 @@ def within_distance_join(
     )
 
     pts_c = cov.add_point_cells_jvm(pts, "lon", "lat", res)
-    if broadcast_queries:
-        cand = pts_c.join(F.broadcast(q_cover), "cell")
-    else:
-        cand = _bigbig_cand(spark, pts_c, q_cover, pid_col,
-                            48 * (2 * k + 1) ** 2, queries,
-                            salt_buckets, shuffle_strategy)
+    cand = pts_c.join(F.broadcast(q_cover) if b else q_cover.hint("merge"), "cell")
     # (a-b)*(a-b), not pow(a-b, 2): Multiply is bit-identical to the SQL
     # oracle's formulation; Math.pow may differ in the last ulp
     dx = F.col("lon") - F.col("qlon")
@@ -624,8 +590,6 @@ def polygon_polygon_join(
     At 100 TB only the dedup shuffles; swap the broadcast for the salted
     shuffle pattern (q56) when B outgrows broadcast size.
     """
-    from ..table.views import ensure_arrow
-
     ensure_arrow(spark)
     vxs = [f"vx{i}" for i in range(ka)]
     vys = [f"vy{i}" for i in range(ka)]
@@ -697,7 +661,6 @@ def polygon_polygon_join_bigbig(
     ka: int = 6,
     kb: int = 6,
     res: int = 6,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Polygon x polygon intersects with BOTH sides DataFrames — neither
     collected nor broadcast (the 100 TB regime `polygon_polygon_join`'s
@@ -710,10 +673,10 @@ def polygon_polygon_join_bigbig(
 
       cover:  each side covers DISTRIBUTED from its vertex columns
               (`_vertex_bbox_cover`); B's cover is replicated per salt,
-              A's rows salt by hash(aid) — hot cells split S ways
-      cand:   ShuffledHashJoin on (cell, salt), projected to bare
-              (aid, bid) BEFORE the dedup shuffle (the covers' wide
-              vertex payloads never shuffle twice)
+              A's rows salt by hash(aid) — hot cells split 8 ways
+      cand:   ShuffledHashJoin on (cell, salt) (`_salted_join`),
+              projected to bare (aid, bid) BEFORE the dedup shuffle
+              (the covers' wide vertex payloads never shuffle twice)
       refine: candidates re-join each side's vertex columns by id (plain
               equi-joins — narrow keys, the scale-canonical shape), then
               the same chunked codegen `poly_intersect_terms_sql`
@@ -724,17 +687,11 @@ def polygon_polygon_join_bigbig(
     tests/test_spatial_join.py; the plan pin checks the candidate join is
     a ShuffledHashJoin with no LocalTableScan on either cover.
     """
-    from ..table.views import ensure_arrow
-
     ensure_arrow(spark)
-    a_cov = cov.salted(
-        _vertex_bbox_cover(polys_a, ka, res).select(aid_col, "cell"),
-        aid_col, salt_buckets)
-    b_cov = _vertex_bbox_cover(polys_b, kb, res).select(bid_col, "cell") \
-        .withColumn("salt", F.explode(
-            F.array(*[F.lit(i) for i in range(salt_buckets)])))
     cand = (
-        a_cov.join(b_cov.hint("shuffle_hash"), ["cell", "salt"])
+        _salted_join(_vertex_bbox_cover(polys_a, ka, res).select(aid_col, "cell"),
+                     _vertex_bbox_cover(polys_b, kb, res).select(bid_col, "cell"),
+                     ["cell"], aid_col, 8)
         .select(aid_col, bid_col)
         .dropDuplicates([aid_col, bid_col])
     )
@@ -776,7 +733,6 @@ def rect_overlay_join(
     res: int = 7,
     aid_col: str = "aid",
     bid_col: str = "bid",
-    broadcast_b: bool = True,
 ) -> DataFrame:
     """Overlay (intersection-area) join of two rectangle DataFrames —
     (aid, bid, area_micro) for every strictly-overlapping pair.
@@ -788,15 +744,13 @@ def rect_overlay_join(
     has no area-of-overlay op).
 
     Scale shape: both sides cover distributedly (`rect_cover_df`, Arrow
-    UDF + explode — never the driver), equi-join on the cell key, codegen
-    refine.  Duplicate suppression is shuffle-free: a pair is emitted ONLY
-    in the cell containing the intersection's SW corner — that point lies
-    inside both rects, so exactly one common cover cell owns each pair (no
-    dropDuplicates pass, the `full`-flag trick of the polygon join applied
-    to overlays).  Intersection area floors to integer micro-deg^2 from
-    IEEE-exact min/max/mul, so oracle hashes match bit-for-bit.  Set
-    ``broadcast_b=False`` for big-big (the cell join then shuffles; salt
-    with `cov.salted` upstream if a hot cell skews).
+    UDF + explode — never the driver), equi-join on the cell key against
+    B's broadcast cover, codegen refine.  Duplicate suppression is
+    shuffle-free: a pair is emitted ONLY in the cell containing the
+    intersection's SW corner — that point lies inside both rects, so
+    exactly one common cover cell owns each pair (no dropDuplicates pass,
+    the `full`-flag trick of the polygon join applied to overlays).  Intersection area floors to integer micro-deg^2 from
+    IEEE-exact min/max/mul, so oracle hashes match bit-for-bit.
     """
     ensure_arrow(spark)
     from ..table import geo
@@ -809,7 +763,7 @@ def rect_overlay_join(
         .withColumnRenamed("lon1", "blon1").withColumnRenamed("lat1", "blat1")
     sw_cell = geo.rowmajor_cell_sql(
         "greatest(alon0, blon0)", "greatest(alat0, blat0)", res)
-    pairs = ca.join(F.broadcast(cb) if broadcast_b else cb, "cell").filter(
+    pairs = ca.join(F.broadcast(cb), "cell").filter(
         (F.col("alon0") < F.col("blon1")) & (F.col("blon0") < F.col("alon1"))
         & (F.col("alat0") < F.col("blat1")) & (F.col("blat0") < F.col("alat1"))
         & (F.col("cell") == F.expr(sw_cell))
@@ -841,9 +795,6 @@ def within_distance_join_geodesic(
     pid_col: str = "pid",
     qid_col: str = "qid",
     res: int = 7,
-    broadcast_queries: bool | str = "auto",
-    salt_buckets: int = 8,
-    shuffle_strategy: str = "auto",
 ) -> DataFrame:
     """All (point, query) pairs within a GEODESIC radius in km — the
     "within 5 km" query planar degrees cannot express.
@@ -852,13 +803,13 @@ def within_distance_join_geodesic(
     (`grid.geodisk_cells`: lon rings widen by 1/cos(lat), full wrap near
     the poles — the reference's OrthodromicDistancePartitioner sizes its
     neighbor grid the same way); the refine is the exact haversine,
-    evaluated as pure JVM SQL (`haversine_km_sql`).  Strategy selection
-    mirrors `within_distance_join`.
+    evaluated as pure JVM SQL (`haversine_km_sql`).  The candidate join's
+    tier comes from `_broadcast_cover`, as in `within_distance_join`, with
+    the disk sized by the mean cell height.
     """
     cell_h_km = 180.0 / (1 << res) * 111.195  # mean km per cell height
-    broadcast_queries = resolve_query_side(
-        spark, queries, broadcast_queries,
-        int(np.ceil(radius_km / cell_h_km)))
+    k = int(np.ceil(radius_km / cell_h_km))
+    b = _broadcast_cover(spark, queries, 48 * (2 * k + 1) ** 2)
     q_cover = queries.select(
         F.col(qid_col), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
     ).withColumn(
@@ -867,13 +818,7 @@ def within_distance_join_geodesic(
             F.col("qlon"), F.col("qlat"))),
     )
     pts_c = cov.add_point_cells_jvm(pts, "lon", "lat", res)
-    if broadcast_queries:
-        cand = pts_c.join(F.broadcast(q_cover), "cell")
-    else:
-        k_geo = int(np.ceil(radius_km / cell_h_km))
-        cand = _bigbig_cand(spark, pts_c, q_cover, pid_col,
-                            48 * (2 * k_geo + 1) ** 2, queries,
-                            salt_buckets, shuffle_strategy)
+    cand = pts_c.join(F.broadcast(q_cover) if b else q_cover.hint("merge"), "cell")
     dist = F.expr(haversine_km_sql("lon", "lat", "qlon", "qlat"))
     return (
         cand.withColumn("dist_km", dist)
@@ -894,7 +839,6 @@ def spatiotemporal_window_join(
     wid_col: str = "wid",
     res: int = 7,
     tbin: int = 86_400,
-    broadcast_windows: bool | str = "auto",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Spatiotemporal window join: every (point, window) pair with the point
@@ -917,17 +861,12 @@ def spatiotemporal_window_join(
     composite binning.
 
     ``windows`` columns: (wid, lon0, lat0, lon1, lat1, t0, t1) with t0/t1
-    in the same epoch unit as ``ts``.  ``broadcast_windows='auto'`` counts
-    the exploded estimate against autoBroadcastJoinThreshold; the shuffle
-    path hash-partitions both sides on the composite key (no salting
-    needed: tbin already spreads hot cells).
+    in the same epoch unit as ``ts``.  The window cover is broadcast or
+    sort-merged on the composite key by `_broadcast_cover`, sized at
+    ~120 B per cover row and a typical ~16 cells x ~4 bins per window (no
+    salting needed: tbin already spreads hot cells).
     """
-    if broadcast_windows == "auto":
-        thresh = int(spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760").rstrip("b"))
-        # ~120 B/cover-row, ~16 cells x ~4 bins typical fan-out
-        n = windows.limit(max(1, thresh // (120 * 64)) + 1).count()
-        broadcast_windows = n <= max(1, thresh // (120 * 64))
+    b = _broadcast_cover(spark, windows, 120 * 64)
     w_cover = windows.select(
         wid_col, "lon0", "lat0", "lon1", "lat1", "t0", "t1",
         F.explode(
@@ -938,10 +877,8 @@ def spatiotemporal_window_join(
         "tbin", F.explode(F.expr(f"sequence(t0 div {tbin}, t1 div {tbin})")))
     pts_k = cov.add_point_cells_jvm(pts, lon, lat, res).withColumn(
         "tbin", F.expr(f"{ts} div {tbin}"))
-    if broadcast_windows:
-        cand = pts_k.join(F.broadcast(w_cover), ["cell", "tbin"])
-    else:
-        cand = pts_k.join(w_cover.hint("shuffle_hash"), ["cell", "tbin"])
+    cand = pts_k.join(F.broadcast(w_cover) if b else w_cover.hint("merge"),
+                      ["cell", "tbin"])
     return cand.filter(
         (F.col(lon) >= F.col("lon0")) & (F.col(lon) <= F.col("lon1"))
         & (F.col(lat) >= F.col("lat0")) & (F.col(lat) <= F.col("lat1"))
@@ -975,7 +912,6 @@ def snap_to_segments(
     lat: str = "lat",
     sid_col: str = "sid",
     res: int = 7,
-    broadcast_segments: bool = True,
 ) -> DataFrame:
     """Map matching: snap every point to its NEAREST segment within
     ``radius`` (planar degrees) — nearest-neighbor against a polyline
@@ -995,10 +931,8 @@ def snap_to_segments(
     engines.  Returns (pid, sid, d2_micro); points with no segment in
     range drop (inner semantics).
 
-    ``segs`` columns: (sid, ax, ay, bx, by).  The segment side broadcasts
-    by default (road networks are the small side at training scale); set
-    ``broadcast_segments=False`` for a shuffle_hash cell join when it
-    is not.
+    ``segs`` columns: (sid, ax, ay, bx, by).  The segment cover is
+    broadcast (road networks are the small side).
     """
     r = float(radius)
     s = segs.select(
@@ -1010,10 +944,7 @@ def snap_to_segments(
         ).alias("cell"),
     )
     pts_c = cov.add_point_cells_jvm(pts, lon, lat, res)
-    if broadcast_segments:
-        cand = pts_c.join(F.broadcast(s), "cell")
-    else:
-        cand = pts_c.join(s.hint("shuffle_hash"), "cell")
+    cand = pts_c.join(F.broadcast(s), "cell")
     d2 = seg_dist2_sql(lon, lat, "ax", "ay", "bx", "by")
     enc = (f"cast(floor(({d2}) * 1000000e0) as bigint) * 68719476736 "
            f"+ {sid_col}")
@@ -1042,7 +973,6 @@ def spatiotemporal_knn(
     q_ts: str = "qsec",
     res: int = 5,
     tbin: int = 86_400,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Bounded spatiotemporal kNN: for every query (point, time), the k
     nearest points within ``radius`` (planar degrees) AND within
@@ -1056,14 +986,13 @@ def spatiotemporal_knn(
     Plan: query side explodes to its cell DISK (ring count derived from
     radius / cell height — any point within radius is covered) x covered
     time bins; the point side computes its single (cell, tbin)
-    closed-form in JVM; ONE hash equi-join, codegen dist+time refine,
+    closed-form in JVM; ONE broadcast hash equi-join, codegen dist+time refine,
     then one row_number window per query ordered by (d2_micro, pid) —
     integer keys, so rank ties are deterministic in both engines.
     Candidates are unique by construction (disk cells deduped in-batch,
     distinct bins), so no dedup shuffle precedes the window.
     """
     kr = int(np.ceil(radius / (180.0 / (1 << res))))
-    bins = lag_s // tbin + 1
     q = queries.select(
         qid_col, F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
         F.col(q_ts).alias("_qs"),
@@ -1074,13 +1003,9 @@ def spatiotemporal_knn(
         F.explode(F.expr(
             f"sequence((_qs - {lag_s}) div {tbin}, (_qs + {lag_s}) div {tbin})")),
     )
-    del bins
     pts_k = cov.add_point_cells_jvm(pts, "lon", "lat", res).withColumn(
         "tbin", F.expr(f"{pts_ts} div {tbin}"))
-    if broadcast_queries:
-        cand = pts_k.join(F.broadcast(q), ["cell", "tbin"])
-    else:
-        cand = pts_k.join(q.hint("shuffle_hash"), ["cell", "tbin"])
+    cand = pts_k.join(F.broadcast(q), ["cell", "tbin"])
     d2 = ("((qlon - lon) * (qlon - lon) + (qlat - lat) * (qlat - lat))")
     refined = cand.filter(F.expr(
         f"{d2} <= {radius * radius!r} AND abs({pts_ts} - _qs) <= {lag_s}"

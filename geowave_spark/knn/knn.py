@@ -5,7 +5,8 @@ Reference analog: `analytics/mapreduce/.../nn/NNMapReduce.java:59-145` in
 top-K selection, dedup across partitions.  Re-expressed Spark-first:
 
 1. encode query points at a coarse resolution, explode a k-ring grid_disk
-   as the broadcast candidate cell set,
+   as the candidate cell set (broadcast while it fits, see
+   `join.spatial._broadcast_cover`),
 2. equi-join data points on cell, compute exact distance (pure JVM),
 3. `row_number()` over Window(partitionBy=query, orderBy=dist) <= k,
 4. correctness guard: a query's k-th neighbor must be closer than the
@@ -18,10 +19,18 @@ SQL window oracle exactly.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..index import cover as cov
+from ..join.spatial import _broadcast_cover, haversine_km_sql
+from ..table import geo as geo_sql
+
+# ring-expansion loop: first ring (cells) / first radius (km), doublings
+# before the brute-force tail, and the tail's bound on unresolved queries
+_INITIAL_RING = 1
+_R0_KM = 400.0
+_MAX_ITERS = 8
+_BRUTE_TAIL_MAX = 10_000
 
 
 def knn_join(
@@ -33,46 +42,31 @@ def knn_join(
     pid_col: str = "pid",
     qid_col: str = "qid",
     res: int = 6,
-    initial_ring: int = 1,
-    max_iters: int = 8,
-    broadcast_queries: bool | str = "auto",
-    salt_buckets: int = 8,
-    brute_tail_max: int | None = 10_000,
 ) -> DataFrame:
     """For each query point, the k nearest data points (planar metric).
 
     Returns (qid, pid, dist, rank).  Deterministic: ties broken by pid.
 
-    ``broadcast_queries`` defaults to "auto" (count the query side
-    against the session broadcast threshold via
-    `spatial.resolve_query_side`); False switches every ring iteration's candidate
-    join from broadcast-hash to a SALTED shuffled hash join (query cover
-    replicated per salt, data side salted by hash(pid)) — the big-big
-    path when the query set itself is beyond broadcast size (reference:
-    `TieredSpatialJoin.java:168-172` hash-partitions both sides).  The
-    remaining/done bookkeeping joins stay on the (shrinking) query side.
+    Every ring iteration picks its candidate join's tier afresh with
+    `spatial._broadcast_cover` over the still-unresolved queries: the
+    ring's disk cover is broadcast while it fits, else both sides
+    sort-merge on the cell.  The remaining/done bookkeeping joins stay on
+    the (shrinking) query side.
 
-    ``brute_tail_max`` bounds the brute-force fallback for queries still
-    unresolved after ``max_iters`` ring doublings: if more than this many
-    remain, raise instead of silently turning the job into a cross join
-    (default 10_000).  Pass ``None`` for the pre-r3 always-correct
-    unbounded contract.
+    The brute-force fallback for queries still unresolved after
+    ``_MAX_ITERS`` ring doublings is bounded: if more than
+    ``_BRUTE_TAIL_MAX`` remain, raise instead of silently turning the job
+    into a cross join.
     """
     cell_h = 180.0 / (1 << res)
-    from ..join.spatial import resolve_query_side
-    broadcast_queries = resolve_query_side(
-        spark, queries, broadcast_queries, initial_ring)
-
     q_named = queries.select(
         F.col(qid_col), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
     )
     # data side: closed-form row-major cell (pure JVM, codegen) — the big
     # table never enters Python; only the small query side pays an Arrow
     # round trip (the fused disk UDF below, row-major to match)
-    from ..table import geo as geo_sql
-
     pts_c = pts.select(pid_col, "lon", "lat").withColumn(
-        "cell", F.expr(geo_sql.rowmajor_cell_sql("lon", "lat", res))
+        "jcell", F.expr(geo_sql.rowmajor_cell_sql("lon", "lat", res))
     )
 
     win = Window.partitionBy(qid_col).orderBy(F.col("dist").asc(), F.col(pid_col).asc())
@@ -87,8 +81,8 @@ def knn_join(
 
     remaining = q_named
     results = None
-    ring = initial_ring
-    for _ in range(max_iters):
+    ring = _INITIAL_RING
+    for _ in range(_MAX_ITERS):
         # fused point->disk UDF dedups each disk in-batch, so the exploded
         # (qid, jcell) pairs are unique with no dropDuplicates shuffle
         q_cover = remaining.withColumn(
@@ -99,18 +93,9 @@ def knn_join(
                 )
             ),
         )
-        if broadcast_queries:
-            cand = pts_c.withColumnRenamed("cell", "jcell").join(
-                F.broadcast(q_cover), "jcell"
-            )
-        else:
-            q_salted = q_cover.withColumn(
-                "salt",
-                F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
-            )
-            cand = cov.salted(
-                pts_c.withColumnRenamed("cell", "jcell"), pid_col, salt_buckets
-            ).join(q_salted.hint("shuffle_hash"), ["jcell", "salt"])
+        b = _broadcast_cover(spark, remaining, 48 * (2 * ring + 1) ** 2)
+        cand = pts_c.join(F.broadcast(q_cover) if b else q_cover.hint("merge"),
+                          "jcell")
         # persist the per-iteration top-k (tiny: <= k rows per query): the
         # convergence check executes it once, and without the persist the
         # final materialization would re-run every iteration's join+window
@@ -139,15 +124,11 @@ def knn_join(
         # tail is explicitly BOUNDED: a full-scan cross join per stubborn
         # query is only affordable for a residue, and at 10^9 queries an
         # unbounded tail would silently become the whole job — fail loudly
-        # instead so the caller raises max_iters/initial_ring.
-        if brute_tail_max is not None and (
-                remaining.limit(brute_tail_max + 1).count() > brute_tail_max):
-            n_tail = brute_tail_max
+        # instead.
+        if remaining.limit(_BRUTE_TAIL_MAX + 1).count() > _BRUTE_TAIL_MAX:
             raise RuntimeError(
-                f"knn_join brute-force tail exceeds brute_tail_max="
-                f"{brute_tail_max} ({n_tail}+ queries unresolved after "
-                f"{max_iters} ring doublings); raise max_iters, "
-                f"initial_ring, or brute_tail_max")
+                f"knn_join brute-force tail exceeds {_BRUTE_TAIL_MAX} "
+                f"queries unresolved after {_MAX_ITERS} ring doublings")
         cand = pts_c.crossJoin(F.broadcast(remaining))
         topk = (
             cand.withColumn("dist", dist)
@@ -168,9 +149,6 @@ def knn_join_geodesic(
     pid_col: str = "pid",
     qid_col: str = "qid",
     res: int = 6,
-    r0_km: float = 400.0,
-    max_iters: int = 8,
-    brute_tail_max: int | None = 10_000,
 ) -> DataFrame:
     """kNN under the GEODESIC (haversine km) metric — the reference's
     actual kNN metric (`OrthodromicDistancePartitioner.java` +
@@ -184,11 +162,8 @@ def knn_join_geodesic(
     the covered cells is farther than r, so a proven query can never be
     beaten by an unexplored point.  Stubborn queries fall back to brute
     force (correctness over speed for the tail), bounded by
-    ``brute_tail_max`` (None = unbounded, the pre-r3 contract).
+    ``_BRUTE_TAIL_MAX``.
     """
-    from ..join.spatial import haversine_km_sql
-    from ..table import geo as geo_sql
-
     q_named = queries.select(
         F.col(qid_col), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
     )
@@ -201,8 +176,8 @@ def knn_join_geodesic(
 
     remaining = q_named
     results = None
-    r = r0_km
-    for _ in range(max_iters):
+    r = _R0_KM
+    for _ in range(_MAX_ITERS):
         q_cover = remaining.withColumn(
             "cell",
             F.explode(cov.point_geodisk_cells_udf(res, r)(
@@ -227,13 +202,10 @@ def knn_join_geodesic(
         r *= 2
     else:
         # bounded brute tail — same contract as knn_join above
-        if brute_tail_max is not None and (
-                remaining.limit(brute_tail_max + 1).count() > brute_tail_max):
-            n_tail = brute_tail_max
+        if remaining.limit(_BRUTE_TAIL_MAX + 1).count() > _BRUTE_TAIL_MAX:
             raise RuntimeError(
-                f"knn_join_geodesic brute-force tail exceeds "
-                f"brute_tail_max={brute_tail_max} ({n_tail}+ queries "
-                f"unresolved after {max_iters} ring doublings)")
+                f"knn_join_geodesic brute-force tail exceeds {_BRUTE_TAIL_MAX} "
+                f"queries unresolved after {_MAX_ITERS} radius doublings")
         cand = pts_c.crossJoin(F.broadcast(remaining))
         topk = (
             cand.withColumn("dist", dist)

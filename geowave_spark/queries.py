@@ -609,29 +609,12 @@ def q07_distance_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     pts = spark.sql(geo.lineitem_points_sql())
     qs = spark.sql(geo.customer_points_sql()).withColumnRenamed("cid", "qid")
-    # SIZE-DERIVED build side (metadata-only, no scan job): the query
-    # side is the full customer table, whose cover is ~35 MB at sf0.1 —
-    # comfortably executor-sized but past the conservative 10 MB
-    # autoBroadcastJoinThreshold (the "auto" fallback measured 2x
-    # slower there), so rounds 1-4 pinned broadcast=True.  The r5 sf10
-    # sweep killed that pin: at 100x the same cover is ~3.5 GB and the
-    # fixed broadcast dies of GC overhead — the classic
-    # broadcast-a-growing-side scale bug.  The choice now mirrors
-    # resolve_query_side's estimate with an executor-honest 64 MB cap:
-    # broadcast through sf0.1, salted shuffle beyond (plan equality is
-    # asserted in tests/test_spatial_join.py).
-    import math as _math
-
-    k_disk = int(_math.ceil(2.0 / (180.0 / (1 << 8))))
-    per_row = 48 * (2 * k_disk + 1) ** 2
+    # the footer row count picks the join tier without a job: the customer
+    # cover (~35 MB at sf0.1) broadcasts, and at sf10 (~3.5 GB) it
+    # sort-merges instead of dying of GC overhead in a broadcast
     n_q = _parquet_num_rows(os.path.join(sf_dir, "customer.parquet"))
-    bcast = per_row * n_q <= (64 << 20)
-    # past broadcast, pick hash vs merge from the same metadata count
-    # (explicit strategy keeps plan build action-free for the audit)
-    strat = "hash" if per_row * n_q * 8 <= (256 << 20) else "merge"
     pairs = spatial.within_distance_join(spark, pts, qs, radius=2.0, qid_col="qid",
-                                         res=8, broadcast_queries=bcast,
-                                         shuffle_strategy=strat)
+                                         res=8, query_rows=n_q)
     return (
         pairs.groupBy("qid")
         .agg(
@@ -990,8 +973,7 @@ def _q89_body(d) -> str:
     IDW would hash-diverge on summation order).
     """
     n = 64
-    x = f"least(greatest(cast(ceil((lon + 180e0) / 360e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    y = f"least(greatest(cast(ceil((lat + 90e0) / 180e0 * {n}) as bigint) - 1, 0), {n - 1})"
+    x, y = geo.grid_xy_sql("lon", "lat", n)
     off = d.explode(d.seq("-1", "1"))
     off2 = d.explode(d.seq("-1", "1"))
     cx = f"((tx + 0.5e0) * 360e0 / {n} - 180e0)"
@@ -1097,8 +1079,7 @@ def _q93_body(d) -> str:
     `//` floors, and deviation products go negative.
     """
     n = 64
-    x = f"least(greatest(cast(ceil((lon + 180e0) / 360e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    y = f"least(greatest(cast(ceil((lat + 90e0) / 180e0 * {n}) as bigint) - 1, 0), {n - 1})"
+    x, y = geo.grid_xy_sql("lon", "lat", n)
     off = d.explode(d.seq("-1", "1"))
     off2 = d.explode(d.seq("-1", "1"))
     return f"""
@@ -1164,8 +1145,7 @@ def _q100_body(d) -> str:
     both on well-spread cell keys.  Top 25 by numerator with (x, y)
     tiebreak keeps the LIMIT deterministic in both engines."""
     n = 64
-    x = f"least(greatest(cast(ceil((lon + 180e0) / 360e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    y = f"least(greatest(cast(ceil((lat + 90e0) / 180e0 * {n}) as bigint) - 1, 0), {n - 1})"
+    x, y = geo.grid_xy_sql("lon", "lat", n)
     off = d.explode(d.seq("-1", "1"))
     off2 = d.explode(d.seq("-1", "1"))
     return f"""
@@ -1236,8 +1216,7 @@ def _q102_body() -> str:
     grid (a real deployment would pass months on res 6 — the statistic is
     bin-agnostic).  Deterministic top-25 by (S desc, x, y)."""
     n = 16
-    x = f"least(greatest(cast(ceil((lon + 180e0) / 360e0 * {n}) as bigint) - 1, 0), {n - 1})"
-    y = f"least(greatest(cast(ceil((lat + 90e0) / 180e0 * {n}) as bigint) - 1, 0), {n - 1})"
+    x, y = geo.grid_xy_sql("lon", "lat", n)
     return f"""
 WITH e AS (
   SELECT {x} AS x, {y} AS y,
@@ -1573,21 +1552,13 @@ def q126_rasterize_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     res, n = 6, 64
     xs = ", ".join(f"vx{k}" for k in range(6))
     ys = ", ".join(f"vy{k}" for k in range(6))
-
-    def gidx(b: str, lon: bool) -> str:
-        span, lo = (360, 180) if lon else (180, 90)
-        return (f"least(greatest(cast(ceil(({b} + {lo}e0) / {span}e0 * {n}) "
-                f"as bigint) - 1, 0), {n - 1})")
-
+    x0, y0 = geo.grid_xy_sql(f"least({xs})", f"least({ys})", n)
+    x1, y1 = geo.grid_xy_sql(f"greatest({xs})", f"greatest({ys})", n)
     cx, cy = geo.cell_center_sql(res)
     hx = spark.sql(geo.hex_a_sql())
     cov = (
-        hx.withColumn("gx", F.expr(
-            f"explode(sequence({gidx(f'least({xs})', True)}, "
-            f"{gidx(f'greatest({xs})', True)}))"))
-        .withColumn("gy", F.expr(
-            f"explode(sequence({gidx(f'least({ys})', False)}, "
-            f"{gidx(f'greatest({ys})', False)}))"))
+        hx.withColumn("gx", F.expr(f"explode(sequence({x0}, {x1}))"))
+        .withColumn("gy", F.expr(f"explode(sequence({y0}, {y1}))"))
         .withColumn("cx", F.expr(cx))
         .withColumn("cy", F.expr(cy))
     )
@@ -3627,8 +3598,8 @@ def q188_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed-vs-brute contract as `GeoWaveSparkSpatialJoinIT.java:228-255`.
 
     Scale shape: candidate generation is the q07/q51 broadcast-cover
-    join (salted-shuffle fallback when the point set outgrows the
-    broadcast threshold); the K arithmetic is three rows."""
+    join (a sort-merge on the cell once the point set's cover passes
+    64 MB); the K arithmetic is three rows."""
     register_views(spark, sf_dir)
     pts = spark.sql(geo.customer_points_sql())
     qs = pts.select(F.col("cid").alias("qid"), "lon", "lat")

@@ -339,9 +339,8 @@ def _q290_candidates(spark: SparkSession) -> DataFrame:
     res-6 cells (exact recall: any point within R of a segment lies
     inside the expanded bbox, hence inside its cover); observations
     compute their single cell closed-form in JVM; ONE broadcast hash
-    equi-join on cell (the road network is the fixed small side — pass a
-    bigger network through `snap_to_segments(broadcast_segments=False)`
-    for the salted shuffle variant), then the exact gate + integer-micro
+    equi-join on cell (the road network is the fixed small side, as in
+    `snap_to_segments`), then the exact gate + integer-micro
     emission refine in codegen.  Candidates are unique by construction
     (one cell per obs, distinct cover cells per segment), so no dedup
     shuffle.  This replaces the r3 fixture-capped obs x segs

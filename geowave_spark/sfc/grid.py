@@ -35,10 +35,15 @@ def _normalize(v: np.ndarray, lo: float, hi: float, r: int) -> np.ndarray:
 
     Matches the reference's SFC dimension normalization: interior bin
     boundaries map to the *lower* cell, the domain max maps to the top cell.
+
+    Like `table/geo.grid_xy_sql`, ceil(c*n) is clamped to [1, n] before
+    the cast: -inf and -1e300 then map to 0 instead of wrapping through
+    int64.  NaN is left out: SQL gives null there and numpy has no null;
+    the last clip only keeps it in range.
     """
     n = np.int64(1) << np.int64(r)
     c = (np.asarray(v, dtype=np.float64) - lo) / (hi - lo)
-    idx = np.ceil(c * n).astype(np.int64) - 1
+    idx = np.clip(np.ceil(c * n), 1, n).astype(np.int64) - 1
     return np.clip(idx, 0, n - 1).astype(np.uint64)
 
 

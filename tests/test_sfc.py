@@ -124,3 +124,37 @@ def test_geohash_golden_and_sql_twin():
         f"SELECT {geohash.geohash_sql('lon', 'lat', 5)} AS gh FROM pts"
     ).df()["gh"].to_numpy()
     assert (got == want).all()
+
+
+def test_rowmajor_numpy_matches_sql_at_extremes():
+    """`latlng_to_cell(..., "rowmajor")` equals DuckDB's evaluation of
+    `geo.rowmajor_cell_sql` at -inf, -1e300, 1e300, +inf, on every grid
+    line and one ulp either side of it, in each coordinate.  -inf and
+    -1e300 must clamp to the first row/column, not wrap to the last.
+    NaN is left out: SQL gives null there and numpy has no null."""
+    import duckdb
+    import pandas as pd
+
+    from geowave_spark.table import geo
+
+    res = 8
+    n = 1 << res
+
+    def probes(lo: float, span: float) -> np.ndarray:
+        lines = lo + np.arange(n + 1) * (span / n)
+        return np.concatenate([
+            [-np.inf, -1e300, 1e300, np.inf], lines,
+            np.nextafter(lines, -np.inf), np.nextafter(lines, np.inf)])
+
+    lons, lats = probes(-180.0, 360.0), probes(-90.0, 180.0)
+    lon = np.concatenate([lons, np.full(len(lats), 10.0)])
+    lat = np.concatenate([np.full(len(lons), 25.0), lats])
+    want = grid.latlng_to_cell(lon, lat, res, "rowmajor").astype(np.int64)
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    got = con.sql(
+        f"SELECT {geo.rowmajor_cell_sql('lon', 'lat', res)} AS c FROM pts ORDER BY i"
+    ).df()["c"].to_numpy()
+    np.testing.assert_array_equal(got, want)
+    # lon -inf and -1e300 at lat 25: row 163, column 0
+    assert want[0] == want[1] == 163 * n

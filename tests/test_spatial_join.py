@@ -2,6 +2,8 @@
 oracle inside Spark (`GeoWaveSparkSpatialJoinIT.java:228-255` analog), plus
 negative-join (subtractByKey) semantics."""
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -196,38 +198,74 @@ def test_raycast_flat_sql_bit_parity_mixed_nv(spark):
     assert (merged["inside"].to_numpy() == merged["exp"].to_numpy()).all()
 
 
-def test_within_distance_shuffle_equals_broadcast(spark, pts):
-    """The salted shuffled-hash strategy of the within-distance join must
-    return exactly the broadcast strategy's pairs (build-side selection,
-    TieredSpatialJoin.java:168-172 analog)."""
-    qs = pts.filter(F.col("pid") % 37 == 0).selectExpr(
-        "pid AS qid", "lon", "lat")
-    bc = spatial.within_distance_join(spark, pts, qs, radius=3.0, res=7)
-    sh = spatial.within_distance_join(
-        spark, pts, qs, radius=3.0, res=7,
-        broadcast_queries=False, salt_buckets=4)
-    a = sorted(map(tuple, bc.toPandas()[["pid", "qid"]].to_numpy().tolist()))
-    b = sorted(map(tuple, sh.toPandas()[["pid", "qid"]].to_numpy().tolist()))
-    assert a == b and len(a) > 0
-    plan = sh._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
+@contextlib.contextmanager
+def _no_broadcast(spark):
+    """Spark's own no-broadcast switch: removes the broadcast tier of
+    every size-chosen cover join."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _jobs_in(spark, group: str, fn):
+    """(fn(), ids of the Spark jobs it started), via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_broadcast_cover_boundary(spark):
+    """The one tier rule at its cap +-1 row: a known row count decides
+    with no job, an unknown one with exactly one LIMIT count, and Spark's
+    no-broadcast switch decides with none."""
+    per_row = spatial._BROADCAST_CAP // 10  # cap = 10 rows
+    q = spark.range(0, 11, 1, 1)
+    ch = spatial._broadcast_cover
+    got, jobs = _jobs_in(spark, "cover-known", lambda: (
+        ch(spark, q, per_row, rows=10), ch(spark, q, per_row, rows=11)))
+    assert got == (True, False) and jobs == []
+    got, jobs = _jobs_in(spark, "cover-count", lambda: ch(spark, q, per_row))
+    assert got is False and len(jobs) == 1
+    assert ch(spark, q.limit(10), per_row) is True
+    with _no_broadcast(spark):
+        got, jobs = _jobs_in(spark, "cover-off", lambda: (
+            ch(spark, q, per_row), ch(spark, q, per_row, rows=1)))
+    assert got == (False, False) and jobs == []
+
+
+def test_q07_plan_build_starts_no_job(spark, sf_dir):
+    """q07 sizes its join tier from the customer footer: building its
+    DataFrame starts no Spark job."""
+    from geowave_spark.queries import QUERIES, register_views
+
+    register_views(spark, sf_dir)
+    fn, _ = QUERIES["q07_distance_join_agg"]
+    _, jobs = _jobs_in(spark, "q07-plan", lambda: fn(spark, sf_dir))
+    assert jobs == []
 
 
 def test_within_distance_merge_equals_broadcast(spark, pts):
-    """The third big-big tier — UNSALTED sort-merge on the cell key (the
-    r5 sf10 lesson: a query cover too large for the salted SHJ's
-    in-memory build must flip to a spillable SMJ + AQE skew split) —
-    must also return exactly the broadcast strategy's pairs."""
+    """The sort-merge tier on the cell key (taken past the broadcast cap,
+    forced here by Spark's no-broadcast switch) returns exactly the
+    broadcast tier's pairs."""
     qs = pts.filter(F.col("pid") % 37 == 0).selectExpr(
         "pid AS qid", "lon", "lat")
     bc = spatial.within_distance_join(spark, pts, qs, radius=3.0, res=7)
-    mg = spatial.within_distance_join(
-        spark, pts, qs, radius=3.0, res=7,
-        broadcast_queries=False, shuffle_strategy="merge")
+    with _no_broadcast(spark):
+        mg = spatial.within_distance_join(spark, pts, qs, radius=3.0, res=7)
+        plan = mg._jdf.queryExecution().executedPlan().toString()
     a = sorted(map(tuple, bc.toPandas()[["pid", "qid"]].to_numpy().tolist()))
     b = sorted(map(tuple, mg.toPandas()[["pid", "qid"]].to_numpy().tolist()))
     assert a == b and len(a) > 0
-    plan = mg._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
 
 
@@ -237,12 +275,19 @@ def test_knn_shuffle_equals_broadcast(spark, pts):
     qs = pts.filter(F.col("pid") % 101 == 0).selectExpr(
         "pid AS qid", "lon", "lat")
     bc = knn_mod.knn_join(spark, pts, qs, k=3, res=5)
-    sh = knn_mod.knn_join(spark, pts, qs, k=3, res=5,
-                          broadcast_queries=False, salt_buckets=4)
     cols = ["qid", "pid", "rank"]
     a = sorted(map(tuple, bc.toPandas()[cols].to_numpy().tolist()))
-    b = sorted(map(tuple, sh.toPandas()[cols].to_numpy().tolist()))
+    # knn_join persists its rounds, and a cached round would serve the
+    # same query again whatever its join hint
+    spark.catalog.clearCache()
+    pts.cache()
+    with _no_broadcast(spark):
+        sh = knn_mod.knn_join(spark, pts, qs, k=3, res=5)
+        b = sorted(map(tuple, sh.toPandas()[cols].to_numpy().tolist()))
+        plan = sh._jdf.queryExecution().executedPlan().toString()
     assert a == b and len(a) > 0
+    assert "SortMergeJoin" in plan
+    assert "BroadcastHashJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_polygon_polygon_join_matches_numpy(spark):
@@ -310,9 +355,8 @@ def test_geodesic_join_matches_numpy_including_poles(spark, pts):
 
 
 def test_query_side_auto_selection(spark, pts):
-    """`resolve_query_side`: within_distance/kNN default to "auto" —
-    small query sets broadcast; a floored broadcast threshold (or an
-    explicit False) flips the same call to the salted shuffle path,
+    """`_broadcast_cover`: a small query set broadcasts its cover; under
+    Spark's no-broadcast switch the same call sort-merges on the cell,
     results identical."""
     q = spark.createDataFrame(
         [(i, float(i * 7 % 60) - 30.0, float(i * 11 % 40) - 20.0)
@@ -327,16 +371,11 @@ def test_query_side_auto_selection(spark, pts):
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "salt" not in plan
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # 1 KB threshold: 20 queries x (2k+1)^2 disk cells never fit
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    with _no_broadcast(spark):
         forced = spatial.within_distance_join(spark, pts, q, 2.0, res=8)
         plan_f = forced._jdf.queryExecution().executedPlan().toString()
-        assert "salt" in plan_f
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert pairs(auto) == pairs(forced) and len(pairs(auto)) > 0
+        assert "SortMergeJoin" in plan_f
+        assert pairs(auto) == pairs(forced) and len(pairs(auto)) > 0
 
 
 def test_polygon_polygon_bigbig_equals_broadcast(spark):
@@ -384,8 +423,8 @@ def test_polygon_polygon_bigbig_equals_broadcast(spark):
 
 
 def test_spatiotemporal_join_paths_match_brute_force(spark):
-    """Composite (cell, tbin) key join: broadcast and shuffle paths both
-    reproduce the brute-force bbox x BETWEEN pairs.  sf0.01 tables: the
+    """Composite (cell, tbin) key join: the broadcast and sort-merge tiers
+    both reproduce the brute-force bbox x BETWEEN pairs.  sf0.01 tables: the
     sf0.001 fixture's 1000 events have zero window hits."""
     sf01 = "/root/testdata/sf0.01"
     pts = spark.sql(geo.events_points_ts_sql(sf01, dialect="spark")).cache()
@@ -400,18 +439,23 @@ def test_spatiotemporal_join_paths_match_brute_force(spark):
     )
     exp_pairs = sorted(map(tuple, exp.to_numpy().tolist()))
     assert exp_pairs, "fixture degenerate: no spatiotemporal matches"
-    for bcast in (True, False):
+
+    def pairs():
         got = spatial.spatiotemporal_window_join(
-            spark, pts, wins, pid_col="eid", ts="tsec", wid_col="wid",
-            res=7, broadcast_windows=bcast,
-        ).toPandas()
-        got_pairs = sorted(map(tuple, got.to_numpy().tolist()))
-        assert got_pairs == exp_pairs
+            spark, pts, wins, pid_col="eid", ts="tsec", wid_col="wid", res=7)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        return sorted(map(tuple, got.toPandas().to_numpy().tolist())), plan
+
+    got_pairs, plan = pairs()
+    assert got_pairs == exp_pairs and "BroadcastHashJoin" in plan
+    with _no_broadcast(spark):
+        got_pairs, plan = pairs()
+    assert got_pairs == exp_pairs and "SortMergeJoin" in plan
 
 
 def test_snap_to_segments_matches_brute_force(spark, sf_dir):
-    """Map matching (nearest segment within radius): both join paths equal
-    the in-Spark brute-force crossJoin argmin."""
+    """Map matching (nearest segment within radius) equals the in-Spark
+    brute-force crossJoin argmin."""
     from geowave_spark.queries import register_views
 
     register_views(spark, sf_dir)
@@ -434,17 +478,14 @@ def test_snap_to_segments_matches_brute_force(spark, sf_dir):
     )
     exp_rows = sorted(map(tuple, exp.to_numpy().tolist()))
     assert exp_rows, "fixture degenerate: no snap matches"
-    for bcast in (True, False):
-        got = spatial.snap_to_segments(
-            spark, pts, segs, 3.0, pid_col="eid", res=6,
-            broadcast_segments=bcast,
-        ).toPandas()
-        assert sorted(map(tuple, got.to_numpy().tolist())) == exp_rows
+    got = spatial.snap_to_segments(
+        spark, pts, segs, 3.0, pid_col="eid", res=6).toPandas()
+    assert sorted(map(tuple, got.to_numpy().tolist())) == exp_rows
 
 
 def test_spatiotemporal_knn_matches_brute_force(spark):
-    """Bounded spatiotemporal kNN == in-Spark brute-force crossJoin rank,
-    both join paths.  sf0.01 (the sf0.001 fixture is too sparse)."""
+    """Bounded spatiotemporal kNN == in-Spark brute-force crossJoin rank.
+    sf0.01 (the sf0.001 fixture is too sparse)."""
     sf01 = "/root/testdata/sf0.01"
     pts = spark.sql(
         f"SELECT eid AS pid, lon, lat, tsec FROM "
@@ -466,14 +507,12 @@ def test_spatiotemporal_knn_matches_brute_force(spark):
     )
     exp_rows = sorted(map(tuple, exp.to_numpy().tolist()))
     assert exp_rows, "fixture degenerate"
-    for bcast in (True, False):
-        got = spatial.spatiotemporal_knn(
-            spark, pts,
-            q.selectExpr("cid", "qlon AS lon", "qlat AS lat", "qsec"),
-            k=3, radius=6.0, lag_s=172_800, qid_col="cid", res=5,
-            broadcast_queries=bcast,
-        ).toPandas()
-        assert sorted(map(tuple, got.to_numpy().tolist())) == exp_rows
+    got = spatial.spatiotemporal_knn(
+        spark, pts,
+        q.selectExpr("cid", "qlon AS lon", "qlat AS lat", "qsec"),
+        k=3, radius=6.0, lag_s=172_800, qid_col="cid", res=5,
+    ).toPandas()
+    assert sorted(map(tuple, got.to_numpy().tolist())) == exp_rows
 
 
 # --- per-cell edge lists: exactness at cell and domain edges ---------------
