@@ -102,9 +102,11 @@ def _warm(spark) -> None:
 
     One full-width stage through the engine's own cell-encode UDF forks a
     reused Python worker per core and pays the numpy/pandas/geowave module
-    imports exactly once — on a long-lived cluster these workers exist for
-    the life of the executor, so charging their spawn to the first measured
-    query would measure the harness, not the engine.
+    imports once — on a long-lived cluster these workers exist for the life
+    of the executor, so charging their spawn to the first measured query
+    would measure the harness, not the engine.  Every later Python task
+    still pays the worker's per-task setup; importing the engine here makes
+    its zip-directory re-read stat-gated (`geowave_spark/_worker.py`).
     """
     from pyspark.sql import functions as F
 

@@ -1,0 +1,3 @@
+from . import _worker
+
+_worker.install()

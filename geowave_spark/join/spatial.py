@@ -410,14 +410,21 @@ def _broadcast_cover(spark: SparkSession, queries: DataFrame,
     removes the broadcast tier.  ``rows`` (e.g. a parquet footer count)
     keeps plan build job-free; without it the query side is counted up to
     the cap + 1 (one LIMIT job)."""
+    return _cover_rows(spark, queries, bytes_per_row, rows) is not None
+
+
+def _cover_rows(spark: SparkSession, queries: DataFrame, bytes_per_row: int,
+                rows: int | None = None) -> int | None:
+    """`_broadcast_cover`'s rule, giving the query side's row count (or the
+    ``rows`` bound it was given) when the cover is broadcast, else None."""
     thresh = int(str(spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold", "10485760")).rstrip("b"))
     if thresh <= 0:
-        return False
+        return None
     cap = max(1, _BROADCAST_CAP // bytes_per_row)
     if rows is None:
         rows = queries.limit(cap + 1).count()
-    return rows <= cap
+    return rows if rows <= cap else None
 
 
 def within_distance_join(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..index import cover as cov
-from ..join.spatial import _broadcast_cover, haversine_km_sql
+from ..join.spatial import _cover_rows, haversine_km_sql
 from ..table import geo as geo_sql
 
 # ring-expansion loop: first ring (cells) / first radius (km), doublings
@@ -50,8 +50,10 @@ def knn_join(
     Every ring iteration picks its candidate join's tier afresh with
     `spatial._broadcast_cover` over the still-unresolved queries: the
     ring's disk cover is broadcast while it fits, else both sides
-    sort-merge on the cell.  The remaining/done bookkeeping joins stay on
-    the (shrinking) query side.
+    sort-merge on the cell.  The unresolved set only shrinks, so a ring's
+    exact count bounds every later ring's, and a later ring whose bound
+    fits under the cap starts no counting job.  The remaining/done
+    bookkeeping joins stay on the (shrinking) query side.
 
     The brute-force fallback for queries still unresolved after
     ``_MAX_ITERS`` ring doublings is bounded: if more than
@@ -80,6 +82,7 @@ def knn_join(
     pts_c = pts_c.persist()
 
     remaining = q_named
+    bound = None  # an exact count of the unresolved queries from an earlier ring
     results = None
     ring = _INITIAL_RING
     for _ in range(_MAX_ITERS):
@@ -93,9 +96,14 @@ def knn_join(
                 )
             ),
         )
-        b = _broadcast_cover(spark, remaining, 48 * (2 * ring + 1) ** 2)
-        cand = pts_c.join(F.broadcast(q_cover) if b else q_cover.hint("merge"),
-                          "jcell")
+        bpr = 48 * (2 * ring + 1) ** 2
+        rows = None if bound is None else _cover_rows(spark, remaining, bpr, bound)
+        if rows is None:
+            rows = _cover_rows(spark, remaining, bpr)
+        # past the cap the count was cut off at cap + 1 and bounds nothing
+        bound = rows
+        cand = pts_c.join(q_cover.hint("merge") if rows is None
+                          else F.broadcast(q_cover), "jcell")
         # persist the per-iteration top-k (tiny: <= k rows per query): the
         # convergence check executes it once, and without the persist the
         # final materialization would re-run every iteration's join+window
